@@ -49,9 +49,19 @@ object Bench {
         try fn(spark, warmDir).count() catch { case _: Throwable => () }
       }
     }
-    def timeOne(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a failing pass is NaN, never the time it took to fail (BenchConf
+    // does the same). A query that fails either pass is null in the
+    // per-query maps, left out of every total, and named on stderr and
+    // on the bench_failures line.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try SparkEntry.queries(name)(spark, sfDir).count()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] FAILED $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        failed.add(name)
+        return Double.NaN
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // window-quality calibration: a fixed single-threaded spin loop
@@ -67,7 +77,7 @@ object Bench {
       (System.nanoTime() - t0) / 1e6
     }
     val spinBefore = spinMs()
-    val firstPass = SparkEntry.queries.map { case (name, fn) => name -> timeOne(fn) }
+    val firstPass = SparkEntry.queries.map { case (name, _) => name -> timeOne(name) }
     // this VM sees bursty hypervisor CPU steal: a burst can tax whichever
     // query happens to be running by 5-10×. A threshold-gated retime
     // (round 3 used t > 5 s) misses bursts landing on mid-cost queries
@@ -76,18 +86,22 @@ object Bench {
     // steady-state number. BOTH passes are emitted so readers see the
     // variance, not only the minimum.
     val results = firstPass.map { case (name, t) =>
-      name -> (math.min(t, timeOne(SparkEntry.queries(name))), t, 2)
+      val again = timeOne(name)
+      name -> (if (t.isNaN || again.isNaN) Double.NaN else math.min(t, again), t, 2)
     }
     // Locale.ROOT: a comma decimal separator from the platform locale
     // would silently break the JSON
-    def r4(x: Double): String = String.format(java.util.Locale.ROOT, "%.4f", Double.box(x))
+    def r4(x: Double): String =
+      if (x.isNaN) "null" else String.format(java.util.Locale.ROOT, "%.4f", Double.box(x))
     def jmap(f: ((String, (Double, Double, Int))) => String) =
       results.map(f).mkString("{", ",", "}")
     val qs = jmap { case (k, (best, _, _)) => jstr(k) + ":" + r4(best) }
     val raw = jmap { case (k, (_, first, _)) => jstr(k) + ":" + r4(first) }
     val runs = jmap { case (k, (_, _, n)) => jstr(k) + ":" + n }
-    val total = results.values.map(_._1).sum
-    val rawTotal = results.values.map(_._2).sum
+    // totals cover the queries that succeeded in both passes
+    val ok = results.filterNot(_._2._1.isNaN)
+    val total = ok.values.map(_._1).sum
+    val rawTotal = ok.values.map(_._2).sum
     // streaming-LIFECYCLE queries: each stream_* invocation pays a full
     // Structured Streaming lifecycle (checkpoint dir + state-store
     // open/commit) per run — that ~2-2.7 s is harness cost, not plan
@@ -95,7 +109,7 @@ object Bench {
     // without, letting round-over-round diffs separate engine time
     // from lifecycle time mechanically.
     def isLifecycle(name: String): Boolean = name.startsWith("stream_")
-    val lifecycleTotal = results.collect { case (k, (best, _, _)) if isLifecycle(k) => best }.sum
+    val lifecycleTotal = ok.collect { case (k, (best, _, _)) if isLifecycle(k) => best }.sum
     val engineTotal = total - lifecycleTotal
     // Per-query detail (best + first-pass timings + run counts) goes on
     // its OWN lines; the driver-parsed contract line below is O(1) in the
@@ -118,6 +132,7 @@ object Bench {
     // `value` (minima) across rounds and read the spins for window
     // quality.
     val spinAfter = spinMs()
+    println(s"""{"detail":"bench_failures","count":${failed.size},"names":${failed.map(jstr).mkString("[", ",", "]")}}""")
     println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","n_queries":${results.size},"sf":${jstr(sfDir)},"stat":"min_of_2","raw_total":${r4(rawTotal)},"steal_estimate":${r4(rawTotal - total)},"lifecycle_total":${r4(lifecycleTotal)},"engine_total":${r4(engineTotal)},"spin_ms_before":${r4(spinBefore)},"spin_ms_after":${r4(spinAfter)}}""")
     // sf1 slice (round 20, verdict r19 ask #6): at sf0.1, 280/288
     // queries are dominated by fixed per-job overhead (the 8-core total

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Minimal accessor for `private[sql]` seams the public API does not
-  * expose in Spark 4: Expression↔Column conversion and live-session
-  * function registration. Lives under org.apache.spark.sql.* solely for
+  * expose in Spark 4: Expression↔Column conversion, live-session
+  * function registration and the schema a file-source read reports. Lives under org.apache.spark.sql.* solely for
   * access scope; contains no Spark code.
   */
 object Bridge {
@@ -21,6 +22,10 @@ object Bridge {
     * the converted form. */
   def convertedExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** The schema a file-source read reports for data written with `s`:
+    * every field, at every depth, nullable. */
+  def asNullable(s: StructType): StructType = s.asNullable
 
   def registerFunction(
       spark: SparkSession,

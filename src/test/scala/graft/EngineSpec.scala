@@ -1,8 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +26,66 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  private val tmpDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory, deleted in [[afterAll]]. */
+  private def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try spark.stop()
+    finally tmpDirs.asScala.foreach { d =>
+      if (Files.exists(d))
+        Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => { Files.deleteIfExists(p); () })
+    }
+
+  /** Runs `body` and counts the Spark jobs it starts and its read
+    * actions: the SQL executions among them that ran a job. Listener
+    * events arrive asynchronously but in order, so a marker job on each
+    * side of `body` fences the count. */
+  private def sparkWork[T](body: => T): (T, Int, Int) = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID()
+    val (begin, end) = (s"fence-begin-$id", s"fence-end-$id")
+    val jobs = new AtomicInteger
+    val actions = ConcurrentHashMap.newKeySet[String]()
+    val fenced = new CountDownLatch(1)
+    @volatile var counting = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        props.map(_.getProperty("spark.job.description")).orNull match {
+          case `begin` => counting = true
+          case `end` => counting = false; fenced.countDown()
+          case _ => if (counting) {
+            jobs.incrementAndGet()
+            props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).foreach(actions.add)
+          }
+        }
+      }
+    }
+    def fence(desc: String): Unit = {
+      sc.setJobDescription(desc)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence(begin)
+      val out = body
+      fence(end)
+      assert(fenced.await(60, TimeUnit.SECONDS), "listener fence never arrived")
+      (out, jobs.get, actions.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A forecast row as (step, lower1, lower2, mean, upper1, upper2). */
+  private def bands(r: Row): (Int, Double, Double, Double, Double, Double) =
+    (r.getAs[Int]("step"), r.getAs[Double]("lower1"), r.getAs[Double]("lower2"),
+      r.getAs[Double]("mean"), r.getAs[Double]("upper1"), r.getAs[Double]("upper2"))
 
   test("sanitize strips non-alphanumerics exactly like gsub('[^[:alnum:] ]','') (R:43)") {
     assert(Names.sanitize("a.b-c_d e!") == "abcd e")
@@ -29,7 +93,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("wrapper: miss → train+warm cache; hit → slice; stale → re-forecast from params") {
-    val base = Files.createTempDirectory("graft-engine").toString
+    val base = tempDir("graft-engine")
     val eng = new Engine(spark, base)
     val name = "purchase"
     val idx = eng.indexName(sfDir)
@@ -62,32 +126,98 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("branch (a) is a genuine store read, not a silent recompute") {
     // For SES a fresh h=7 forecast is row-identical to the h=14 cache
     // slice, so value equality alone cannot prove the slice path runs.
-    // Overwrite the persisted cache with sentinel values after training:
-    // if the second call re-derived the forecast it would return SES
-    // numbers; the sentinels coming back prove the rows were READ from
-    // the store (R:110).
+    // After training, a second Engine over the same store saves sentinel
+    // values as the newest cache generation: if the next call re-derived
+    // the forecast it would return SES numbers; the sentinels coming back
+    // prove the rows were READ from the store (R:110), and since the
+    // first engine never held them in memory, that its index never
+    // serves a superseded generation. Counts, via a SparkListener:
+    // warm-hit jobs (0) and read actions of the first hit after the
+    // foreign save (at most 1).
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-engine-sentinel").toString
+    val base = tempDir("graft-engine-sentinel")
     val eng = new Engine(spark, base)
+    val peer = new Engine(spark, base)
     val name = "purchase"
     val idx = eng.indexName(sfDir)
 
     eng.forecast(name, sfDir, Methods.SES, 7, 14).collect()
+    val (_, warmHitJobs, _) = sparkWork(eng.forecast(name, sfDir, Methods.SES, 7, 7).collect())
+    assert(warmHitJobs == 0, "a warm hit runs no Spark job")
+
     val sentinels = (1 to 14).map(st =>
       graft.core.ForecastPoint(name, Methods.SES, st, -1, -2, 123.456, 2, 1)).toDF()
-    eng.cache.save(name, idx, Methods.SES, sentinels)
+    peer.cache.save(name, idx, Methods.SES, sentinels)
 
-    val out = eng.forecast(name, sfDir, Methods.SES, 7, 7).collect()
+    val (out, firstHitJobs, firstHitReadActions) =
+      sparkWork(eng.forecast(name, sfDir, Methods.SES, 7, 7).collect())
+    assert(firstHitReadActions <= 1,
+      s"first hit after a foreign save: $firstHitReadActions read actions, $firstHitJobs jobs")
     assert(out.length == 7)
     out.foreach { r =>
       assert(r.getAs[Double]("mean") == 123.456,
         "cache hit must serve the stored rows verbatim — slice, no model math")
       assert(r.getAs[Int]("step") <= 7, "slice bound (R:110)")
     }
+    val (again, warmAgainJobs, _) = sparkWork(eng.forecast(name, sfDir, Methods.SES, 7, 5).collect())
+    assert(warmAgainJobs == 0 && again.length == 5 && again.forall(_.getAs[Double]("mean") == 123.456))
+    // the entry read back from the store and the one the saver kept
+    // report the same columns
+    assert(eng.cache.loadSliced(name, idx, Methods.SES, 3).schema ==
+      peer.cache.loadSliced(name, idx, Methods.SES, 3).schema)
+  }
+
+  test("concurrent hits during repeated re-saves each see one complete generation") {
+    // 4 threads serve branch-(a) hits on one key while a fifth re-saves
+    // its cache 24 times, alternating two 14-row sentinel sets. The saves
+    // alternate between the readers' own engine (its index learns each
+    // generation at save time) and a peer over the same store (the
+    // readers must read each generation from disk). Every answer must be
+    // exactly a prefix of one complete set, or of the trained rows, with
+    // no exception.
+    import spark.implicits._
+    val base = tempDir("graft-engine-concurrent")
+    val eng = new Engine(spark, base)
+    val peer = new Engine(spark, base)
+    val name = "purchase"
+    val idx = eng.indexName(sfDir)
+    val trained = eng.forecast(name, sfDir, Methods.SES, 7, 14).collect().map(bands).sortBy(_._1).toSeq
+    def sentinel(mean: Double) = (1 to 14).map(st =>
+      graft.core.ForecastPoint(name, Methods.SES, st, -1, -2, mean, 2, 1))
+    val sets = Seq(sentinel(111.0), sentinel(222.0))
+    val allowed = trained +: sets.map(_.map(p => (p.step, p.lower1, p.lower2, p.mean, p.upper1, p.upper2)))
+    val problems = new ConcurrentLinkedQueue[String]()
+    val answers = new AtomicInteger
+    val done = new AtomicBoolean(false)
+    val readers = (0 until 4).map { t =>
+      new Thread(() => {
+        var i = 0
+        while (!done.get) {
+          val h = 1 + (t + 3 * i) % 14
+          try {
+            val got = eng.forecast(name, sfDir, Methods.SES, 7, h).collect().map(bands).sortBy(_._1).toSeq
+            if (!allowed.exists(_.take(h) == got)) problems.add(s"h=$h: ${got.mkString(",")}")
+            answers.incrementAndGet()
+          } catch { case e: Throwable => problems.add(s"h=$h: $e") }
+          i += 1
+        }
+      })
+    }
+    val writer = new Thread(() =>
+      try (0 until 24).foreach { i =>
+        Seq(eng, peer)(i % 2).cache.save(name, idx, Methods.SES, sets(i % 2).toDF())
+      } catch { case e: Throwable => problems.add(s"save: $e") }
+      finally done.set(true))
+    readers.foreach(_.start())
+    writer.start()
+    (writer +: readers).foreach(_.join(300000))
+    assert(done.get && readers.forall(!_.isAlive), "threads did not finish")
+    assert(problems.isEmpty, s"${problems.size} bad answers: ${problems.asScala.take(3).mkString("; ")}")
+    assert(answers.get >= 4)
   }
 
   test("wrapper train → params → cache round-trips every registered method") {
-    val base = Files.createTempDirectory("graft-engine-all").toString
+    val base = tempDir("graft-engine-all")
     val eng = new Engine(spark, base)
     val idx = eng.indexName(sfDir)
     // HYBRID excluded: full CV per method × tiny CI budget; covered by
@@ -111,9 +241,9 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sentinel proves branch (a), a non-sentinel answer after the append
     // proves the cache (and model) were invalidated.
     import spark.implicits._
-    val store = Files.createTempDirectory("graft-ingest-store").toString
-    val stage = Files.createTempDirectory("graft-ingest-stage").toString
-    val ckpt = Files.createTempDirectory("graft-ingest-ckpt").toString
+    val store = tempDir("graft-ingest-store")
+    val stage = tempDir("graft-ingest-stage")
+    val ckpt = tempDir("graft-ingest-ckpt")
     val name = "metric"
     val epoch0 = java.time.Instant.parse("2024-01-01T00:00:00Z")
     def eventRows(ids: Range): org.apache.spark.sql.DataFrame =
@@ -140,8 +270,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     streamAppend(eventRows(0 until 40), s"$stage/b0")
 
-    val parity = new Engine(spark, Files.createTempDirectory("graft-ing-par").toString)
-    val invalidating = new Engine(spark, Files.createTempDirectory("graft-ing-inv").toString)
+    val parity = new Engine(spark, tempDir("graft-ing-par"))
+    val invalidating = new Engine(spark, tempDir("graft-ing-inv"))
     invalidating.invalidateOnIngest = true
     val idx = parity.indexName(store)
 
@@ -181,13 +311,13 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("availableMethods mirrors the reference registry byte-for-byte (R:6-7)") {
-    val eng = new Engine(spark, Files.createTempDirectory("graft-engine2").toString)
+    val eng = new Engine(spark, tempDir("graft-engine2"))
     assert(eng.availableMethods == Seq("ARIMA", "ARIMA_FORCE_SEASONALITY", "THETA", "ETS",
       "ETSDAMPED", "BAGGEDETS", "STL", "NN", "HYBRID", "PROPHET"))
   }
 
   test("ping probes the store (R:16-21 semantics)") {
-    val eng = new Engine(spark, Files.createTempDirectory("graft-engine3").toString)
+    val eng = new Engine(spark, tempDir("graft-engine3"))
     assert(eng.ping(sfDir))
     assert(!eng.ping("/nonexistent/store"))
   }
