@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 
@@ -26,99 +26,39 @@ object Names {
     s"${sanitize(name)}_${index}_$method"
 }
 
-/** Base class for the two Parquet-backed stores that replace the
+/** Base class for the Parquet-backed stores: the two that replace the
   * reference's RDS file trees (`forecastModels` R:8, `forecastsCache`
-  * R:9). Identity stays "one directory per (cleanName, index, method)"
-  * exactly as the reference keys files (R:45-46), but the payload is a
-  * schema'd Parquet table. Existence checks go through the Hadoop
-  * FileSystem API so the same code addresses HDFS/S3 on a real cluster.
-  */
-abstract class KeyedStore(spark: SparkSession, baseDir: String) {
-  protected def path(name: String, index: String, method: String): String =
-    s"$baseDir/${Names.key(name, index, method)}"
-
-  def exists(name: String, index: String, method: String): Boolean = {
-    val p = new Path(path(name, index, method))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
-  }
-}
-
-/** The model store (R:8, save R:91 / load R:112 / exists-check R:57-62).
-  * One row per saved model: two map columns hold the typed params.
-  */
-final class ModelStore(spark: SparkSession, baseDir: String)
-    extends KeyedStore(spark, baseDir) {
-  import spark.implicits._
-
-  def save(name: String, index: String, method: String, params: ModelParams): Unit =
-    Seq((params.dparams.map { case (k, v) => (k, v.toSeq) }, params.sparams))
-      .toDF("dparams", "sparams")
-      .write.mode(SaveMode.Overwrite).parquet(path(name, index, method))
-
-  def load(name: String, index: String, method: String): ModelParams = {
-    val row = spark.read.parquet(path(name, index, method))
-      .as[(Map[String, Seq[Double]], Map[String, String])]
-      .head()
-    ModelParams(row._1.map { case (k, v) => (k, v.toArray) }, row._2)
-  }
-}
-
-/** Observation-store stamp recorded at train time (round-14 engine
-  * extension — the signal [[graft.streaming.EventIngest]]'s scaladoc
-  * promises): `(n_obs, max_ts)` of the EFFECTIVE series window (the
-  * oldest-`MaxSeriesLength` capped, null-filtered observation set the
-  * fit actually saw). `Engine.invalidateOnIngest` compares the current
-  * window against this stamp; a streamed append that changes the
-  * window invalidates both the model and its cache. Two longs per
-  * (name, index, method) — metadata-scale by construction. */
-final class StampStore(spark: SparkSession, baseDir: String)
-    extends KeyedStore(spark, baseDir) {
-  import spark.implicits._
-
-  def save(name: String, index: String, method: String, nObs: Long, maxTs: Long): Unit =
-    Seq((nObs, maxTs)).toDF("n_obs", "max_ts")
-      .write.mode(SaveMode.Overwrite).parquet(path(name, index, method))
-
-  def matches(name: String, index: String, method: String, nObs: Long, maxTs: Long): Boolean =
-    exists(name, index, method) && {
-      spark.read.parquet(path(name, index, method))
-        .as[(Long, Long)].head() == ((nObs, maxTs))
-    }
-}
-
-/** The forecast cache (R:9, validity R:64-82, slice-on-hit R:110).
-  * Payload = the long-form ForecastPoint contract.
+  * R:9) and the engine's `observationStamps`. Identity stays "one
+  * directory per (cleanName, index, method)" exactly as the reference
+  * keys files (R:45-46), but the payload is a schema'd Parquet table.
+  * All file access goes through the Hadoop FileSystem API so the same
+  * code addresses HDFS/S3 on a real cluster.
   *
   * Layout: each key directory holds immutable generations
   * `g-<seq>-<uuid>`, each one Parquet table, and the newest generation by
-  * (seq, uuid) is the cache. `save` writes a hidden `_tmp-<uuid>`
-  * directory and publishes it with one atomic rename to
+  * (seq, uuid) is the key's value. [[publish]] writes a hidden
+  * `_tmp-<uuid>` directory and makes it visible with one atomic rename to
   * `g-<highest seq + 1>-<uuid>` (the uuid breaks ties between concurrent
   * writers). It then retires every generation older than the previous
   * one, renaming it to a hidden name before deleting it, so a reader never
   * sees a half-written or half-deleted table.
   *
-  * Validity is `max(step) >= horizon` over the newest generation, the
-  * long-form equivalent of the reference's `length(forecasts$mean) >=
-  * horizon` (R:71). Every call lists the key directory once, so a save by
-  * another Engine or process is seen on the next call, and answers from a
-  * driver-resident index keyed on that exact generation: a warm hit runs
-  * no Spark job. A generation the index does not hold is read once
-  * through Spark; one that disappears before it is read (a concurrent save
-  * retired it) sends the reader back to the listing for the newer data.
-  * An entry holds at most the largest horizon served, and the index lives
-  * and dies with its instance.
+  * Every read lists the key directory once, so a publish by another
+  * instance or process is seen on the next call, and answers from a
+  * driver-resident index keyed on that exact generation: reading a
+  * generation the index holds runs no Spark job. A generation the index
+  * does not hold is read once through Spark; one that disappears before
+  * it is read (a concurrent publish retired it) sends the reader back to
+  * the listing for the newer data. The index holds the newest generation
+  * seen per key and lives and dies with its instance.
   */
-final class ForecastCache(spark: SparkSession, baseDir: String)
-    extends KeyedStore(spark, baseDir) {
-  import spark.implicits._
-  import ForecastCache._
+abstract class KeyedStore(spark: SparkSession, baseDir: String) {
+  import KeyedStore._
 
   private val entries = new ConcurrentHashMap[String, Entry]()
 
   private def keyDir(name: String, index: String, method: String): Path =
-    new Path(path(name, index, method))
+    new Path(s"$baseDir/${Names.key(name, index, method)}")
 
   private def fsOf(p: Path): FileSystem = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -134,7 +74,7 @@ final class ForecastCache(spark: SparkSession, baseDir: String)
     entries.merge(key, e, (old: Entry, nu: Entry) => if (Gen.order.gt(old.gen, nu.gen)) old else nu)
 
   /** The newest generation's entry, or None when the key has none. */
-  private def current(name: String, index: String, method: String): Option[Entry] = {
+  protected def current(name: String, index: String, method: String): Option[Entry] = {
     val key = Names.key(name, index, method)
     val dir = keyDir(name, index, method)
     @tailrec def resolve(newest: Option[Gen]): Option[Entry] = newest match {
@@ -155,47 +95,41 @@ final class ForecastCache(spark: SparkSession, baseDir: String)
     resolve(generations(dir).headOption)
   }
 
-  override def exists(name: String, index: String, method: String): Boolean =
+  /** The newest generation's entry; throws when the key has none. */
+  protected def read(name: String, index: String, method: String): Entry =
+    current(name, index, method).getOrElse(throw new FileNotFoundException(
+      s"no published generation under ${keyDir(name, index, method)}"))
+
+  /** True once a generation has been published for the key. */
+  def exists(name: String, index: String, method: String): Boolean =
     generations(keyDir(name, index, method)).nonEmpty
 
-  def save(name: String, index: String, method: String, points: DataFrame): Unit = {
+  /** Publishes `data` as the key's newest generation. */
+  protected def publish(name: String, index: String, method: String, data: DataFrame): Unit = {
     val dir = keyDir(name, index, method)
     val fs = fsOf(dir)
     val id = UUID.randomUUID().toString
     val tmp = new Path(dir, s"_tmp-$id")
-    val rows = points.collect()
-    try points.write.parquet(tmp.toString)
+    val rows = data.collect()
+    try data.write.parquet(tmp.toString)
     catch { case e: Throwable => fs.delete(tmp, true); throw e }
     val gen = Gen(generations(dir).headOption.fold(1L)(_.seq + 1), id)
     if (!fs.rename(tmp, new Path(dir, gen.name))) {
       fs.delete(tmp, true)
-      throw new IOException(s"could not publish forecast cache generation ${gen.name} under $dir")
+      throw new IOException(s"could not publish generation ${gen.name} under $dir")
     }
-    remember(Names.key(name, index, method), Entry(gen, Bridge.asNullable(points.schema), rows))
+    remember(Names.key(name, index, method), Entry(gen, Bridge.asNullable(data.schema), rows))
     generations(dir).filter(_.seq < gen.seq - 1).foreach { old =>
       val retired = new Path(dir, s"_old-${UUID.randomUUID()}")
       // a concurrent writer may have retired it first
       if (Try(fs.rename(new Path(dir, old.name), retired)).getOrElse(false)) fs.delete(retired, true)
     }
   }
-
-  def isValid(name: String, index: String, method: String, horizon: Int): Boolean =
-    current(name, index, method).exists(_.maxStep >= horizon)
-
-  /** Cache hit: pure slice, no model math (R:110 / R:149). The result is
-    * a local DataFrame with the columns the Parquet read reports. */
-  def loadSliced(name: String, index: String, method: String, horizon: Int): DataFrame = {
-    val e = current(name, index, method).getOrElse(throw new FileNotFoundException(
-      s"no forecast cache generation under ${path(name, index, method)}"))
-    spark.createDataFrame(e.rows.filter(e.step(_) <= horizon).toSeq.asJava, e.schema)
-  }
-
-  def toDF(points: Seq[ForecastPoint]): DataFrame = points.toDF()
 }
 
-object ForecastCache {
+object KeyedStore {
   /** A published generation: directory `g-<seq>-<uuid>`. */
-  private final case class Gen(seq: Long, id: String) {
+  private[engine] final case class Gen(seq: Long, id: String) {
     def name: String = s"g-$seq-$id"
   }
   private object Gen {
@@ -208,9 +142,76 @@ object ForecastCache {
   }
 
   /** One generation's rows, as the Parquet read reports them. */
-  private final case class Entry(gen: Gen, schema: StructType, rows: Array[Row]) {
-    private val stepAt = schema.fieldIndex("step")
-    def step(r: Row): Int = r.getInt(stepAt)
-    val maxStep: Int = rows.iterator.map(step).maxOption.getOrElse(Int.MinValue)
+  private[engine] final case class Entry(gen: Gen, schema: StructType, rows: Array[Row])
+}
+
+/** The model store (R:8, save R:91 / load R:112 / exists-check R:57-62).
+  * One row per saved model: two map columns hold the typed params.
+  */
+final class ModelStore(spark: SparkSession, baseDir: String)
+    extends KeyedStore(spark, baseDir) {
+  import spark.implicits._
+
+  def save(name: String, index: String, method: String, params: ModelParams): Unit =
+    publish(name, index, method,
+      Seq((params.dparams.map { case (k, v) => (k, v.toSeq) }, params.sparams)).toDF("dparams", "sparams"))
+
+  def load(name: String, index: String, method: String): ModelParams = {
+    val row = read(name, index, method).rows.head
+    ModelParams(
+      row.getMap[String, scala.collection.Seq[Double]](0).map { case (k, v) => (k, v.toArray) }.toMap,
+      row.getMap[String, String](1).toMap)
   }
+}
+
+/** Observation-store stamp recorded at train time (round-14 engine
+  * extension — the signal [[graft.streaming.EventIngest]]'s scaladoc
+  * promises): `(n_obs, max_ts)` of the EFFECTIVE series window (the
+  * oldest-`MaxSeriesLength` capped, null-filtered observation set the
+  * fit actually saw). `Engine.invalidateOnIngest` compares the current
+  * window against this stamp; a streamed append that changes the
+  * window invalidates both the model and its cache. Two longs per
+  * (name, index, method) — metadata-scale by construction. */
+final class StampStore(spark: SparkSession, baseDir: String)
+    extends KeyedStore(spark, baseDir) {
+  import spark.implicits._
+
+  def save(name: String, index: String, method: String, nObs: Long, maxTs: Long): Unit =
+    publish(name, index, method, Seq((nObs, maxTs)).toDF("n_obs", "max_ts"))
+
+  def matches(name: String, index: String, method: String, nObs: Long, maxTs: Long): Boolean =
+    current(name, index, method).exists { e =>
+      val r = e.rows.head
+      r.getLong(0) == nObs && r.getLong(1) == maxTs
+    }
+}
+
+/** The forecast cache (R:9, validity R:64-82, slice-on-hit R:110).
+  * Payload = the long-form ForecastPoint contract. Validity is
+  * `max(step) >= horizon` over the newest generation, the long-form
+  * equivalent of the reference's `length(forecasts$mean) >= horizon`
+  * (R:71); a warm hit is answered from the index without a Spark job.
+  */
+final class ForecastCache(spark: SparkSession, baseDir: String)
+    extends KeyedStore(spark, baseDir) {
+  import spark.implicits._
+
+  def save(name: String, index: String, method: String, points: DataFrame): Unit =
+    publish(name, index, method, points)
+
+  def isValid(name: String, index: String, method: String, horizon: Int): Boolean =
+    current(name, index, method).exists { e =>
+      val step = e.schema.fieldIndex("step")
+      e.rows.exists(_.getInt(step) >= horizon)
+    }
+
+  /** Cache hit: pure slice, no model math (R:110 / R:149). The result is
+    * a local DataFrame with the columns the Parquet read reports. */
+  def loadSliced(name: String, index: String, method: String, horizon: Int): DataFrame = {
+    val e = read(name, index, method)
+    val step = e.schema.fieldIndex("step")
+    spark.createDataFrame(e.rows.filter(_.getInt(step) <= horizon).toSeq.asJava, e.schema)
+  }
+
+  def toDF(points: Seq[ForecastPoint]): DataFrame = points.toDF()
 }

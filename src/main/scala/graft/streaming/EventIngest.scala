@@ -344,21 +344,6 @@ object EventIngest {
     val ss = streamSession(spark)
     val ckpt = java.nio.file.Files.createTempDirectory("graft-vecingest-ck").toString
     val gained = new java.util.concurrent.atomic.AtomicLong(0L)
-    // BOUND the legacy-stamp probe to the pre-upgrade era (ADVICE r17):
-    // a legacy stamp can only describe a file that landed BEFORE the
-    // last legacy stamp was written, so the newest legacy-stamp mtime
-    // (snapshot once per run) is the era boundary — a post-upgrade
-    // file whose basename merely collides with a pre-upgrade stamp
-    // from another directory no longer matches and gets ingested
-    // instead of silently skipped forever. Legacy stamps are the
-    // non-sha-keyed names (the sha scheme is 64 hex chars).
-    val legacyEraEnd: Long = {
-      val sha = "^[0-9a-f]{64}$".r
-      Option(new java.io.File(s"$corpusDir/_vec_ingest").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => sha.findFirstIn(f.getName).isEmpty)
-        .map(_.lastModified).foldLeft(0L)(math.max)
-    }
     val src = ss.readStream
       .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
       .option("pathGlobFilter", "*.parquet")
@@ -384,34 +369,8 @@ object EventIngest {
             .map("%02x".format(_)).mkString
           new java.io.File(stampDir, key)
         }
-        // legacy probe (ADVICE r16, medium): pre-upgrade stamps were
-        // keyed on the URL-encoded BASENAME — consulting only the new
-        // key would re-append every already-ingested file on the first
-        // fresh-checkpoint replay after the upgrade (silent duplicate
-        // corpus rows; only the index append dedups). A legacy hit
-        // counts as ingested AND migrates: the new-key stamp is
-        // written so later replays take the fast path. The probe is
-        // BOUNDED to files that landed within the legacy era (mtime ≤
-        // newest legacy stamp — ADVICE r17): without the bound, a
-        // never-ingested post-upgrade file colliding on basename was
-        // stamped-and-skipped forever, extending the legacy scheme's
-        // collision loss indefinitely.
-        def legacyStampOf(path: String) = new java.io.File(stampDir,
-          java.net.URLEncoder.encode(
-            path.substring(path.lastIndexOf('/') + 1), "UTF-8"))
-        def landedInLegacyEra(path: String): Boolean = legacyEraEnd > 0L && {
-          val hp = new org.apache.hadoop.fs.Path(path)
-          hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .getFileStatus(hp).getModificationTime <= legacyEraEnd
-        }
         val files = batch.select(input_file_name().as("f")).distinct()
           .collect().map(_.getString(0)).filter(_.nonEmpty)
-        files.foreach { f =>
-          if (!stampOf(f).exists() && landedInLegacyEra(f) &&
-              legacyStampOf(f).exists()) {
-            stampOf(f).createNewFile(); ()
-          }
-        }
         val freshFiles = files.filterNot(f => stampOf(f).exists())
         if (freshFiles.nonEmpty) {
           batch.filter(input_file_name()
@@ -439,7 +398,7 @@ object EventIngest {
     * in `landingDir`, stream in one file per micro-batch, and each
     * batch (1) appends to `documents.parquet` behind the same
     * sha-256(path+length) per-file replay stamps (under
-    * `_doc_ingest/` — a NEW scheme, no legacy basename era to probe)
+    * `_doc_ingest/`)
     * and (2) extends the persisted postings/terms/doclens through
     * `Lexical.lexIndexAppend`, which is idempotent by construction
     * (doclens anti-join) and content-guarded (the thash check refuses

@@ -133,7 +133,9 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // first engine never held them in memory, that its index never
     // serves a superseded generation. Counts, via a SparkListener:
     // warm-hit jobs (0) and read actions of the first hit after the
-    // foreign save (at most 1).
+    // foreign save (at most 1). The same holds for models: after the
+    // peer saves different SES params, the first engine loads them and
+    // its next branch-(b) re-forecast runs on them.
     import spark.implicits._
     val base = tempDir("graft-engine-sentinel")
     val eng = new Engine(spark, base)
@@ -165,6 +167,14 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // report the same columns
     assert(eng.cache.loadSliced(name, idx, Methods.SES, 3).schema ==
       peer.cache.loadSliced(name, idx, Methods.SES, 3).schema)
+
+    val peerCore = Seq(555.5, 1.0, 0.3) // SES (level, sigma, alpha)
+    peer.models.save(name, idx, Methods.SES, graft.models.ModelParams(Map("core" -> peerCore.toArray), Map.empty))
+    assert(eng.models.load(name, idx, Methods.SES).d("core").toSeq == peerCore,
+      "a model saved by another engine is the one loaded next")
+    val reforecast = eng.forecast(name, sfDir, Methods.SES, 7, 21).collect()
+    assert(reforecast.length == 21 && reforecast.forall(_.getAs[Double]("mean") == 555.5),
+      "branch (b) re-forecasts from the newest model generation")
   }
 
   test("concurrent hits during repeated re-saves each see one complete generation") {
@@ -214,6 +224,55 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(done.get && readers.forall(!_.isAlive), "threads did not finish")
     assert(problems.isEmpty, s"${problems.size} bad answers: ${problems.asScala.take(3).mkString("; ")}")
     assert(answers.get >= 4)
+  }
+
+  test("concurrent first requests on one key each return the single-threaded answer") {
+    // For each of 5 fresh keys, 4 threads split across two engines over
+    // one store send the first request (branch (c), SES, h=7) at once:
+    // all of them train and publish models, stamps and caches for the
+    // same key together. Every answer must equal a single-threaded
+    // reference run with no exception, and afterwards a third engine
+    // must load the reference's params and match its observation stamp
+    // from the shared store, with no unpublished directory left behind.
+    import org.apache.spark.sql.functions.{col, count, lit, max}
+    val base = tempDir("graft-engine-first")
+    val engines = Seq(new Engine(spark, base), new Engine(spark, base))
+    val ref = new Engine(spark, tempDir("graft-engine-first-ref"))
+    val idx = ref.indexName(sfDir)
+    val names = Seq("click", "purchase", "error", "signup", "view")
+    names.foreach { name =>
+      val expected = ref.forecast(name, sfDir, Methods.SES, 7, 7).collect().map(bands).sortBy(_._1).toSeq
+      val problems = new ConcurrentLinkedQueue[String]()
+      val start = new CountDownLatch(1)
+      val threads = (0 until 4).map { t =>
+        new Thread(() => {
+          start.await()
+          try {
+            val got = engines(t % 2).forecast(name, sfDir, Methods.SES, 7, 7).collect().map(bands).sortBy(_._1).toSeq
+            if (got != expected) problems.add(s"thread $t: ${got.mkString(",")}")
+          } catch { case e: Throwable => problems.add(s"thread $t: $e") }
+        })
+      }
+      threads.foreach(_.start())
+      start.countDown()
+      threads.foreach(_.join(300000))
+      assert(threads.forall(!_.isAlive), s"$name: threads did not finish")
+      assert(problems.isEmpty, s"$name: ${problems.size} bad answers: ${problems.asScala.take(3).mkString("; ")}")
+
+      val stamp = graft.sources.SeriesStore.observations(spark, sfDir, Seq(name))
+        .agg(count(lit(1)), max(col("ts"))).head()
+      val reader = new Engine(spark, base)
+      assert(reader.models.load(name, idx, Methods.SES).d("core").toSeq ==
+        ref.models.load(name, idx, Methods.SES).d("core").toSeq, s"$name: stored params")
+      assert(ref.stamps.matches(name, idx, Methods.SES, stamp.getLong(0), stamp.getLong(1)))
+      assert(reader.stamps.matches(name, idx, Methods.SES, stamp.getLong(0), stamp.getLong(1)),
+        s"$name: stored observation stamp")
+      Seq("forecastModels", "observationStamps", "forecastsCache").foreach { root =>
+        val entries = new java.io.File(s"$base/$root/${Names.key(name, idx, Methods.SES)}").list().toSeq
+        assert(entries.exists(_.startsWith("g-")) && entries.forall(_.startsWith("g-")),
+          s"$name: $root holds only published generations: ${entries.mkString(",")}")
+      }
+    }
   }
 
   test("wrapper train → params → cache round-trips every registered method") {

@@ -727,27 +727,15 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a same-basename file from a second landing dir must still ingest")
     assert(spark.read.parquet(s"$dir/embeddings.parquet").count() == 500L,
       "both fixed-name files reached the corpus")
-    // legacy-stamp era bounding (ADVICE r17). (a) the migration still
-    // works: a file that landed BEFORE its legacy basename stamp was
-    // written (the pre-upgrade sequence) is skipped and migrated...
-    val stampDir = new java.io.File(s"$dir/_vec_ingest")
-    val t0 = System.currentTimeMillis() - 3600_000L
-    landFixed(s"$dir/landing4", 500 until 540)
-    val f4 = new java.io.File(s"$dir/landing4/batch.parquet")
-    assert(f4.setLastModified(t0 - 60_000L))
-    val legacy = new java.io.File(stampDir,
+    // stamps are keyed on the full path + length only: a basename-named
+    // file in the stamp dir (the retired basename-key scheme) must not
+    // make a colliding landed file look ingested
+    val basenameStamp = new java.io.File(s"$dir/_vec_ingest",
       java.net.URLEncoder.encode("batch.parquet", "UTF-8"))
-    legacy.createNewFile()
-    assert(legacy.setLastModified(t0))
-    assert(EventIngest.vectorIngestAvailableNow(spark, s"$dir/landing4", dir) == 0L,
-      "a legacy-stamped pre-upgrade file must not re-ingest")
-    assert(spark.read.parquet(s"$dir/embeddings.parquet").count() == 500L)
-    // ...(b) but a POST-upgrade file (mtime after the newest legacy
-    // stamp) whose basename merely collides must ingest — before the
-    // bound it was stamped-and-skipped forever (silent data loss)
-    landFixed(s"$dir/landing5", 500 until 540)
-    assert(EventIngest.vectorIngestAvailableNow(spark, s"$dir/landing5", dir) == 40L,
-      "a post-upgrade basename collision must not be skipped")
+    assert(basenameStamp.createNewFile())
+    landFixed(s"$dir/landing4", 500 until 540)
+    assert(EventIngest.vectorIngestAvailableNow(spark, s"$dir/landing4", dir) == 40L,
+      "a file colliding with a basename-named stamp must still ingest")
     assert(spark.read.parquet(s"$dir/embeddings.parquet").count() == 540L)
   }
 
