@@ -42,17 +42,7 @@ object SparkEntry {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def sliceStoreDir(s: SparkSession): String =
-    sliceStores.computeIfAbsent(s.sparkContext.applicationId, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-slice-store")
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        if (Files.exists(dir))
-          Files.walk(dir).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => { Files.deleteIfExists(p); () })
-      }
-      dir.toString
-    })
+    sliceStores.computeIfAbsent(s.sparkContext.applicationId, _ => graft.core.ProcessTempDir("graft-slice-store"))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -1,5 +1,7 @@
 package graft.engine
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -362,7 +364,10 @@ object Forecaster {
       case _ =>
         forecastAll(spark, ser, method, frequency, horizon).toDF()
     }
-    out.orderBy("element", "step")
+    // one hash partition sorted in place: the same rows in the same order
+    // as a global sort, without the range exchange's sampling job, which
+    // would run every upstream fit a second time
+    out.repartition(1, col("element")).sortWithinPartitions("element", "step")
   }
 }
 
@@ -386,6 +391,9 @@ final class Engine(spark: SparkSession, baseDir: String) {
   val models = new ModelStore(spark, s"$baseDir/forecastModels")
   val cache = new ForecastCache(spark, s"$baseDir/forecastsCache")
   val stamps = new StampStore(spark, s"$baseDir/observationStamps")
+
+  /** Store keys with a branch-(c) train in flight, and its latch. */
+  private val training = new ConcurrentHashMap[String, CountDownLatch]()
 
   /** Ingest→cache invalidation (round-14 engine extension, OFF by
     * default). The reference's cache validity is horizon-only
@@ -453,32 +461,54 @@ final class Engine(spark: SparkSession, baseDir: String) {
     // invalidation mode treats a stamp mismatch as "no model": both the
     // saved params and the cache predate the ingest, so branch (c) runs
     val stampNow = if (invalidateOnIngest) Some(observationStamp(name, sfDir)) else None
-    val modelUsable = models.exists(name, index, method) &&
+    def modelUsable = models.exists(name, index, method) &&
       stampNow.forall { case (n, t) => stamps.matches(name, index, method, n, t) }
-    if (modelUsable) {
-      if (cache.isValid(name, index, method, horizon)) {
-        cache.loadSliced(name, index, method, horizon) // (a) pure slice, no math
-      } else {
-        // (b) re-forecast from the persisted typed params — no refit
-        val model = Families.byMethod(method).fromParams(models.load(name, index, method))
-        val pts = pointsDF(name, method, model, horizon)
-        cache.save(name, index, method, pts)
-        pts
+    if (modelUsable) fromStore(name, index, method, horizon)
+    else {
+      // (c) one train per key at a time in this engine: later callers wait
+      // for it and then take (a) or (b) on what it published; if it
+      // failed, they find no model and train themselves
+      val key = Names.key(name, index, method)
+      val flight = new CountDownLatch(1)
+      val leader = training.putIfAbsent(key, flight)
+      if (leader != null) {
+        leader.await()
+        forecast(name, sfDir, method, frequency, horizon)
+      } else try {
+        // a train may have finished between the check above and the flight
+        if (modelUsable) fromStore(name, index, method, horizon)
+        else train(name, sfDir, index, method, frequency, horizon, stampNow)
+      } finally {
+        training.remove(key, flight)
+        flight.countDown()
       }
-    } else {
-      // (c) full train; training itself warms a cacheLength-step cache.
-      // The observation stamp is recorded unconditionally (one tiny agg
-      // per train) so invalidateOnIngest can be enabled on an existing
-      // store without forcing a mass retrain.
-      val model = fitOne(name, sfDir, method, frequency, horizon)
-      models.save(name, index, method, model.params)
-      val (n, t) = stampNow.getOrElse(observationStamp(name, sfDir))
-      stamps.save(name, index, method, n, t)
-      cache.save(name, index, method, pointsDF(name, method, model, cacheLength))
+    }
+  }
+
+  /** Branches (a) and (b): validity and slice come from one generation. */
+  private def fromStore(name: String, index: String, method: String, horizon: Int): DataFrame =
+    cache.validSlice(name, index, method, horizon).getOrElse {
+      // (b) re-forecast from the persisted typed params — no refit
+      val model = Families.byMethod(method).fromParams(models.load(name, index, method))
       val pts = pointsDF(name, method, model, horizon)
-      if (horizon > cacheLength) cache.save(name, index, method, pts)
+      cache.save(name, index, method, pts)
       pts
     }
+
+  /** Branch (c): full train; training itself warms a cacheLength-step
+    * cache. The observation stamp is recorded unconditionally (one tiny
+    * agg per train) so invalidateOnIngest can be enabled on an existing
+    * store without forcing a mass retrain. */
+  private def train(name: String, sfDir: String, index: String, method: String, frequency: Int,
+      horizon: Int, stampNow: Option[(Long, Long)]): DataFrame = {
+    val model = fitOne(name, sfDir, method, frequency, horizon)
+    models.save(name, index, method, model.params)
+    val (n, t) = stampNow.getOrElse(observationStamp(name, sfDir))
+    stamps.save(name, index, method, n, t)
+    cache.save(name, index, method, pointsDF(name, method, model, cacheLength))
+    val pts = pointsDF(name, method, model, horizon)
+    if (horizon > cacheLength) cache.save(name, index, method, pts)
+    pts
   }
 
   /** The reference keys stores by ES index name; the engine keys by the

@@ -50,7 +50,9 @@ object Names {
   * does not hold is read once through Spark; one that disappears before
   * it is read (a concurrent publish retired it) sends the reader back to
   * the listing for the newer data. The index holds the newest generation
-  * seen per key and lives and dies with its instance.
+  * seen per key and lives and dies with its instance; whatever a store
+  * derives from a generation (the cache's planned slices) hangs off that
+  * generation's entry and is dropped with it.
   */
 abstract class KeyedStore(spark: SparkSession, baseDir: String) {
   import KeyedStore._
@@ -71,7 +73,7 @@ abstract class KeyedStore(spark: SparkSession, baseDir: String) {
   }
 
   private def remember(key: String, e: Entry): Unit =
-    entries.merge(key, e, (old: Entry, nu: Entry) => if (Gen.order.gt(old.gen, nu.gen)) old else nu)
+    entries.merge(key, e, (old: Entry, nu: Entry) => if (Gen.order.gteq(old.gen, nu.gen)) old else nu)
 
   /** The newest generation's entry, or None when the key has none. */
   protected def current(name: String, index: String, method: String): Option[Entry] = {
@@ -141,8 +143,11 @@ object KeyedStore {
     }
   }
 
-  /** One generation's rows, as the Parquet read reports them. */
-  private[engine] final case class Entry(gen: Gen, schema: StructType, rows: Array[Row])
+  /** One generation's rows, as the Parquet read reports them, and the
+    * DataFrames built from them, keyed by the number of rows they hold. */
+  private[engine] final case class Entry(gen: Gen, schema: StructType, rows: Array[Row]) {
+    private[engine] lazy val frames = new ConcurrentHashMap[Int, DataFrame]()
+  }
 }
 
 /** The model store (R:8, save R:91 / load R:112 / exists-check R:57-62).
@@ -191,26 +196,49 @@ final class StampStore(spark: SparkSession, baseDir: String)
   * `max(step) >= horizon` over the newest generation, the long-form
   * equivalent of the reference's `length(forecasts$mean) >= horizon`
   * (R:71); a warm hit is answered from the index without a Spark job.
+  *
+  * A slice is a local DataFrame planned once per generation: the entry
+  * keeps the frame of each slice it has served, keyed by its row count
+  * (the rows with `step <= horizon` only grow with the horizon, so the
+  * count names the slice), which bounds a generation to one frame per
+  * distinct slice and at most one more than it has rows. A hit on a
+  * slice already served returns that frame, whose physical plan is
+  * ready, so the caller's action skips analysis and planning.
   */
 final class ForecastCache(spark: SparkSession, baseDir: String)
     extends KeyedStore(spark, baseDir) {
+  import KeyedStore.Entry
   import spark.implicits._
 
   def save(name: String, index: String, method: String, points: DataFrame): Unit =
     publish(name, index, method, points)
 
   def isValid(name: String, index: String, method: String, horizon: Int): Boolean =
-    current(name, index, method).exists { e =>
-      val step = e.schema.fieldIndex("step")
-      e.rows.exists(_.getInt(step) >= horizon)
-    }
+    current(name, index, method).exists(covers(_, horizon))
 
   /** Cache hit: pure slice, no model math (R:110 / R:149). The result is
     * a local DataFrame with the columns the Parquet read reports. */
-  def loadSliced(name: String, index: String, method: String, horizon: Int): DataFrame = {
-    val e = read(name, index, method)
+  def loadSliced(name: String, index: String, method: String, horizon: Int): DataFrame =
+    slice(read(name, index, method), horizon)
+
+  /** [[isValid]] and [[loadSliced]] from one resolved generation: the
+    * slice when the newest generation covers `horizon`, else None. */
+  def validSlice(name: String, index: String, method: String, horizon: Int): Option[DataFrame] =
+    current(name, index, method).filter(covers(_, horizon)).map(slice(_, horizon))
+
+  private def covers(e: Entry, horizon: Int): Boolean = {
     val step = e.schema.fieldIndex("step")
-    spark.createDataFrame(e.rows.filter(_.getInt(step) <= horizon).toSeq.asJava, e.schema)
+    e.rows.exists(_.getInt(step) >= horizon)
+  }
+
+  private def slice(e: Entry, horizon: Int): DataFrame = {
+    val step = e.schema.fieldIndex("step")
+    val rows = e.rows.filter(_.getInt(step) <= horizon)
+    e.frames.computeIfAbsent(rows.length, _ => {
+      val df = spark.createDataFrame(rows.toSeq.asJava, e.schema)
+      df.queryExecution.executedPlan
+      df
+    })
   }
 
   def toDF(points: Seq[ForecastPoint]): DataFrame = points.toDF()

@@ -89,8 +89,7 @@ object IncrementalAgg {
     * the first 80% of the calendar, then two maintenance appends. */
   private def ensureMaintained(spark: SparkSession, sfDir: String): String =
     builds.computeIfAbsent((spark.sparkContext.applicationId, sfDir), { _ =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-incr-agg").toString
+      val dir = graft.core.ProcessTempDir("graft-incr-agg")
       val ev = typedEvents(spark, sfDir)
       val Array(minD, maxD) = ev
         .agg(min(unix_date(col("day"))), max(unix_date(col("day"))))

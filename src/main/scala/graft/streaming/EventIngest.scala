@@ -148,7 +148,7 @@ object EventIngest {
       .writeStream.format("memory").queryName(sink).outputMode("append")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    try q.awaitTermination() finally deleteRecursively(new java.io.File(ckpt))
     ss.table(sink)
       .select(col("element"), to_date(col("day_start")).as("day"),
         col("n_obs"), col("sum_value"), col("avg_value"))
@@ -227,7 +227,7 @@ object EventIngest {
       .writeStream.format("memory").queryName(sink).outputMode("append")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    try q.awaitTermination() finally deleteRecursively(new java.io.File(ckpt))
     ss.table(sink).orderBy(col("user_id"), col("session_start_us"))
   }
 
@@ -587,7 +587,7 @@ object EventIngest {
       .writeStream.format("memory").queryName(sink).outputMode("append")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    try q.awaitTermination() finally deleteRecursively(new java.io.File(ckpt))
     ss.table(sink).orderBy(col("purchase_id"), col("click_id"))
   }
 
@@ -731,7 +731,7 @@ object EventIngest {
       .writeStream.format("memory").queryName(sink).outputMode("append")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    try q.awaitTermination() finally deleteRecursively(new java.io.File(ckpt))
     // rank window (not a sink self-join: the memory view's attributes
     // conflict when joined to itself) keeps each shard's final emission
     val w = org.apache.spark.sql.expressions.Window
@@ -900,7 +900,7 @@ object EventIngest {
       .writeStream.format("memory").queryName(sink).outputMode("append")
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    try q.awaitTermination() finally deleteRecursively(new java.io.File(ckpt))
     ss.table(sink).orderBy(col("element"), col("seq"))
   }
 

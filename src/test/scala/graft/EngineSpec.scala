@@ -1,23 +1,24 @@
 package graft
 
-import java.nio.file.{Files, Path}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Row, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Methods
-import graft.engine.{Engine, Names}
+import graft.engine.{Engine, Forecaster, Names}
 
 /** The generic wrapper skeleton (R:104-124): 3-branch cache logic, warm
   * cache on train, horizon>14 persist rule, name sanitization.
   */
-class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EngineSpec extends AnyFunSuite with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -26,22 +27,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val tmpDirs = new ConcurrentLinkedQueue[Path]()
-
-  /** A fresh directory, deleted in [[afterAll]]. */
-  private def tempDir(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix)
-    tmpDirs.add(d)
-    d.toString
-  }
-
-  override def afterAll(): Unit =
-    try spark.stop()
-    finally tmpDirs.asScala.foreach { d =>
-      if (Files.exists(d))
-        Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => { Files.deleteIfExists(p); () })
-    }
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   /** Runs `body` and counts the Spark jobs it starts and its read
     * actions: the SQL executions among them that ran a job. Listener
@@ -177,6 +163,64 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "branch (b) re-forecasts from the newest model generation")
   }
 
+  test("a hit takes validity and slice from one generation and reuses its planned frame") {
+    // Each cache generation keeps one planned frame per distinct slice:
+    // a repeated hit returns that same frame, horizons that select the
+    // same rows share it, and a newer generation (here published by a
+    // peer engine) answers alone, so a horizon it does not cover never
+    // gets the rows of the generation before it.
+    import spark.implicits._
+    val base = tempDir("graft-engine-prepared")
+    val eng = new Engine(spark, base)
+    val peer = new Engine(spark, base)
+    val name = "purchase"
+    val idx = eng.indexName(sfDir)
+    def publish(steps: Seq[Int], mean: Double): Unit = peer.cache.save(name, idx, Methods.SES,
+      steps.map(st => graft.core.ForecastPoint(name, Methods.SES, st, -1, -2, mean, 2, 1)).toDF())
+    def steps(df: DataFrame): Seq[Int] = df.collect().map(_.getAs[Int]("step")).toSeq.sorted
+    def means(df: DataFrame): Set[Double] = df.collect().map(_.getAs[Double]("mean")).toSet
+    def hit(h: Int): Option[DataFrame] = eng.cache.validSlice(name, idx, Methods.SES, h)
+
+    eng.forecast(name, sfDir, Methods.SES, 7, 14).collect()
+    val seven = eng.forecast(name, sfDir, Methods.SES, 7, 7)
+    assert(steps(seven) == (1 to 7))
+    assert(eng.forecast(name, sfDir, Methods.SES, 7, 7) eq seven, "a repeated hit returns the planned frame")
+    assert(hit(7).exists(_ eq seven) && (eng.cache.loadSliced(name, idx, Methods.SES, 7) eq seven))
+    assert(hit(15).isEmpty && !eng.cache.isValid(name, idx, Methods.SES, 15))
+
+    publish(Seq(1, 2, 3, 10), 111.0)
+    val three = hit(4).get
+    assert(steps(three) == Seq(1, 2, 3) && means(three) == Set(111.0))
+    assert(hit(9).exists(_ eq three), "horizons selecting the same rows share one frame")
+    assert(eng.forecast(name, sfDir, Methods.SES, 7, 9) eq three)
+    assert(steps(hit(10).get) == Seq(1, 2, 3, 10) && hit(11).isEmpty)
+
+    publish(1 to 5, 222.0)
+    assert(hit(9).isEmpty && !eng.cache.isValid(name, idx, Methods.SES, 9))
+    val five = hit(5).get
+    assert(steps(five) == (1 to 5) && means(five) == Set(222.0))
+    assert(steps(hit(3).get) == (1 to 3) && means(hit(3).get) == Set(222.0), "no frame of an older generation")
+    // h=9 is beyond the newest generation: branch (b) re-forecasts from params
+    val refreshed = eng.forecast(name, sfDir, Methods.SES, 7, 9)
+    assert(steps(refreshed) == (1 to 9) && !means(refreshed).contains(222.0))
+  }
+
+  test("forecastStore sorts its output without a range exchange") {
+    // a global orderBy plans a range-partitioning exchange whose sampling
+    // job runs every upstream fit a second time; the output must still
+    // come back ordered by (element, step)
+    object Plans extends AdaptiveSparkPlanHelper
+    Seq(Methods.SES, Methods.ETS).foreach { m =>
+      val out = Forecaster.forecastStore(spark, sfDir, m, 7, 5)
+      val exchanges = Plans.collect(out.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.nonEmpty && !exchanges.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+        s"$m: ${out.queryExecution.executedPlan}")
+      val rows = out.collect().toSeq
+      assert(rows.nonEmpty)
+      assert(rows == out.orderBy("element", "step").collect().toSeq, s"$m: rows not in (element, step) order")
+    }
+  }
+
   test("concurrent hits during repeated re-saves each see one complete generation") {
     // 4 threads serve branch-(a) hits on one key while a fifth re-saves
     // its cache 24 times, alternating two 14-row sentinel sets. The saves
@@ -228,51 +272,76 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("concurrent first requests on one key each return the single-threaded answer") {
     // For each of 5 fresh keys, 4 threads split across two engines over
-    // one store send the first request (branch (c), SES, h=7) at once:
-    // all of them train and publish models, stamps and caches for the
-    // same key together. Every answer must equal a single-threaded
-    // reference run with no exception, and afterwards a third engine
-    // must load the reference's params and match its observation stamp
-    // from the shared store, with no unpublished directory left behind.
+    // one store send the first request (branch (c), SES, h=7) at once.
+    // Within one engine only the first caller trains; the other waits for
+    // it and then reads what it published. Every answer must equal a
+    // single-threaded reference run with no exception, each engine must
+    // fit the key at most once (a SparkListener counts the requesting
+    // threads that ran a job whose call site is the engine's fit), and
+    // afterwards a third engine must load the reference's params and
+    // match its observation stamp from the shared store, with no
+    // unpublished directory left behind.
     import org.apache.spark.sql.functions.{col, count, lit, max}
     val base = tempDir("graft-engine-first")
     val engines = Seq(new Engine(spark, base), new Engine(spark, base))
     val ref = new Engine(spark, tempDir("graft-engine-first-ref"))
     val idx = ref.indexName(sfDir)
     val names = Seq("click", "purchase", "error", "signup", "view")
-    names.foreach { name =>
-      val expected = ref.forecast(name, sfDir, Methods.SES, 7, 7).collect().map(bands).sortBy(_._1).toSeq
-      val problems = new ConcurrentLinkedQueue[String]()
-      val start = new CountDownLatch(1)
-      val threads = (0 until 4).map { t =>
-        new Thread(() => {
-          start.await()
-          try {
-            val got = engines(t % 2).forecast(name, sfDir, Methods.SES, 7, 7).collect().map(bands).sortBy(_._1).toSeq
-            if (got != expected) problems.add(s"thread $t: ${got.mkString(",")}")
-          } catch { case e: Throwable => problems.add(s"thread $t: $e") }
-        })
-      }
-      threads.foreach(_.start())
-      start.countDown()
-      threads.foreach(_.join(300000))
-      assert(threads.forall(!_.isAlive), s"$name: threads did not finish")
-      assert(problems.isEmpty, s"$name: ${problems.size} bad answers: ${problems.asScala.take(3).mkString("; ")}")
-
-      val stamp = graft.sources.SeriesStore.observations(spark, sfDir, Seq(name))
-        .agg(count(lit(1)), max(col("ts"))).head()
-      val reader = new Engine(spark, base)
-      assert(reader.models.load(name, idx, Methods.SES).d("core").toSeq ==
-        ref.models.load(name, idx, Methods.SES).d("core").toSeq, s"$name: stored params")
-      assert(ref.stamps.matches(name, idx, Methods.SES, stamp.getLong(0), stamp.getLong(1)))
-      assert(reader.stamps.matches(name, idx, Methods.SES, stamp.getLong(0), stamp.getLong(1)),
-        s"$name: stored observation stamp")
-      Seq("forecastModels", "observationStamps", "forecastsCache").foreach { root =>
-        val entries = new java.io.File(s"$base/$root/${Names.key(name, idx, Methods.SES)}").list().toSeq
-        assert(entries.exists(_.startsWith("g-")) && entries.forall(_.startsWith("g-")),
-          s"$name: $root holds only published generations: ${entries.mkString(",")}")
-      }
+    val engineProp = "graft.test.engine"
+    // "<key>/<engine>" -> the requesting threads that ran a fit job
+    val fits = new ConcurrentHashMap[String, java.util.Set[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.stageInfos.exists(_.details.contains("Engine.fitOne")))
+          Option(j.properties).flatMap(p => Option(p.getProperty(engineProp))).foreach { prop =>
+            val (engine, thread) = prop.splitAt(prop.lastIndexOf('/'))
+            fits.computeIfAbsent(engine, _ => ConcurrentHashMap.newKeySet[String]()).add(thread)
+          }
     }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      names.foreach { name =>
+        val expected = ref.forecast(name, sfDir, Methods.SES, 7, 7).collect().map(bands).sortBy(_._1).toSeq
+        val problems = new ConcurrentLinkedQueue[String]()
+        val start = new CountDownLatch(1)
+        val threads = (0 until 4).map { t =>
+          new Thread(() => {
+            spark.sparkContext.setLocalProperty(engineProp, s"$name/${t % 2}/$t")
+            start.await()
+            try {
+              val got = engines(t % 2).forecast(name, sfDir, Methods.SES, 7, 7).collect().map(bands).sortBy(_._1).toSeq
+              if (got != expected) problems.add(s"thread $t: ${got.mkString(",")}")
+            } catch { case e: Throwable => problems.add(s"thread $t: $e") }
+          })
+        }
+        threads.foreach(_.start())
+        start.countDown()
+        threads.foreach(_.join(300000))
+        assert(threads.forall(!_.isAlive), s"$name: threads did not finish")
+        assert(problems.isEmpty, s"$name: ${problems.size} bad answers: ${problems.asScala.take(3).mkString("; ")}")
+
+        val stamp = graft.sources.SeriesStore.observations(spark, sfDir, Seq(name))
+          .agg(count(lit(1)), max(col("ts"))).head()
+        val reader = new Engine(spark, base)
+        assert(reader.models.load(name, idx, Methods.SES).d("core").toSeq ==
+          ref.models.load(name, idx, Methods.SES).d("core").toSeq, s"$name: stored params")
+        assert(ref.stamps.matches(name, idx, Methods.SES, stamp.getLong(0), stamp.getLong(1)))
+        assert(reader.stamps.matches(name, idx, Methods.SES, stamp.getLong(0), stamp.getLong(1)),
+          s"$name: stored observation stamp")
+        Seq("forecastModels", "observationStamps", "forecastsCache").foreach { root =>
+          val entries = new java.io.File(s"$base/$root/${Names.key(name, idx, Methods.SES)}").list().toSeq
+          assert(entries.exists(_.startsWith("g-")) && entries.forall(_.startsWith("g-")),
+            s"$name: $root holds only published generations: ${entries.mkString(",")}")
+        }
+      }
+      // listener events arrive asynchronously; a marker job fences them
+      sparkWork(())
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val perEngine = for (name <- names; e <- 0 to 1)
+      yield s"$name/$e" -> Option(fits.get(s"$name/$e")).fold(0)(_.size)
+    assert(names.forall(n => perEngine.exists { case (k, c) => k.startsWith(s"$n/") && c > 0 }),
+      s"every key is fitted by some engine: $perEngine")
+    assert(perEngine.forall(_._2 <= 1), s"fits per key and engine: $perEngine")
   }
 
   test("wrapper train → params → cache round-trips every registered method") {

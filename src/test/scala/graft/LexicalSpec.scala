@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Lexical
 
 /** Persisted lexical (postings) index — store lifecycle, driver-side
   * bucket parity, and index-vs-live bit-identity (round 17). */
-class LexicalSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LexicalSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,7 +17,7 @@ class LexicalSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def rmTree(path: String): Unit = {
     val p = java.nio.file.Paths.get(path)
@@ -30,7 +29,7 @@ class LexicalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def corpus(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lex").toString
+    val dir = tempDir("graft-lex")
     rows.map { case (id, t) => (id, "en", "s", t, t.length.toLong) }
       .toDF("doc_id", "lang", "source", "text", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -140,7 +139,7 @@ class LexicalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("empty and null-text corpora serve empty results without error") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lex").toString
+    val dir = tempDir("graft-lex")
     Seq((1L, "en", "s", null.asInstanceOf[String], 0L))
       .toDF("doc_id", "lang", "source", "text", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -243,7 +242,7 @@ class LexicalSpec extends AnyFunSuite with BeforeAndAfterAll {
       (i.toLong, "en", "s",
         s"spark data w$i " + (if (i % 2 == 0) "table hash" else "join query"),
         10L)).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-docingest").toString
+    val dir = tempDir("graft-docingest")
     docRows(1 to 30).toDF("doc_id", "lang", "source", "text", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     // the append contract: no store, loud refusal
@@ -262,7 +261,7 @@ class LexicalSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(s"$dir/documents.parquet").count() == 50L)
     // append == rebuild: a from-scratch build over the same 50 docs
     // serves identical rows
-    val ref = java.nio.file.Files.createTempDirectory("graft-docingest-ref").toString
+    val ref = tempDir("graft-docingest-ref")
     docRows(1 to 50).toDF("doc_id", "lang", "source", "text", "n_chars")
       .coalesce(1).write.parquet(s"$ref/documents.parquet")
     val q = Seq("spark", "table", "hash", "data")

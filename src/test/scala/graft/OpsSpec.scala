@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Multimodal, NearDup, Relational, Similarity, TextAnalysis}
@@ -13,7 +12,7 @@ import graft.streaming.EventIngest
   * near-dup, similarity, multimodal plumbing, as-of join, and the
   * streaming ingest path.
   */
-class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class OpsSpec extends AnyFunSuite with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -23,7 +22,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   test("bench JSON string escaping survives quotes, backslashes, and control chars") {
     // ADVICE carryover (round 13 #7): a corpus path with a quote or
@@ -153,7 +152,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // cell-partitioned inverted lists); a fresh cache must LOAD the
     // identical quantizer; a regenerated corpus must force a refit
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-store").toString
+    val dir = tempDir("graft-ivf-store")
     def writeCorpus(seedShift: Long): Unit = {
       (0L until 300L).map { id =>
         val r = new java.util.Random(id * 31L + 7L + seedShift)
@@ -185,7 +184,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("IVF index append: new vectors join the inverted lists without a refit") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-append").toString
+    val dir = tempDir("graft-ivf-append")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -301,7 +300,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("PQ codes persist in the index store: fit and load are bit-identical, appends re-derive") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-store").toString
+    val dir = tempDir("graft-pq-store")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -331,7 +330,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compactIvfIndex folds append-grown cell directories; content and queries unchanged") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-compact").toString
+    val dir = tempDir("graft-ivf-compact")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -370,7 +369,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compaction swap is generation-pointed: a concurrent reader never observes a missing store") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-genswap").toString
+    val dir = tempDir("graft-ivf-genswap")
     val rows = (0 until 300).map { i =>
       val r = new java.util.Random(i * 31L + 7L)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -406,7 +405,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivfIndexDelete: tombstoned vectors never serve; compaction folds them; appends cannot resurrect") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-delete").toString
+    val dir = tempDir("graft-ivf-delete")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -490,7 +489,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivfIndexDelete binds corpus ids awaiting an append: an in-flight ingest cannot resurrect a takedown") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-pending-del").toString
+    val dir = tempDir("graft-ivf-pending-del")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -516,7 +515,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("lshIndexAppend: incremental growth matches a full rebuild; no-op and ghost guards hold") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-append").toString
+    val dir = tempDir("graft-lsh-append")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -552,7 +551,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("LSH content sidecar: covers appended vectors, exempts takedown-replace, folds at compaction") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-sidecar").toString
+    val dir = tempDir("graft-lsh-sidecar")
     def mixed(n: Int, shiftFor: Int => Long) = (0 until n).map { i =>
       val r = new java.util.Random(i * 31L + 7L + shiftFor(i))
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -594,7 +593,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("manifest fast path refuses a NEW file re-shipping an indexed id with changed content (round 19)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-reship").toString
+    val dir = tempDir("graft-reship")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -634,7 +633,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("LSH manifest fast path refuses a re-shipped changed id (round 19)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-reship").toString
+    val dir = tempDir("graft-lsh-reship")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -655,7 +654,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming vector ingest: landed batches grow the corpus and index; replay cannot double-ingest") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-vecingest").toString
+    val dir = tempDir("graft-vecingest")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -711,7 +710,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // dir's file): two dirs each land a file literally named
     // batch.parquet and both must ingest
     def landFixed(landing: String, ids: Range): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-land").toString
+      val tmp = tempDir("graft-land")
       rows(ids, 99L).coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -741,7 +740,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("filtered serving reads pool cardinality from index metadata: no corpus job, stats maintained") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-label-stats").toString
+    val dir = tempDir("graft-label-stats")
     def rows(ids: Range, shift: Long) = ids.map { i =>
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
@@ -787,7 +786,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("searchVectorMmr: lambda=1 equals plain serving; diversity escapes a duplicate shell") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mmr").toString
+    val dir = tempDir("graft-mmr")
     // planted geometry: 12 near-copies of one direction (the duplicate
     // shell a plain top-k drowns in) + 48 spread documents
     val rnd = new java.util.Random(7L)
@@ -998,7 +997,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // round-17 verdict ask #6: the silent max(0, ...) clamp let a
     // drifted stats file quietly mis-widen probes — now it floors AND
     // records, and ivfIndexHealth gates on the incident count
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift")
     Similarity.writeLabelStats(dir, Map(Some(1) -> 5L, Some(2) -> 3L))
     assert(Similarity.labelStatsDriftCount(dir) == 0L)
     // subtract more of label 2 than the stats ever saw
@@ -1029,7 +1028,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
     }.toDF("vec_id", "embedding", "label")
     // case 1: the corpus SHRANK — indexed ids are no longer a subset
-    val dirA = java.nio.file.Files.createTempDirectory("graft-ivf-shrink").toString
+    val dirA = tempDir("graft-ivf-shrink")
     rows(0 until 300, 0L).write.mode("overwrite").parquet(s"$dirA/embeddings.parquet")
     Similarity.ivfTopK(spark, dirA, k = 3).collect()
     rows(0 until 200, 0L).write.mode("overwrite").parquet(s"$dirA/embeddings.parquet")
@@ -1043,7 +1042,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // but the stored cells ARE the content address (round 18, verdict
     // r17 ask #1): the append must REFUSE loudly instead of silently
     // no-op'ing, and the marker stays stale so the next reader refits
-    val dirB = java.nio.file.Files.createTempDirectory("graft-ivf-rewrite").toString
+    val dirB = tempDir("graft-ivf-rewrite")
     rows(0 until 300, 0L).write.mode("overwrite").parquet(s"$dirB/embeddings.parquet")
     Similarity.ivfTopK(spark, dirB, k = 3).collect()
     val marker = new java.io.File(Similarity.indexDir(dirB, 0), "_SUCCESS")
@@ -1064,7 +1063,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // case 3: a rewrite that KEPT every id and ADDED more — the exact
     // hole the content guard closes: the ghost check passes (ids are a
     // superset) but the cells were assigned from the old vectors
-    val dirC = java.nio.file.Files.createTempDirectory("graft-ivf-growrewrite").toString
+    val dirC = tempDir("graft-ivf-growrewrite")
     rows(0 until 300, 0L).write.mode("overwrite").parquet(s"$dirC/embeddings.parquet")
     Similarity.ivfTopK(spark, dirC, k = 3).collect()
     rows(0 until 360, 555L).write.mode("overwrite").parquet(s"$dirC/embeddings.parquet")
@@ -1078,7 +1077,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rewrite — a successful append certifies the corpus files, and a
     // later rewrite (new files, coverage broken) must still fall
     // through to the content guard and refuse
-    val dirD = java.nio.file.Files.createTempDirectory("graft-ivf-manifest").toString
+    val dirD = tempDir("graft-ivf-manifest")
     rows(0 until 300, 0L).write.mode("overwrite").parquet(s"$dirD/embeddings.parquet")
     Similarity.ivfTopK(spark, dirD, k = 3).collect()
     rows(300 until 340, 99L).write.mode("append").parquet(s"$dirD/embeddings.parquet")
@@ -1109,7 +1108,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val r = new java.util.Random(i * 31L + 7L + shift)
       (i.toLong, Array.fill(16)(r.nextGaussian().toFloat), (i % 5))
     }.toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("graft-carry").toString
+    val dir = tempDir("graft-carry")
     rows(0 until 300, 0L).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     Similarity.ivfTopK(spark, dir, k = 3).collect()
     Similarity.ivfIndexDelete(spark, dir, Seq(5L))
@@ -1124,7 +1123,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the registry must survive the refit swap")
     // the lexical twin: rebuild after takedown (the health-card test
     // pins serving identity; here pin the registry survival itself)
-    val ldir = java.nio.file.Files.createTempDirectory("graft-carrylex").toString
+    val ldir = tempDir("graft-carrylex")
     (1L to 9L).map(i => (i, "en", "s", s"alpha beta w$i", 3L))
       .toDF("doc_id", "lang", "source", "text", "n_chars")
       .coalesce(1).write.parquet(s"$ldir/documents.parquet")
@@ -1147,7 +1146,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // few cells), the ensure step must refit rather than keep serving
     // the drifted geometry
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-drift").toString
+    val dir = tempDir("graft-ivf-drift")
     def blob(ids: Range, center: Double, spread: Double) = ids.map { i =>
       val r = new java.util.Random(i * 131L + 11L)
       (i.toLong, Array.fill(8)((center + spread * r.nextGaussian()).toFloat), (i % 5))
@@ -1404,7 +1403,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // min-rooted cluster (plus leave an unrelated singleton alone).
     val n = 30
     val width = 40
-    val dir = java.nio.file.Files.createTempDirectory("graft-chain").toString
+    val dir = tempDir("graft-chain")
     val rows = (0 until n).map { i =>
       val text = (i until i + width).map(j => f"w$j%04d").mkString(" ")
       (i.toLong + 1, "en", "chain", text, text.length.toLong)
@@ -1445,7 +1444,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bm25 search: scores match the closed form on a planted corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+    val dir = tempDir("graft-bm25")
     // N=3, avgdl=3: doc 1 hits (spark x2, join), doc 2 hits (spark), doc 3 none
     Seq((1L, "en", "s", "spark spark join", 16L),
         (2L, "en", "s", "spark other words here", 22L),
@@ -1520,7 +1519,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partitioned store round-trip: pruned read reproduces the direct series") {
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events_part"
+    val out = tempDir("graft-part") + "/events_part"
     graft.sources.SeriesStore.writePartitioned(spark, sfDir, out)
     val direct = graft.sources.SeriesStore.series(spark, sfDir, Seq("error")).collect()
     val pruned = graft.sources.SeriesStore.seriesFromPartitioned(spark, out, Seq("error")).collect()
@@ -1595,7 +1594,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("repetition stats flag a constructed spam document") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rep").toString
+    val dir = tempDir("graft-rep")
     Seq(
       (1L, "en", "s", "buy now " * 50 + "limited offer", 0L),
       (2L, "en", "s", (1 to 100).map(i => s"tok$i").mkString(" "), 0L))
@@ -1615,7 +1614,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // there, matching its oracle), so the combination math c_a·c_b /
     // C(c,2) needs a constructed fixture with known overlap
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-overlap").toString
+    val dir = tempDir("graft-overlap")
     Seq(
       (1L, "en", "s1", "xxx", 3L), (2L, "en", "s1", "yyy", 3L),
       (3L, "en", "s2", "xxx", 3L), (4L, "en", "s2", "xxx", 3L),
@@ -1648,7 +1647,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a planted far-away vector must flag (it isolates into a singleton
     // cell, which is exactly what the population rule exists for);
     // its tight cluster must stay mostly unflagged
-    val dir = java.nio.file.Files.createTempDirectory("graft-outlier").toString
+    val dir = tempDir("graft-outlier")
     val rng = new scala.util.Random(11L)
     val cluster = (0L until 60L).map(i =>
       (i, 0, Array.tabulate(8)(d => (d + 1).toFloat + rng.nextGaussian().toFloat * 0.05f)))
@@ -1663,7 +1662,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ngram novelty: duplicate scores 0, fresh 1, overlap exact; null/short handled") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-novelty").toString
+    val dir = tempDir("graft-novelty")
     val a = (1 to 12).map(i => s"w$i").mkString(" ")            // 5 grams, all first
     val b = a                                                   // verbatim dup -> 0
     val c = ((1 to 8).map(i => s"w$i") ++ (1 to 8).map(i => s"x$i")).mkString(" ")
@@ -1691,7 +1690,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every doc repeats ONE universal 8-gram (the viral-boilerplate
     // regime where a window-over-gram first-occurrence would buffer the
     // whole corpus in a single task) plus one private gram
-    val dir = java.nio.file.Files.createTempDirectory("graft-viral").toString
+    val dir = tempDir("graft-viral")
     val boiler = (1 to 8).map(i => s"b$i").mkString(" ")
     (0L until 200L).map(id =>
         (id, "en", "s", s"$boiler u${id}a u${id}b u${id}c u${id}d u${id}e u${id}f u${id}g u${id}h",
@@ -1761,7 +1760,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sources (a clique whose band buckets exceed the 512 salt cap),
     // plus a few ordinary documents.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-viral").toString
+    val dir = tempDir("graft-viral")
     val viralText = "please share this important announcement with all of your " +
       "friends because the committee has decided that the annual meeting will " +
       "now happen on the first day of the coming month in the town hall"
@@ -1877,7 +1876,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bigram perplexity separates repetitive boilerplate from alien transitions") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ppl").toString
+    val dir = tempDir("graft-ppl")
     val normal = (1L to 20L).map(i =>
       (i, "en", "s", s"the cat number $i sat on the mat and the dog slept near the door", 60L))
     // repetitive: one bigram over and over -> transitions the corpus LM
@@ -1948,7 +1947,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("encoding quality: planted mojibake counted exactly, null text screens clean") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-enc").toString
+    val dir = tempDir("graft-enc")
     val clean = "plain ascii text with tabs\tand\nnewlines"
     val ctrl = "bad \u0001byte\u0007and\u0013more" // 3 C0 control chars
     val fffd = "lossy � decode �� here"       // 3 replacement chars
@@ -1972,7 +1971,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("substring spans: planted verbatim run recovered with exact offsets") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-span").toString
+    val dir = tempDir("graft-span")
     val span = (1 to 20).map(i => s"shared$i").mkString(" ")
     val d1 = "alpha beta gamma " + span + " tail1 tail2"  // span tokens 4..23
     val d2 = "x1 x2 x3 x4 x5 " + span + " end"            // span tokens 6..25
@@ -1992,7 +1991,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("substring dup coverage: overlapping spans merge, first occurrence never pays") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-spancov").toString
+    val dir = tempDir("graft-spancov")
     val span = (1 to 20).map(i => s"shared$i").mkString(" ")
     val d1 = "alpha beta gamma " + span + " tail1 tail2" // first occurrence — keeps
     val d2 = "x1 x2 x3 x4 x5 " + span + " end"           // pays for the span vs d1
@@ -2014,7 +2013,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("media near-dup: same-size local edit lands within the hamming radius") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mediand").toString
+    val dir = tempDir("graft-mediand")
     val base = ("the quick brown fox jumps over the lazy dog while a calm river " +
       "flows beside the old stone bridge in the quiet morning light of early june") * 2
     // same-LENGTH edit: a handful of characters replaced mid-payload —
@@ -2193,7 +2192,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("winnow overlap finds a planted shared substring and ignores hot windows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-winnow").toString
+    val dir = tempDir("graft-winnow")
     val shared = "the migration of the monarch butterflies crosses three thousand " +
       "kilometers of open country every autumn without a single rest day"
     val docA = s"report one begins here $shared and then concludes alpha"
@@ -2302,7 +2301,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val curated = graft.ops.Dedup.curateCorpus(spark, sfDir).count()
     assert(f(3)._3 == curated, "final stage must equal the curate_corpus keep-set")
     // an empty corpus still reports the full 4-row funnel, all zeros
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel-empty").toString
+    val dir = tempDir("graft-funnel-empty")
     import spark.implicits._
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "lang", "source", "text", "n_chars")
@@ -2334,7 +2333,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("embedding dim stats: exact moments on a constructed fixture, nulls ignored") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dimstats").toString
+    val dir = tempDir("graft-dimstats")
     // dim 0: values 1,2,3 -> mean 2, population std sqrt(2/3), min 1 max 3;
     // dim 1: constant 5 -> std exactly 0; the null row must not count
     Seq((1L, Option(Seq(1.0f, 5.0f)), 0), (2L, Option(Seq(2.0f, 5.0f)), 0),
@@ -2354,7 +2353,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("every document operator tolerates an empty corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val dir = tempDir("graft-empty")
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "lang", "source", "text", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -2403,7 +2402,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // real feeds ship null fields; nothing may crash, and null-text
     // rows must not silently vanish from per-document outputs
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-null").toString
+    val dir = tempDir("graft-null")
     val good = "the quick brown fox and the lazy dog sit on the hill with a friend " * 10
     Seq((1L, Some("en"), Some("s"), Some(good), Some(good.length.toLong)),
         (2L, Some("en"), Some("s"), None, None),           // null text
@@ -2480,7 +2479,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // is built so the weak labels span both classes with overwhelming
     // hash-split probability, forcing a real fit + full-corpus featurize.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nullqm").toString
+    val dir = tempDir("graft-nullqm")
     val good = "the quick brown fox and the lazy dog sit on the hill with a friend " * 10
     val junk = "!!! ### $$$ %%% ^^^ &&& *** ((( )))"
     val rows = (0L until 10L).map(i => (i, "en", "s", Some(good + s" variant $i"), 700L)) ++
@@ -2501,7 +2500,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("null embedding rows flow through every vector operator") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nullvec").toString
+    val dir = tempDir("graft-nullvec")
     val rng = new scala.util.Random(13L)
     val ok = (0L until 40L).map(i => (i, (i % 2).toInt,
       Some(Array.fill(8)(rng.nextGaussian().toFloat))))
@@ -2531,7 +2530,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // events with a null value/user must not break the fit path or the
     // relational aggregates (null observations are not observations)
-    val edir = java.nio.file.Files.createTempDirectory("graft-nullev").toString
+    val edir = tempDir("graft-nullev")
     val t0 = 86400000L * 19000
     (0 until 30).map { i =>
       (new java.sql.Timestamp(t0 + i * 3600000L), "purchase", i.toLong,
@@ -2602,7 +2601,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // point ± h·slope and the 80/95 bands coincide. Pins the rank
     // selection (a rank off by one would still land on the same value
     // only here; the real-data nesting check below catches direction).
-    val dir = java.nio.file.Files.createTempDirectory("graft-conf").toString
+    val dir = tempDir("graft-conf")
     val t0 = 86400000L * 19000
     (0 until 40).map(i => (new java.sql.Timestamp(t0 + i * 3600000L), "lin",
         i.toLong, Option(1L), Some(5.0 + 3.0 * i), "{}"))
@@ -2712,7 +2711,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val t0 = 86400000L * 19000
     def write(rows: Seq[(java.sql.Timestamp, String, Long, Option[Long], Option[Double], String)]) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-hier").toString
+      val dir = tempDir("graft-hier")
       rows.toDF("ts", "event_type", "event_id", "user_id", "value", "props")
         .coalesce(1).write.parquet(s"$dir/events.parquet")
       dir
@@ -2741,7 +2740,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val t0 = 86400000L * 19000
     def write(rows: Seq[(java.sql.Timestamp, String, Long, Option[Long], Option[Double], String)]) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-chi2").toString
+      val dir = tempDir("graft-chi2")
       rows.toDF("ts", "event_type", "event_id", "user_id", "value", "props")
         .coalesce(1).write.parquet(s"$dir/events.parquet")
       dir
@@ -2775,7 +2774,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val t0 = 86400000L * 19000
     def write(rows: Seq[(java.sql.Timestamp, String, Long, Option[Long], Option[Double], String)]) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-ks").toString
+      val dir = tempDir("graft-ks")
       rows.toDF("ts", "event_type", "event_id", "user_id", "value", "props")
         .coalesce(1).write.parquet(s"$dir/events.parquet")
       dir
@@ -2804,7 +2803,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val t0 = 86400000L * 19000
     def write(rows: Seq[(java.sql.Timestamp, String, Long, Option[Long], Option[Double], String)]) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-mwu").toString
+      val dir = tempDir("graft-mwu")
       rows.toDF("ts", "event_type", "event_id", "user_id", "value", "props")
         .coalesce(1).write.parquet(s"$dir/events.parquet")
       dir
@@ -2838,7 +2837,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val t0 = 86400000L * 19000
     def write(vals: Seq[(String, Int, Double)]) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-ens").toString
+      val dir = tempDir("graft-ens")
       vals.map { case (el, i, v) =>
         (new java.sql.Timestamp(t0 + i * 3600000L), el, i.toLong, Option(1L), Some(v), "{}") }
         .toDF("ts", "event_type", "event_id", "user_id", "value", "props")
@@ -2875,7 +2874,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // to divide by length(text) and died on empty docs (routine in real
     // feeds). The greatest(len, 1) guard makes the ratios total.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-emptytext").toString
+    val dir = tempDir("graft-emptytext")
     val good = "the quick brown fox and the lazy dog sit on the hill with a friend " * 10
     Seq((1L, "en", "s", "", 0L), (2L, "en", "s", "   ", 3L),
         (3L, "en", "s", good, good.length.toLong))
@@ -2895,7 +2894,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("zero-norm vectors and an empty events store degrade gracefully") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-zero").toString
+    val dir = tempDir("graft-zero")
     Seq((1L, 0, Array(0.0f, 0.0f, 0.0f, 0.0f)),
         (2L, 0, Array(1.0f, 2.0f, 3.0f, 4.0f)),
         (3L, 1, Array(4.0f, 3.0f, 2.0f, 1.0f)))
@@ -2918,13 +2917,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sd.map(_.getBoolean(3)).toSeq == Seq(true, true, false))
     assert(sd(2).getLong(1) == 2L && sd(2).getLong(2) == 2L)
     // and an EMPTY embeddings store flows through both dedup paths
-    val mdir = java.nio.file.Files.createTempDirectory("graft-zero-emb").toString
+    val mdir = tempDir("graft-zero-emb")
     Seq.empty[(Long, Int, Array[Float])].toDF("vec_id", "label", "embedding")
       .write.parquet(s"$mdir/embeddings.parquet")
     assert(graft.ops.Dedup.semanticDedup(spark, mdir).count() == 0L)
     assert(graft.ops.Dedup.semanticDedupIvf(spark, mdir).count() == 0L)
     // an empty events store flows through the whole fit pipeline
-    val edir = java.nio.file.Files.createTempDirectory("graft-zero-ev").toString
+    val edir = tempDir("graft-zero-ev")
     Seq.empty[(java.sql.Timestamp, String, Long, Long, Double, String)]
       .toDF("ts", "event_type", "event_id", "user_id", "value", "props")
       .write.parquet(s"$edir/events.parquet")
@@ -3112,7 +3111,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // on the window end -> MERGED, extending the session. u2: one
     // session; u3 (gap + 1) splits.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val dir = tempDir("graft-sess")
     val gapUs = 30L * 60L * 1000000L
     Seq((1L, 0L, 2.0), (1L, 1000L, 3.0), (1L, 1000L + gapUs, 5.0),
         (2L, 0L, 1.0), (2L, gapUs - 1L, 1.0),
@@ -3132,7 +3131,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("session concurrency: difference-array profile, hour-boundary end exclusive") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-conc").toString
+    val dir = tempDir("graft-conc")
     val hourUs = 3600L * 1000000L; val minUs = 60L * 1000000L
     // A: events 10:00+10:10 -> session [10:00, 10:40); B: 10:30 ->
     // [10:30, 11:00) — ends EXACTLY on the hour boundary, so hour 10 is
@@ -3153,7 +3152,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("series gapfill: a 3-day outage densifies with LOCF and is_filled flags") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-gapfill").toString
+    val dir = tempDir("graft-gapfill")
     val day = 86400L * 1000000L
     // element a: days 10 (two obs, mean 3.0), 11, then a 3-day gap, 15
     Seq((10L * day, 2.0), (10L * day + 1000L, 4.0), (11L * day, 5.0), (15L * day, 9.0))
@@ -3175,7 +3174,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("incremental dedup: exact beats near, partner is lowest base id, novel kept") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-incdedup").toString
+    val dir = tempDir("graft-incdedup")
     val w40 = (0 until 40).map(i => f"w$i%02d").mkString(" ")
     // ids % 7 == 0 are the arriving batch; 1..4 are the base corpus
     Seq(
@@ -3203,7 +3202,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("click attribution: window edges and tie-break pinned by fixture") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
+    val dir = tempDir("graft-attr")
     val hourUs = 3600L * 1000000L
     // user 1: clicks at t=0 and t=10 (tie on nothing), purchase at
     // t=hourUs -> click at t=0 is EXACTLY one hour before: excluded
@@ -3245,7 +3244,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // max ts = day 12 -> wm = day 11 = END of the [day10, day11) window,
     // so day 10 must be emitted and day 12 (still open) must not
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-avnow").toString
+    val dir = tempDir("graft-avnow")
     val day = 86400000L
     Seq((new java.sql.Timestamp(day * 10 + 5000), "a", 1.5),
         (new java.sql.Timestamp(day * 12), "a", 2.0))
@@ -3264,7 +3263,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 1's session end (emit); user 3 ends 1ms later (hold); the clock
     // driver's own session is open (hold).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess-avnow").toString
+    val dir = tempDir("graft-sess-avnow")
     val gapUs = 30L * 60L * 1000000L
     val dayUs = 86400000000L
     Seq((1L, 0L, 2.5),
@@ -3281,7 +3280,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("event funnel: steps must be reached in order, ties on the exact microsecond count") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
+    val dir = tempDir("graft-funnel")
     // u1 completes in order; u2's click precedes their first view (does
     // not count) so the later purchase can't count either; u3's click at
     // the SAME microsecond as the view counts, but their purchase came
@@ -3302,7 +3301,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("user retention: cohort by first-active day, offset 0 is the cohort size") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-retention").toString
+    val dir = tempDir("graft-retention")
     val dayUs = 86400000000L
     Seq((1L, 0L), (1L, 1L), (1L, 3L), (2L, 0L), (2L, 3L), (3L, 1L), (3L, 2L))
       .toDF("user_id", "d")
@@ -3319,7 +3318,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("rolling actives: a user is visible for 7 days, partial future windows unreported") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rolling").toString
+    val dir = tempDir("graft-rolling")
     val dayUs = 86400000000L
     Seq((1L, 0L), (2L, 3L))
       .toDF("user_id", "d")
@@ -3449,7 +3448,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ewma anomalies: a spike flags only once the state is baked") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ewma").toString
+    val dir = tempDir("graft-ewma")
     // element "a": 12 alternating baseline points, a spike at n=13
     // (baked, must flag), recovery, then nothing else flags.
     // element "b": a spike at n=5 (unbaked, must NOT flag).
@@ -3501,7 +3500,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // does NOT). Under the old shape the filter kept a phantom
     // single-event session; the correct answer is zero rows.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess-push").toString
+    val dir = tempDir("graft-sess-push")
     val t0 = 1700000000000L // ms
     Seq(
       (1L, new java.sql.Timestamp(t0), 5L, "a", 1.0, "{}"),
@@ -3546,7 +3545,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("file-source streaming ingest writes watermark-closed daily aggregates") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val base = tempDir("graft-stream")
     val inDir = s"$base/in"; val outDir = s"$base/out"; val ckDir = s"$base/ck"
     val day = 86400000L
     def ts(ms: Long) = new java.sql.Timestamp(ms)
@@ -3569,7 +3568,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("checkpointed file sink: restart is exactly-once, increments append cleanly") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val base = tempDir("graft-restart")
     val inDir = s"$base/in"; val outDir = s"$base/out"; val ckDir = s"$base/ck"
     val day = 86400000L
     def ts(ms: Long) = new java.sql.Timestamp(ms)
@@ -3695,7 +3694,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("series features: linear series has exact slope and r1 = 1, constant degrades to NULLs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-feat").toString
+    val dir = tempDir("graft-feat")
     val rows =
       (1 to 10).map(i => (i.toLong, new java.sql.Timestamp(i * 60000L), "lin", 2.0 * i + 3.0)) ++
       (1 to 8).map(i => (100L + i, new java.sql.Timestamp(i * 60000L), "const", 4.0))
@@ -3730,7 +3729,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sorted mirror append: increment lands prunable, slices stay exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-append").toString
+    val dir = tempDir("graft-append")
     val dayUs = 86400000000L
     def ev(day: Long, n: Int): Seq[(java.sql.Timestamp, Long, String, Double)] =
       (0 until n).map(i =>
@@ -3761,7 +3760,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(_.metrics("numOutputRows").value).sum
     }
     spark.conf.set("parquet.block.size", (16 * 1024).toString)
-    val corpus = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val corpus = tempDir("graft-zorder")
     // 30 days × 64 users, deterministic spread
     (0 until 6000).map { i =>
       (new java.sql.Timestamp(
@@ -3815,7 +3814,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fuzzy key pairs: distance boundary and the shift blind spot") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-fuzzy").toString
+    val dir = tempDir("graft-fuzzy")
     val base = "the quick brown fox jump" // exactly 24 chars
     Seq(
       (0L, "en", "s", base + " extra tail"),
@@ -3846,7 +3845,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         val s = Array.fill(len)(('a' + rng.nextInt(3)).toChar).mkString
         (i.toLong, "en", "s", s)
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-fzp$sample").toString
+      val dir = tempDir(s"graft-fzp$sample")
       docs.toDF("doc_id", "lang", "source", "text")
         .coalesce(1).write.parquet(s"$dir/documents.parquet")
       val keyed = docs.map { case (id, _, _, t) =>
@@ -3879,7 +3878,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           }
         }
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-ssp$sample").toString
+      val dir = tempDir(s"graft-ssp$sample")
       docs.toDF("doc_id", "lang", "source", "text")
         .coalesce(2).write.parquet(s"$dir/documents.parquet")
       val n = 1 + rng.nextInt(6)
@@ -3924,7 +3923,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stratified sample: a stratum smaller than n returns all its rows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-strat").toString
+    val dir = tempDir("graft-strat")
     // stratum (en, tiny) has 3 docs < n=5; (en, big) has 20
     val rows = (0 until 3).map(i => (i.toLong, "en", "tiny", s"doc $i text")) ++
       (100 until 120).map(i => (i.toLong, "en", "big", s"doc $i text"))
@@ -3948,14 +3947,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // many groups
     import spark.implicits._
     spark.conf.set("parquet.block.size", (16 * 1024).toString)
-    val corpus = java.nio.file.Files.createTempDirectory("graft-prune").toString
+    val corpus = tempDir("graft-prune")
     (0 until 3000).map { i =>
       (new java.sql.Timestamp(
         java.time.LocalDate.of(2024, 1, 1 + i % 30).toEpochDay * 86400000L + i * 7L),
         i.toLong, "view", 1.0)
     }.toDF("ts", "user_id", "event_type", "value")
       .coalesce(1).write.parquet(s"$corpus/events.parquet")
-    val shuffledDir = java.nio.file.Files.createTempDirectory("graft-layout").toString + "/ev"
+    val shuffledDir = tempDir("graft-layout") + "/ev"
     try {
       graft.sources.LayoutStore.sorted(spark, corpus)
         // deliberately destroy the time order, keep everything else
@@ -3985,7 +3984,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 10/11 forever (σ0 = 0.5, |z| = 1 → the ±0.5 drift never
     // accumulates past h = 5); "shift" jumps to 60 on day 21 → z = 99
     // crosses the decision interval the same day
-    val dir = java.nio.file.Files.createTempDirectory("graft-cusum-test").toString
+    val dir = tempDir("graft-cusum-test")
     val rows = for {
       el <- Seq("steady", "shift"); d <- 1 to 30; r <- 1 to 4
     } yield {
@@ -4025,7 +4024,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "maintained partials must be indistinguishable from a full recompute")
     // compaction folds the multi-batch store to one partial set without
     // moving a bit (exact types + distributive aggregates)
-    val store = java.nio.file.Files.createTempDirectory("graft-incr-test").toString
+    val store = tempDir("graft-incr-test")
     val ev = graft.sources.Tables.events(spark, sfDir).filter(col("ts").isNotNull)
       .select(col("event_type"), graft.sources.Tables.tsDay("ts").as("day"), col("value"))
     // five appends of interleaved slices (modulus on the day ordinal)
@@ -4132,7 +4131,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // customer 1: two qualifying orders; customer 2: ONLY a 5-LOW order
     // (must survive with count 0 — the ON-vs-WHERE distinction);
     // customer 3: no orders at all
-    val dir = java.nio.file.Files.createTempDirectory("graft-q13-test").toString
+    val dir = tempDir("graft-q13-test")
     Seq((1L, "a", 0, 0.0, "S"), (2L, "b", 0, 0.0, "S"), (3L, "c", 0, 0.0, "S"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
@@ -4154,7 +4153,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     * 104 appears once (1 * 1000 < 1200 → pruned before any pair). */
   private def writeBasketFixture(): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-basket-test").toString
+    val dir = tempDir("graft-basket-test")
     val rows =
       (1 to 1200).map(ok => (ok.toLong, 999L)) ++
         (1 to 5).flatMap(ok => Seq((ok.toLong, 101L), (ok.toLong, 102L))) ++
@@ -4186,7 +4185,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // triangle {201,202,203} (each pair co-occurs twice), pendant edge
     // 201–204; filler keeps the corpus >1000 orders for the item floor
-    val dir = java.nio.file.Files.createTempDirectory("graft-tri-test").toString
+    val dir = tempDir("graft-tri-test")
     val pairs = Seq((201L, 202L), (201L, 203L), (202L, 203L), (201L, 204L))
     val star = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
       Seq(2 * i + 1, 2 * i + 2).flatMap(ok => Seq((ok.toLong, a), (ok.toLong, b)))
@@ -4202,7 +4201,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("join skew report: a planted hot key flips the flag and crushes entropy") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew-test").toString
+    val dir = tempDir("graft-skew-test")
     // orderkey: 1000 keys once each + one key 1000 times → skew 500x;
     // partkey/suppkey stay uniform
     ((1 to 1000).map(i => (i.toLong, (i % 50).toLong, (i % 20).toLong)) ++
@@ -4228,7 +4227,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // triangle {201,202,203} plus a pendant chain 201–204–205: the chain
     // peels away in two rounds (205 first, then 204), the triangle is
     // the 2-core with every member at within-core degree 2
-    val dir = java.nio.file.Files.createTempDirectory("graft-kcore-test").toString
+    val dir = tempDir("graft-kcore-test")
     val pairs = Seq((201L, 202L), (201L, 203L), (202L, 203L), (201L, 204L), (204L, 205L))
     val star = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
       Seq(2 * i + 1, 2 * i + 2).flatMap(ok => Seq((ok.toLong, a), (ok.toLong, b)))
@@ -4313,7 +4312,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cross-source dup matrix: count algebra matches hand-computed cells") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-xsrc-test").toString
+    val dir = tempDir("graft-xsrc-test")
     // norm group "alpha beta": 2 copies in s1 + 1 in s2 → within(s1)=1,
     // across(s1,s2)=2; group "gamma delta": 2 in s2 → within(s2)=1;
     // case/whitespace differences must normalize away
@@ -4337,7 +4336,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("embedding spectrum: planted anisotropy concentrates the top component") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-spec-test").toString
+    val dir = tempDir("graft-spec-test")
     // dim 0 carries ~400× the variance of dim 1; dims 2-3 are constant
     val rows = (0 until 40).map { i =>
       (i.toLong, Seq((i - 20).toFloat, (i % 3) * 0.1f, 1.0f, 0.0f), 0)
@@ -4367,7 +4366,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // planted anisotropy (same fixture family as the spectrum test):
     // whitening must equalize the 400x variance ratio to 1/1
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-whiten-test").toString
+    val dir = tempDir("graft-whiten-test")
     (0 until 40).map { i =>
       (i.toLong, Seq((i - 20).toFloat, (i % 3) * 0.1f, 1.0f, 0.0f), 0)
     }.toDF("vec_id", "embedding", "label")
@@ -4381,7 +4380,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("shesd: planted spike in a seasonal series is rank-1; clean seasonal stays quiet") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-shesd-test").toString
+    val dir = tempDir("graft-shesd-test")
     // 63 days of a strong weekly cycle + small deterministic period-5
     // jitter (so residual MAD is nonzero); "spiky" adds +40 on day 33 —
     // EWMA/MAD-style detectors would also fire on the ±6 weekly swing,
@@ -4408,7 +4407,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("heavy hitters: MG + exact recount equals brute force on a skewed fixture") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-hh-test").toString
+    val dir = tempDir("graft-hh-test")
     // key 7: 40% of 10k rows; keys 1..6: 1000 each; tail: singletons
     val rows = Seq.fill(4000)(7L) ++ (1L to 6L).flatMap(Seq.fill(1000)(_)) ++
       (1000L until 1000L + 0).map(identity)
@@ -4424,7 +4423,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("fuzzy eval contamination: verbatim and near copies flag, unrelated doc doesn't") {
     import spark.implicits._
     import graft.ops.Curation
-    val dir = java.nio.file.Files.createTempDirectory("graft-fuzzy-eval").toString
+    val dir = tempDir("graft-fuzzy-eval")
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val near = ((1 to 40).map(i => s"tok$i") ++ Seq("edit1", "edit2")).mkString(" ")
     val other = (1 to 40).map(i => s"zzz$i").mkString(" ")
@@ -4447,7 +4446,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // path 201–202–203–204 from seed 201; {501,502} is a separate
     // component the BFS must never reach; filler clears the item floor
-    val dir = java.nio.file.Files.createTempDirectory("graft-bfs-test").toString
+    val dir = tempDir("graft-bfs-test")
     val pairs = Seq((201L, 202L), (202L, 203L), (203L, 204L), (501L, 502L))
     val star = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
       Seq(2 * i + 1, 2 * i + 2).flatMap(ok => Seq((ok.toLong, a), (ok.toLong, b)))
@@ -4463,7 +4462,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("clustering coefficients: triangle members 1 or 1/3, pendant node 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-test").toString
+    val dir = tempDir("graft-cc-test")
     val pairs = Seq((201L, 202L), (201L, 203L), (202L, 203L), (201L, 204L))
     val star = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
       Seq(2 * i + 1, 2 * i + 2).flatMap(ok => Seq((ok.toLong, a), (ok.toLong, b)))
@@ -4480,7 +4479,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("part triples: level-3 candidates only from frequent pairs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-tri3-test").toString
+    val dir = tempDir("graft-tri3-test")
     // {301,302,303} co-ordered twice → one frequent triple; {304,305}
     // twice → a frequent pair that must NOT extend to any triple
     val triple = Seq(1L, 2L).flatMap(ok => Seq((ok, 301L), (ok, 302L), (ok, 303L)))
@@ -4495,7 +4494,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("winsorize: nearest-rank bounds clamp exactly the planted tails") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-wins-test").toString
+    val dir = tempDir("graft-wins-test")
     // n=40, values 1..40: lo_rank = ceil(40/20) = 2 → p05 = 2,
     // hi_rank = ceil(19*40/20) = 38 → p95 = 38
     val rows = (1 to 40).map(i => (i.toLong,
@@ -4528,7 +4527,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("daily percentiles: nearest-rank p50/p95 selected from a planted day") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpct-test").toString
+    val dir = tempDir("graft-dpct-test")
     val rows = (1 to 40).map(i => (i.toLong,
       java.sql.Timestamp.valueOf("2024-03-01 12:00:00"), 1L, "m", i.toDouble, "{}"))
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -4542,7 +4541,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("event transitions: lead pairs with microsecond+id tiebreak, probabilities exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-trans-test").toString
+    val dir = tempDir("graft-trans-test")
     // user 1: view(id=1) and click(id=2) at the SAME instant (tie →
     // event_id order), then purchase; user 2: view → view
     val t0 = java.sql.Timestamp.valueOf("2024-03-01 12:00:00")
@@ -4563,7 +4562,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("label centroids: orthogonal/parallel/negative cosines exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-centroid-test").toString
+    val dir = tempDir("graft-centroid-test")
     Seq((1L, Seq(1.0f, 0.0f), 0), (2L, Seq(1.0f, 0.0f), 0),
       (3L, Seq(0.0f, 1.0f), 1), (4L, Seq(2.0f, 0.0f), 2),
       (5L, Seq(-1.0f, 0.0f), 3))
@@ -4578,7 +4577,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("column correlations: perfect linear pair hits 1.0, all pairs bounded") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-corr-test").toString
+    val dir = tempDir("graft-corr-test")
     // extendedprice = 3·quantity (corr exactly 1); discount constant +
     // alternating tax (uncorrelated with the linear pair)
     (1 to 50).map(i => (i.toLong, 1L, 1L, 1, i.toDouble, 3.0 * i,
@@ -4598,7 +4597,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("croston: intermittent recursion replayed by hand, zeros never chase the level") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-croston-test").toString
+    val dir = tempDir("graft-croston-test")
     // demands on days 1,4,6 of a 6-day window: 5, 8, 3 (gaps are exact
     // zero-demand days)
     val rows = Seq((1, 5.0), (4, 8.0), (6, 3.0)).map { case (d, v) =>
@@ -4636,7 +4635,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("TSB: probability smooths every period, forecast decays after demand stops") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-tsb-test").toString
+    val dir = tempDir("graft-tsb-test")
     // same fixture as the croston test (demands 5, 8, 3 on days 1, 4, 6)
     // plus a DYING element: all demand in the first 3 of 12 days — the
     // obsolescence regime croston freezes on and TSB decays on
@@ -4669,7 +4668,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("demand classes: planted quadrants land where Syntetos–Boylan puts them") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sbclass-test").toString
+    val dir = tempDir("graft-sbclass-test")
     // "smooth": demand every day, constant size (ADI 1, CV² 0);
     // "lumpy": demand every 3rd day with wildly varying sizes
     val smooth = (1 to 12).map(d => (d, "smooth", 10.0))
@@ -4691,7 +4690,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("demand classes: a dying stream flags obsolescence and routes to TSB") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-obsolete-test").toString
+    val dir = tempDir("graft-obsolete-test")
     // demand days 1-5 then silence through day 20 (calendar extended by
     // a zero-value row): early half 5 demand days, late half 0 — the
     // exact-integer screen (2·nd_late < nd_early) must flag and route
@@ -4709,7 +4708,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sorted-neighborhood: prefix-variant docs pair, banded set equals the direct window") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-snm-test").toString
+    val dir = tempDir("graft-snm-test")
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon one"),
       (2L, "alpha beta gamma delta epsilon two"),
@@ -4746,7 +4745,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("eval contamination: source docs self-flag, a verbatim copy flags, clean doc doesn't") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-contam-test").toString
+    val dir = tempDir("graft-contam-test")
     val words = (1 to 20).map(i => s"w$i").mkString(" ") // 20 tokens
     val other = (21 to 40).map(i => s"w$i").mkString(" ")
     val third = (41 to 60).map(i => s"w$i").mkString(" ")
@@ -4767,7 +4766,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("nearest click join: closest-either-side wins, equidistant tie takes the earlier click") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-nearest-test").toString
+    val dir = tempDir("graft-nearest-test")
     val base = 1700000000000000L // µs
     def tsOf(us: Long) = new java.sql.Timestamp(us / 1000)
     // purchase at T: clicks at T−30m (id 10) and T+30m (id 11) —
@@ -4806,7 +4805,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("with-ties top-k keeps boundary ties; percentile tops at 1.0 and respects order") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ties-test").toString
+    val dir = tempDir("graft-ties-test")
     // 9 distinct high values + THREE orders tied at the 10th price
     val prices = (1 to 9).map(i => 1000.0 - i) ++ Seq(100.0, 100.0, 100.0) ++
       (1 to 5).map(i => 10.0 + i)
@@ -4829,7 +4828,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ship latency stats: known day-diffs give exact mean and nearest-rank cuts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lat-test").toString
+    val dir = tempDir("graft-lat-test")
     val d0 = java.time.LocalDate.of(2024, 1, 1)
     (1 to 20).map { i =>
       (i.toLong, 1L, 1L, 1, 1.0, 1.0, 0.0, 0.0, "N", "O",
@@ -4851,7 +4850,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("user streaks: islands split on gap days, longest run exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-streak-test").toString
+    val dir = tempDir("graft-streak-test")
     // user 1 active days 1,2,3, 5,6, 9 → streaks 3,2,1; user 2 day 1 only
     val days = Seq((1L, 1), (1L, 2), (1L, 3), (1L, 5), (1L, 6), (1L, 9), (2L, 1))
     days.zipWithIndex.map { case ((u, d), i) =>
@@ -4866,7 +4865,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("user churn: absent-next-week anti join, trailing week excluded") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-churn-test").toString
+    val dir = tempDir("graft-churn-test")
     // u1 active weeks 0,1,2; u2 week 0 only; u3 week 1 only
     def ts(wk: Long) = new java.sql.Timestamp(wk * 604800000L + 1000L)
     Seq((1L, ts(0), 1L), (2L, ts(1), 1L), (3L, ts(2), 1L),
@@ -4882,7 +4881,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("value histogram: integer binning maps each cent value to its own bin") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-hist-test").toString
+    val dir = tempDir("graft-hist-test")
     // cents 1..20 → lo=1, hi=20, range=20: bin = c-1, one row each
     (1 to 20).map(i => (i.toLong, 1L, "O", i / 100.0,
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "1-URGENT"))
@@ -4897,7 +4896,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("mad anomalies: spike day flags, alternating baseline and constant series stay quiet") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-mad-test").toString
+    val dir = tempDir("graft-mad-test")
     val rows = for {
       el <- Seq("spiky", "flat"); d <- 1 to 30; r <- 1 to 4
     } yield {
@@ -4926,7 +4925,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("doc length histogram: group-local bounds, singleton source degenerates to bin 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dlh-test").toString
+    val dir = tempDir("graft-dlh-test")
     // source A: lengths 1..10 on local bounds → one per bin;
     // source B: a single doc → exactly bin 0
     val docs = (1 to 10).map(i => (i.toLong, "x", "en", "A", i.toLong)) :+
@@ -4943,7 +4942,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("k-anonymity: singleton QI group flags, populous group passes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-kanon-test").toString
+    val dir = tempDir("graft-kanon-test")
     val docs = (1 to 6).map(i => (i.toLong, s"text $i", "en", "web", 100L)) :+
       ((7L, "loner", "fr", "web", 100L))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -4970,7 +4969,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // star graph: hub 500 co-occurs with each leaf in 2 orders; >1000
     // total orders keep every star part frequent under the 0.1% floor
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr-test").toString
+    val dir = tempDir("graft-pr-test")
     val leaves = Seq(501L, 502L, 503L, 504L)
     val star = leaves.zipWithIndex.flatMap { case (leaf, i) =>
       Seq(2 * i + 1, 2 * i + 2).flatMap(ok => Seq((ok.toLong, 500L), (ok.toLong, leaf)))
@@ -5110,7 +5109,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("phrase search: planted adjacencies, 0-based positions, no substring match") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-phrase-test").toString
+    val dir = tempDir("graft-phrase-test")
     Seq(
       (1L, "x table hash y table hash"),  // hits at token pos 1 and 4
       (2L, "table x hash"),               // non-adjacent: no hit
@@ -5127,7 +5126,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("token PMI: hand-computed counts and quantized value on a tiny corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pmi-test").toString
+    val dir = tempDir("graft-pmi-test")
     // 5 docs of "a b", 5 docs of "b a c" →
     // unigrams: a=10 b=10 c=5, N=25; bigrams: (a,b)=5 (b,a)=5 (a,c)=5, M=15
     val docs = (1 to 5).map(i => (i.toLong, "a b")) ++
@@ -5147,7 +5146,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("TWAP: hand-computed step-function average, null rows dropped") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-twap-test").toString
+    val dir = tempDir("graft-twap-test")
     val day = "2024-03-01"
     Seq(
       (1L, java.sql.Timestamp.valueOf(s"$day 00:00:00"), "buy", Some(10.0)),
@@ -5245,7 +5244,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("language confusion: planted mislabel lands in the right cell, totals reconcile") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-conf-test").toString
+    val dir = tempDir("graft-conf-test")
     Seq(
       (1L, "en", "the cat and the dog of note"),
       (2L, "en", "der hund und die katze und der vogel"), // German text labeled en
@@ -5260,7 +5259,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dominant period: a planted period-5 activity cycle is detected") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-period-test").toString
+    val dir = tempDir("graft-period-test")
     val t0 = 86400000L * 19000
     // 30 days: 'cycle' spikes every 5th day (10 events vs 1); 'flat' is constant
     val rows = (0 until 30).flatMap { d =>
@@ -5280,7 +5279,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("tfidf cosine: identical docs score 1.0, disjoint docs emit no pair") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-tfidf-test").toString
+    val dir = tempDir("graft-tfidf-test")
     val a = "alpha beta gamma delta epsilon zeta eta theta"
     Seq((1L, a), (2L, a), (3L, "one two three four five six seven"))
       .toDF("doc_id", "text").write.mode("overwrite")
@@ -5338,7 +5337,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("BPE merges: hand-derived rules on a tiny corpus, overlap counting and run parity") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe-test").toString
+    val dir = tempDir("graft-bpe-test")
     // words: aaab ×2, ab ×1.
     // step 1: (a,a) weighted 2·2=4 (overlap-counted) beats (a,b)=3 → merge
     //   left-to-right: aaab → [aa, a, b]
@@ -5405,7 +5404,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stationary distribution: planted 2-state alternating chain settles at 50/50") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stat-test").toString
+    val dir = tempDir("graft-stat-test")
     val t0 = 86400000L * 19000
     // one user alternating a b a b ... -> P(a->b)=P(b->a)=1; the even
     // iteration count returns the uniform start exactly: pi = (1/2, 1/2)
@@ -5471,7 +5470,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // aggregates. The generator happens to emit no empty strings; this
     // fixture plants them so the parity contract is load-bearing.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv-null").toString
+    val dir = tempDir("graft-csv-null")
     val ts = java.sql.Timestamp.valueOf("2024-03-01 10:00:00")
     Seq(
       (1L, ts, 10L, "view", 1.5, Some("""{"k":"v"}""")),
@@ -5498,7 +5497,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("latency trend: a perfectly linear planted latency has slope exactly 1.0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-trend-test").toString
+    val dir = tempDir("graft-trend-test")
     // month k (1..6): one order whose single lineitem ships k days later
     val orders = (1 to 6).map(k => (k.toLong, 1L, "O", 10.0,
       java.sql.Timestamp.valueOf(f"2024-$k%02d-01 00:00:00"), "1-URGENT"))
@@ -5517,7 +5516,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("supplier HHI: a sole supplier scores exactly 1.0 and flags concentrated") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-hhi-test").toString
+    val dir = tempDir("graft-hhi-test")
     Seq((1L, "solo", "Brand#1", "MONO", 1, 1.0),
         (2L, "duo", "Brand#1", "DUO", 1, 1.0))
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")
@@ -5550,7 +5549,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("language entropy per source: single-lang is 0, 50/50 mix is ln 2") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lent-test").toString
+    val dir = tempDir("graft-lent-test")
     Seq((1L, "en", "mono", "x"), (2L, "en", "mono", "y"),
         (3L, "en", "mix", "x"), (4L, "de", "mix", "y"))
       .toDF("doc_id", "lang", "source", "text")
@@ -5606,7 +5605,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val mem = MemoryStream[(String, java.sql.Timestamp, Double)]
       def ev(i: Int, v: Double) = ("a", new java.sql.Timestamp(t0 + i * 1000L), v)
       mem.addData((1 to 20).map(i => ev(i, 10.0 + (if (i % 2 == 0) 0.1 else -0.1))): _*)
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft-rocks-$provider").toString
+      val ckpt = tempDir(s"graft-rocks-$provider")
       val sink = s"rocks_anom_$provider"
       val q = EventIngest.anomalyStream(
           mem.toDF().toDF("event_type", "ts", "value"), alpha = 0.1, zThreshold = 3.0)
@@ -5633,7 +5632,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("file-source stream resumes from its checkpoint: run 2 reads only new files, parquet sink stays exactly-once") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val root = tempDir("graft-restart")
     val inDir = s"$root/in"; val outDir = s"$root/out"; val ckpt = s"$root/ck"
     val t0 = 86400000L * 19600
     def land(days: Range): Unit =
@@ -5674,7 +5673,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("line-level dedup: planted banner stripped, order kept, whitespace variants one identity, no window") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lines").toString
+    val dir = tempDir("graft-lines")
     val banner = "COOKIE Notice  accept all"        // normalizes to one identity
     val bannerVar = "cookie notice ACCEPT   ALL"    // whitespace/case variant
     val docs = Seq(
@@ -5711,7 +5710,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming line-clean serve: foreachBatch + broadcast census equals the batch cleaner") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lcstream").toString
+    val dir = tempDir("graft-lcstream")
     val banner = "cookie notice accept all"
     (0L until 40L).map { id =>
         val t =
@@ -5744,7 +5743,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // provider class rides along without state files — the pin is that
     // the lifecycle completes and matches batch under that config
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-lcrocks").toString
+    val dir = tempDir("graft-lcrocks")
     (0L until 12L).map { id =>
         val t = if (id % 5 == 0) null.asInstanceOf[String]
           else s"shared banner line\nonly $id here"
@@ -5799,7 +5798,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       rows += ((null, "click", eid, java.lang.Long.valueOf(99L), 1.0, "{}")); eid += 1
       rows += ((new java.sql.Timestamp(t0), "click", eid, null, 1.0, "{}"))
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-sessprop$seed").toString
+      val dir = tempDir(s"graft-sessprop$seed")
       rows.toSeq.toDF("ts", "event_type", "event_id", "user_id", "value", "props")
         .coalesce(1).write.parquet(s"$dir/events.parquet")
 
@@ -5878,7 +5877,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
             1.0, "{}")
         }
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-retprop$seed").toString
+      val dir = tempDir(s"graft-retprop$seed")
       rows.toDF("ts", "event_type", "event_id", "user_id", "value", "props")
         .coalesce(1).write.parquet(s"$dir/events.parquet")
       val userDays: Map[Long, Set[Long]] = rows
@@ -5917,7 +5916,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           eid += 1
         }
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-twapprop$seed").toString
+      val dir = tempDir(s"graft-twapprop$seed")
       rows.toSeq.toDF("ts", "event_type", "event_id", "user_id", "value", "props")
         .coalesce(1).write.parquet(s"$dir/events.parquet")
       val ref = rows.groupBy(r => (r._2, r._1.getTime * 1000L / 86400000000L)).map {
@@ -5957,7 +5956,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           (ok, java.sql.Date.valueOf(d0.toLocalDate.plusDays(rng.nextInt(15))))
         }
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-openprop$seed").toString
+      val dir = tempDir(s"graft-openprop$seed")
       orders.toDF("o_orderkey", "o_orderdate")
         .coalesce(1).write.parquet(s"$dir/orders.parquet")
       lines.toDF("l_orderkey", "l_shipdate")
@@ -6013,7 +6012,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           (id, lines.mkString("\n"))
         }
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-lprop$seed").toString
+      val dir = tempDir(s"graft-lprop$seed")
       docs.map { case (id, t) =>
           (id, "en", "s", t, Option(t).map(_.length.toLong).getOrElse(0L)) }
         .toDF("doc_id", "lang", "source", "text", "n_chars")
@@ -6064,7 +6063,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         val text = new scala.util.Random(rng.nextLong()).shuffle(toks).mkString(" ")
         (id, text, nE.toLong, nU.toLong, nN.toLong)
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-pprop$seed").toString
+      val dir = tempDir(s"graft-pprop$seed")
       docs.map { case (id, t, _, _, _) => (id, "en", "s", t, t.length.toLong) }
         .toDF("doc_id", "lang", "source", "text", "n_chars")
         .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -6087,7 +6086,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pii redact: entities rewritten in contract order, counts match scan, clean text untouched") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pii").toString
+    val dir = tempDir("graft-pii")
     Seq(
       (1L, "contact bob@example.com or see https://ex.com/a?id=1234567890 ref 9876543210 end"),
       (2L, "plain text with short 1234 number"),
@@ -6263,7 +6262,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a corpus one row past ExactTierMaxRows (tiny d=2 vectors keeps the
     // parquet write cheap); the guard must fire BEFORE any pair scan
     val n = graft.ops.Similarity.ExactTierMaxRows + 1
-    val dir = java.nio.file.Files.createTempDirectory("graft-guard").toString
+    val dir = tempDir("graft-guard")
     spark.range(n).select(col("id").as("vec_id"),
         array((col("id") % 7).cast("float"), lit(1.0f)).as("embedding"),
         (col("id") % 3).cast("int").as("label"))
@@ -6288,7 +6287,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.ops.NearDup.embeddingNearDup(spark, dir, threshold = 2.0)
       .columns.toSeq == Seq("vec_a", "vec_b", "cosine"))
     // ...and refuse when one block exceeds it (all rows one label)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-guard2").toString
+    val dir2 = tempDir("graft-guard2")
     spark.range(n).select(col("id").as("vec_id"),
         array(lit(1.0f), lit(1.0f)).as("embedding"), lit(0).as("label"))
       .write.parquet(s"$dir2/embeddings.parquet")
@@ -6347,7 +6346,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         (id, lines.mkString("\n"))
       } :+ ((41L, "")) :+ ((42L, " \t\n ")) :+
         ((43L, null: String)) // empty + whitespace-only + null docs
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-filtprop$seed").toString
+      val dir = tempDir(s"graft-filtprop$seed")
       docs.toDF("doc_id", "text")
         .select(col("doc_id"), col("text"), lit("en").as("lang"),
           lit("prop").as("source"), length(col("text")).cast("long").as("n_chars"))
