@@ -411,9 +411,11 @@ final class Engine(spark: SparkSession, baseDir: String) {
 
   /** The effective observation window's identity for `name`: row count
     * and max event time over the capped, null-filtered series window —
-    * exactly the data a fit sees. */
+    * exactly the data a fit sees. Only the [[invalidateOnIngest]]
+    * pre-check reads it; a train records the stamp of its own fit's
+    * read. */
   private def observationStamp(name: String, sfDir: String): (Long, Long) = {
-    val r = graft.sources.SeriesStore.observations(spark, sfDir, Seq(name))
+    val r = SeriesStore.observations(spark, sfDir, Seq(name))
       .agg(count(lit(1)).as("n"), max(col("ts")).as("t")).head()
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
@@ -428,27 +430,28 @@ final class Engine(spark: SparkSession, baseDir: String) {
     try graft.sources.Tables.events(spark, sfDir).limit(1).count() == 1
     catch { case _: Throwable => false }
 
-  private def fitOne(name: String, sfDir: String, method: String, frequency: Int, horizon: Int): SeriesModel = {
+  /** Fits `method` on `name`'s series inside a one-row Spark job; returns
+    * the model and the stamp `(n_obs, max_ts)` of the rows it fitted,
+    * from the same read. */
+  private def fitOne(name: String, sfDir: String, method: String, frequency: Int,
+      horizon: Int): (SeriesModel, (Long, Long)) = {
     val family = Families.byMethod(method)
     val f = frequency
     val h = horizon
-    method match {
-      case Methods.PROPHET =>
-        // calendar-aware path (R:369) — fit still runs in an executor task
-        graft.sources.SeriesStore.datedSeries(spark, sfDir, Seq(name))
-          .map { case (_, days, values) => ParamsRow.from(ProphetLite.fitDated(days, values).params) }
-          .head() match { case row => family.fromParams(row.toParams) }
-      case Methods.HYBRID =>
-        // the reference passes the REQUESTED horizon as cvHorizon (R:359)
-        // — CV granularity depends on the first caller's horizon
-        graft.sources.SeriesStore.series(spark, sfDir, Seq(name))
-          .map(s => ParamsRow.from(Hybrid.HybridFamily.fitCv(s.values, f, h).params))
-          .head() match { case row => family.fromParams(row.toParams) }
-      case _ =>
-        graft.sources.SeriesStore.series(spark, sfDir, Seq(name))
-          .map(s => ParamsRow.from(family.fit(s.values, f).params))
-          .head() match { case row => family.fromParams(row.toParams) }
-    }
+    // PROPHET fits on the calendar-aware path (R:369)
+    val (row, nObs, maxTs) = SeriesStore.stampedSeries(spark, sfDir, Seq(name), dated = method == Methods.PROPHET)
+      .map { s =>
+        val params = method match {
+          case Methods.PROPHET => ProphetLite.fitDated(s.days, s.values).params
+          // the reference passes the REQUESTED horizon as cvHorizon (R:359)
+          // — CV granularity depends on the first caller's horizon
+          case Methods.HYBRID => Hybrid.HybridFamily.fitCv(s.values, f, h).params
+          case _ => family.fit(s.values, f).params
+        }
+        (ParamsRow.from(params), s.nObs, s.maxTs)
+      }
+      .head()
+    (family.fromParams(row.toParams), (nObs, maxTs))
   }
 
   private def pointsDF(name: String, method: String, model: SeriesModel, h: Int): DataFrame =
@@ -477,7 +480,7 @@ final class Engine(spark: SparkSession, baseDir: String) {
       } else try {
         // a train may have finished between the check above and the flight
         if (modelUsable) fromStore(name, index, method, horizon)
-        else train(name, sfDir, index, method, frequency, horizon, stampNow)
+        else train(name, sfDir, index, method, frequency, horizon)
       } finally {
         training.remove(key, flight)
         flight.countDown()
@@ -496,14 +499,15 @@ final class Engine(spark: SparkSession, baseDir: String) {
     }
 
   /** Branch (c): full train; training itself warms a cacheLength-step
-    * cache. The observation stamp is recorded unconditionally (one tiny
-    * agg per train) so invalidateOnIngest can be enabled on an existing
-    * store without forcing a mass retrain. */
+    * cache. The observation stamp is recorded unconditionally, from the
+    * fit's own series read (no extra read), so invalidateOnIngest can be
+    * enabled on an existing store without forcing a mass retrain. The
+    * three publishes run on the driver: the fit's jobs are the train's
+    * only Spark work. */
   private def train(name: String, sfDir: String, index: String, method: String, frequency: Int,
-      horizon: Int, stampNow: Option[(Long, Long)]): DataFrame = {
-    val model = fitOne(name, sfDir, method, frequency, horizon)
+      horizon: Int): DataFrame = {
+    val (model, (n, t)) = fitOne(name, sfDir, method, frequency, horizon)
     models.save(name, index, method, model.params)
-    val (n, t) = stampNow.getOrElse(observationStamp(name, sfDir))
     stamps.save(name, index, method, n, t)
     cache.save(name, index, method, pointsDF(name, method, model, cacheLength))
     val pts = pointsDF(name, method, model, horizon)

@@ -11,7 +11,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 import graft.core.ForecastPoint
 import graft.models.ModelParams
@@ -36,12 +36,18 @@ object Names {
   *
   * Layout: each key directory holds immutable generations
   * `g-<seq>-<uuid>`, each one Parquet table, and the newest generation by
-  * (seq, uuid) is the key's value. [[publish]] writes a hidden
-  * `_tmp-<uuid>` directory and makes it visible with one atomic rename to
-  * `g-<highest seq + 1>-<uuid>` (the uuid breaks ties between concurrent
-  * writers). It then retires every generation older than the previous
-  * one, renaming it to a hidden name before deleting it, so a reader never
-  * sees a half-written or half-deleted table.
+  * (seq, uuid) is the key's value. [[publish]] takes the rows on the
+  * driver and writes them from there, with Spark's own Parquet file
+  * writer, as one file in a hidden `_tmp-<uuid>` directory: no Spark job
+  * runs, and there is no `_SUCCESS` marker (a generation written by a
+  * Spark write job, with one, reads the same). It makes the directory
+  * visible with one atomic rename to `g-<highest seq + 1>-<uuid>` (the
+  * uuid breaks ties between concurrent writers). It then retires every
+  * generation older than the previous one, renaming it to a hidden name
+  * before deleting it, so a reader never sees a half-written or
+  * half-deleted table. A writer that dies mid-publish leaves its hidden
+  * directory behind; a later publish on the key deletes hidden entries
+  * older than [[KeyedStore.AbandonedAfterMs]].
   *
   * Every read lists the key directory once, so a publish by another
   * instance or process is seen on the next call, and answers from a
@@ -64,19 +70,21 @@ abstract class KeyedStore(spark: SparkSession, baseDir: String) {
 
   private def fsOf(p: Path): FileSystem = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Published generations under `dir`, newest first. */
-  private def generations(dir: Path): Seq[Gen] = {
-    val listed =
-      try fsOf(dir).listStatus(dir)
-      catch { case _: FileNotFoundException => Array.empty[FileStatus] }
-    listed.toSeq.flatMap(st => Gen.parse(st.getPath.getName)).sorted(Gen.order.reverse)
-  }
+  private def listing(dir: Path): Seq[FileStatus] =
+    try fsOf(dir).listStatus(dir).toSeq
+    catch { case _: FileNotFoundException => Nil }
+
+  /** Published generations among `listed`, newest first. */
+  private def generations(listed: Seq[FileStatus]): Seq[Gen] =
+    listed.flatMap(st => Gen.parse(st.getPath.getName)).sorted(Gen.order.reverse)
+
+  private def generations(dir: Path): Seq[Gen] = generations(listing(dir))
 
   private def remember(key: String, e: Entry): Unit =
     entries.merge(key, e, (old: Entry, nu: Entry) => if (Gen.order.gteq(old.gen, nu.gen)) old else nu)
 
   /** The newest generation's entry, or None when the key has none. */
-  protected def current(name: String, index: String, method: String): Option[Entry] = {
+  private[graft] def current(name: String, index: String, method: String): Option[Entry] = {
     val key = Names.key(name, index, method)
     val dir = keyDir(name, index, method)
     @tailrec def resolve(newest: Option[Gen]): Option[Entry] = newest match {
@@ -106,21 +114,26 @@ abstract class KeyedStore(spark: SparkSession, baseDir: String) {
   def exists(name: String, index: String, method: String): Boolean =
     generations(keyDir(name, index, method)).nonEmpty
 
-  /** Publishes `data` as the key's newest generation. */
-  protected def publish(name: String, index: String, method: String, data: DataFrame): Unit = {
+  /** Publishes `rows` of `schema` as the key's newest generation. The
+    * write runs on the driver: no Spark job. */
+  protected def publish(name: String, index: String, method: String, schema: StructType,
+      rows: Array[Row]): Unit = {
     val dir = keyDir(name, index, method)
     val fs = fsOf(dir)
     val id = UUID.randomUUID().toString
     val tmp = new Path(dir, s"_tmp-$id")
-    val rows = data.collect()
-    try data.write.parquet(tmp.toString)
+    try Bridge.writeParquet(spark, schema, rows.toSeq, tmp)
     catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    val gen = Gen(generations(dir).headOption.fold(1L)(_.seq + 1), id)
+    val listed = listing(dir)
+    val gen = Gen(generations(listed).headOption.fold(1L)(_.seq + 1), id)
     if (!fs.rename(tmp, new Path(dir, gen.name))) {
       fs.delete(tmp, true)
       throw new IOException(s"could not publish generation ${gen.name} under $dir")
     }
-    remember(Names.key(name, index, method), Entry(gen, Bridge.asNullable(data.schema), rows))
+    remember(Names.key(name, index, method), Entry(gen, Bridge.asNullable(schema), rows))
+    val abandoned = System.currentTimeMillis() - AbandonedAfterMs
+    listed.filter(st => Hidden.matches(st.getPath.getName) && st.getModificationTime < abandoned)
+      .foreach(st => Try(fs.delete(st.getPath, true)))
     generations(dir).filter(_.seq < gen.seq - 1).foreach { old =>
       val retired = new Path(dir, s"_old-${UUID.randomUUID()}")
       // a concurrent writer may have retired it first
@@ -130,8 +143,14 @@ abstract class KeyedStore(spark: SparkSession, baseDir: String) {
 }
 
 object KeyedStore {
+  /** Age past which a hidden `_tmp-*` or `_old-*` entry is taken to be
+    * left by a writer that died: far above any publish's duration. */
+  val AbandonedAfterMs: Long = 60L * 60L * 1000L
+
+  private val Hidden = """_(tmp|old)-.+""".r
+
   /** A published generation: directory `g-<seq>-<uuid>`. */
-  private[engine] final case class Gen(seq: Long, id: String) {
+  private[graft] final case class Gen(seq: Long, id: String) {
     def name: String = s"g-$seq-$id"
   }
   private object Gen {
@@ -145,7 +164,7 @@ object KeyedStore {
 
   /** One generation's rows, as the Parquet read reports them, and the
     * DataFrames built from them, keyed by the number of rows they hold. */
-  private[engine] final case class Entry(gen: Gen, schema: StructType, rows: Array[Row]) {
+  private[graft] final case class Entry(gen: Gen, schema: StructType, rows: Array[Row]) {
     private[engine] lazy val frames = new ConcurrentHashMap[Int, DataFrame]()
   }
 }
@@ -155,11 +174,10 @@ object KeyedStore {
   */
 final class ModelStore(spark: SparkSession, baseDir: String)
     extends KeyedStore(spark, baseDir) {
-  import spark.implicits._
 
   def save(name: String, index: String, method: String, params: ModelParams): Unit =
-    publish(name, index, method,
-      Seq((params.dparams.map { case (k, v) => (k, v.toSeq) }, params.sparams)).toDF("dparams", "sparams"))
+    publish(name, index, method, ModelStore.Schema,
+      Array(Row(params.dparams.map { case (k, v) => (k, v.toSeq) }, params.sparams)))
 
   def load(name: String, index: String, method: String): ModelParams = {
     val row = read(name, index, method).rows.head
@@ -169,26 +187,41 @@ final class ModelStore(spark: SparkSession, baseDir: String)
   }
 }
 
+object ModelStore {
+  /** The schema `Seq((dparams, sparams)).toDF` derives. */
+  private val Schema = StructType(Seq(
+    StructField("dparams", MapType(StringType, ArrayType(DoubleType, containsNull = false))),
+    StructField("sparams", MapType(StringType, StringType))))
+}
+
 /** Observation-store stamp recorded at train time (round-14 engine
   * extension — the signal [[graft.streaming.EventIngest]]'s scaladoc
   * promises): `(n_obs, max_ts)` of the EFFECTIVE series window (the
   * oldest-`MaxSeriesLength` capped, null-filtered observation set the
-  * fit actually saw). `Engine.invalidateOnIngest` compares the current
+  * fit actually saw). The train takes it from the fit's own series read
+  * (`SeriesStore.stampedSeries`), so it describes exactly the rows the
+  * model was fitted on. `Engine.invalidateOnIngest` compares the current
   * window against this stamp; a streamed append that changes the
   * window invalidates both the model and its cache. Two longs per
   * (name, index, method) — metadata-scale by construction. */
 final class StampStore(spark: SparkSession, baseDir: String)
     extends KeyedStore(spark, baseDir) {
-  import spark.implicits._
 
   def save(name: String, index: String, method: String, nObs: Long, maxTs: Long): Unit =
-    publish(name, index, method, Seq((nObs, maxTs)).toDF("n_obs", "max_ts"))
+    publish(name, index, method, StampStore.Schema, Array(Row(nObs, maxTs)))
 
   def matches(name: String, index: String, method: String, nObs: Long, maxTs: Long): Boolean =
     current(name, index, method).exists { e =>
       val r = e.rows.head
       r.getLong(0) == nObs && r.getLong(1) == maxTs
     }
+}
+
+object StampStore {
+  /** The schema `Seq((nObs, maxTs)).toDF` derives. */
+  private val Schema = StructType(Seq(
+    StructField("n_obs", LongType, nullable = false),
+    StructField("max_ts", LongType, nullable = false)))
 }
 
 /** The forecast cache (R:9, validity R:64-82, slice-on-hit R:110).
@@ -210,8 +243,9 @@ final class ForecastCache(spark: SparkSession, baseDir: String)
   import KeyedStore.Entry
   import spark.implicits._
 
+  /** Collecting a local frame, as the engine saves, runs no Spark job. */
   def save(name: String, index: String, method: String, points: DataFrame): Unit =
-    publish(name, index, method, points)
+    publish(name, index, method, points.schema, points.collect())
 
   def isValid(name: String, index: String, method: String, horizon: Int): Boolean =
     current(name, index, method).exists(covers(_, horizon))

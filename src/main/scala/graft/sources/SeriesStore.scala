@@ -11,6 +11,13 @@ import org.apache.spark.sql.functions._
   */
 final case class Series(element: String, values: Array[Double])
 
+/** A [[Series]] with the identity of the window it was read from: the
+  * row count and max event time (epoch nanos) of its observations, the
+  * stamp `Engine` records at train time. `days` holds each value's
+  * calendar day (epoch days) on the dated path and is empty otherwise. */
+final case class StampedSeries(element: String, days: Array[Int], values: Array[Double],
+    nObs: Long, maxTs: Long)
+
 /** The engine's `searchElement` (R:23-40): scan the observation store with
   * server-side filter + project + sort + limit, returning either the
   * positional series shape (`returnDF = FALSE`, R:31-33) or the
@@ -40,23 +47,67 @@ object SeriesStore {
     * (R:28). Ties broken by event_id for determinism. Emits
     * (element, step, ts, value) with step = 1-based position.
     */
-  def observations(spark: SparkSession, sfDir: String, elements: Seq[String] = Nil): DataFrame = {
-    val base = events(spark, sfDir)
+  def observations(spark: SparkSession, sfDir: String, elements: Seq[String] = Nil): DataFrame =
+    window(events(spark, sfDir).withColumnRenamed("event_type", "element"), elements)
+
+  /** The capped, ordered window of `base` (which has element, ts,
+    * event_id and value columns): (element, step, ts, value). */
+  private def window(base: DataFrame, elements: Seq[String]): DataFrame = {
+    val observed = base
       // a null measurement is not an observation: keep it out of the
       // series (and out of step numbering) rather than letting it NPE
       // the non-nullable Series encoder downstream; the predicate
       // pushes down to the scan like the element filter
       .filter(col("value").isNotNull)
-      .select(col("event_type").as("element"), col("ts"), col("event_id"), col("value").cast("double"))
+      .select(col("element"), col("ts"), col("event_id"), col("value").cast("double"))
     val filtered =
-      if (elements.isEmpty) base
-      else if (elements.size == 1) base.filter(col("element") === elements.head)
-      else base.filter(col("element").isin(elements: _*))
+      if (elements.isEmpty) observed
+      else if (elements.size == 1) observed.filter(col("element") === elements.head)
+      else observed.filter(col("element").isin(elements: _*))
     val w = Window.partitionBy(col("element")).orderBy(col("ts").asc, col("event_id").asc)
     filtered
       .withColumn("step", row_number().over(w))
       .filter(col("step") <= MaxSeriesLength)
       .select(col("element"), col("step"), col("ts"), col("value"))
+  }
+
+  /** The one per-element aggregate every series read selects from: the
+    * ordered values (`pts`), their calendar form (`dated`) and the
+    * window's stamp (`n_obs`, `max_ts`). The ordered collect happens
+    * inside one task per element via sort_array(collect_list); the 10k
+    * cap guarantees it fits. Catalyst prunes the aggregates a reader
+    * does not select, so each read plans only its own. */
+  private def perElement(window: DataFrame): DataFrame =
+    window
+      .select(col("element"), col("step"), expr(s"CAST(ts DIV ${Tables.NanosPerDay} AS INT)").as("d"),
+        col("value"), col("ts"))
+      .groupBy(col("element"))
+      .agg(
+        sort_array(collect_list(struct(col("step"), col("value")))).as("pts"),
+        sort_array(collect_list(struct(col("step"), col("d"), col("value")))).as("dated"),
+        count(lit(1)).as("n_obs"),
+        max(col("ts")).as("max_ts"))
+
+  /** One [[StampedSeries]] per element, from one read of its window: the
+    * values and the stamp come from the same rows. The positional path
+    * (`dated = false`) reads the element-partitioned mirror when it is
+    * fresh, like [[series]]; the dated path (Prophet's, R:35-38) reads
+    * the events store, like [[datedSeries]]. Never cached. */
+  def stampedSeries(spark: SparkSession, sfDir: String, elements: Seq[String],
+      dated: Boolean): Dataset[StampedSeries] = {
+    import spark.implicits._
+    val source =
+      if (dated) observations(spark, sfDir, elements)
+      else {
+        val mirror = mirrorDir(sfDir)
+        if (mirrorFresh(sfDir, mirror)) mirrorWindow(spark, mirror, elements)
+        else observations(spark, sfDir, elements)
+      }
+    perElement(source).select(col("element"),
+      (if (dated) col("dated.d") else typedLit(Array.empty[Int])).as("days"),
+      col(if (dated) "dated.value" else "pts.value").as("values"),
+      col("n_obs").as("nObs"), col("max_ts").as("maxTs"))
+      .as[StampedSeries]
   }
 
   /** `searchElement(..., returnDF = FALSE)` (R:31-33): positional series,
@@ -71,10 +122,9 @@ object SeriesStore {
       .select(col("element"), Tables.tsDay("ts").as("ds"), col("value").as("y"))
 
   /** Materialize one dense series per element — the `ts(values, ...)`
-    * construction (R:32) — as a distributed Dataset. The ordered collect
-    * happens inside one task per element via sort_array(collect_list);
-    * the 10k cap guarantees it fits. This is the engine's one genuine
-    * shuffle on the fit path (SURVEY.md §4).
+    * construction (R:32) — as a distributed Dataset: [[stampedSeries]]'
+    * values. This is the engine's one genuine shuffle on the fit path
+    * (SURVEY.md §4).
     *
     * When the element-partitioned mirror of this corpus exists (laid
     * out once via [[ensurePartitioned]] — the administrative step a
@@ -86,15 +136,8 @@ object SeriesStore {
     * end-to-end. */
   def series(spark: SparkSession, sfDir: String, elements: Seq[String] = Nil): Dataset[Series] = {
     import spark.implicits._
-    def build = {
-      val mirror = mirrorDir(sfDir)
-      if (mirrorFresh(sfDir, mirror)) seriesFromPartitioned(spark, mirror, elements)
-      else observations(spark, sfDir, elements)
-        .groupBy(col("element"))
-        .agg(sort_array(collect_list(struct(col("step"), col("value")))).as("pts"))
-        .select(col("element"), col("pts.value").as("values"))
-        .as[Series]
-    }
+    def build = stampedSeries(spark, sfDir, elements, dated = false)
+      .select(col("element"), col("values")).as[Series]
     // the full-store read feeds EVERY fit query — materialize it once
     // per (app, corpus): one (element, values) row per series, ≤10k
     // points each, so the persisted table is per-series-bounded, not
@@ -161,21 +204,15 @@ object SeriesStore {
   def seriesFromPartitioned(spark: SparkSession, partitionedDir: String,
       elements: Seq[String] = Nil): Dataset[Series] = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val base = spark.read.parquet(partitionedDir)
-      .filter(col("value").isNotNull) // same null-observation rule as [[observations]]
-      .select(col("element"), col("ts"), col("event_id"), col("value").cast("double"))
-    val filtered =
-      if (elements.isEmpty) base
-      else base.filter(col("element").isin(elements: _*))
-    val w = Window.partitionBy(col("element")).orderBy(col("ts").asc, col("event_id").asc)
-    filtered
-      .withColumn("step", row_number().over(w))
-      .filter(col("step") <= MaxSeriesLength)
-      .groupBy(col("element"))
-      .agg(sort_array(collect_list(struct(col("step"), col("value")))).as("pts"))
+    perElement(mirrorWindow(spark, partitionedDir, elements))
       .select(col("element"), col("pts.value").as("values"))
       .as[Series]
+  }
+
+  /** [[observations]] over a pre-partitioned store. */
+  private def mirrorWindow(spark: SparkSession, partitionedDir: String, elements: Seq[String]): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    window(spark.read.parquet(partitionedDir), elements)
   }
 
   /** Calendar gap-fill with last-observation-carried-forward — the
@@ -224,12 +261,8 @@ object SeriesStore {
     * asc, values) — the only path that keeps dates (R:35-38, R:369). */
   def datedSeries(spark: SparkSession, sfDir: String, elements: Seq[String] = Nil): Dataset[(String, Array[Int], Array[Double])] = {
     import spark.implicits._
-    observations(spark, sfDir, elements)
-      .select(col("element"), col("step"),
-        expr(s"CAST(ts DIV ${Tables.NanosPerDay} AS INT)").as("d"), col("value"))
-      .groupBy(col("element"))
-      .agg(sort_array(collect_list(struct(col("step"), col("d"), col("value")))).as("pts"))
-      .select(col("element"), col("pts.d").as("days"), col("pts.value").as("values"))
+    stampedSeries(spark, sfDir, elements, dated = true)
+      .select(col("element"), col("days"), col("values"))
       .as[(String, Array[Int], Array[Double])]
   }
 }

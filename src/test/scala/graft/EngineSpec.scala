@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Methods
-import graft.engine.{Engine, Forecaster, Names}
+import graft.engine.{Engine, Forecaster, KeyedStore, Names}
+import graft.sources.SeriesStore
 
 /** The generic wrapper skeleton (R:104-124): 3-branch cache logic, warm
   * cache on train, horizon>14 persist rule, name sanitization.
@@ -436,6 +437,162 @@ class EngineSpec extends AnyFunSuite with TempDirs {
     val maxNanos = (epoch0.getEpochSecond + 54L * 3600L) * 1000000000L
     assert(invalidating.stamps.matches(name, idx, Methods.SES, 55L, maxNanos),
       "retrain records the post-append observation stamp")
+  }
+
+  /** The three store roots of `eng`'s base directory, with their stores. */
+  private def stores(eng: Engine): Seq[(String, KeyedStore)] =
+    Seq("forecastModels" -> eng.models, "observationStamps" -> eng.stamps, "forecastsCache" -> eng.cache)
+
+  private def sentinelPoints(name: String, mean: Double, steps: Int = 14): DataFrame = {
+    import spark.implicits._
+    (1 to steps).map(st => graft.core.ForecastPoint(name, Methods.SES, st, -1, -2, mean, 2, 1)).toDF()
+  }
+
+  test("store publishes and a branch-(b) re-forecast run no Spark job") {
+    val eng = new Engine(spark, tempDir("graft-engine-jobfree"))
+    val name = "purchase"
+    val idx = eng.indexName(sfDir)
+    eng.forecast(name, sfDir, Methods.SES, 7, 14).collect()
+    val params = graft.models.ModelParams(Map("core" -> Array(42.0, 1.0, 0.3)), Map.empty)
+    val points = sentinelPoints(name, 7.5)
+    val (_, modelJobs, _) = sparkWork(eng.models.save(name, idx, Methods.SES, params))
+    val (_, stampJobs, _) = sparkWork(eng.stamps.save(name, idx, Methods.SES, 3L, 4L))
+    val (_, cacheJobs, _) = sparkWork(eng.cache.save(name, idx, Methods.SES, points))
+    assert((modelJobs, stampJobs, cacheJobs) == ((0, 0, 0)), "models / stamps / cache save jobs")
+    val (out, reforecastJobs, _) = sparkWork(eng.forecast(name, sfDir, Methods.SES, 7, 21).collect())
+    assert(reforecastJobs == 0, "a branch-(b) re-forecast runs no Spark job")
+    assert(out.length == 21 && out.forall(_.getAs[Double]("mean") == 42.0), "re-forecast from the saved params")
+  }
+
+  test("a published generation reads back through spark.read.parquet as the index holds it") {
+    val base = tempDir("graft-engine-readback")
+    val eng = new Engine(spark, base)
+    val name = "purchase"
+    val idx = eng.indexName(sfDir)
+    eng.models.save(name, idx, Methods.SES,
+      graft.models.ModelParams(Map("core" -> Array(1.5, 2.5), "x" -> Array.empty[Double]), Map("k" -> "v")))
+    eng.stamps.save(name, idx, Methods.SES, 40L, 1234567890123L)
+    eng.cache.save(name, idx, Methods.SES, sentinelPoints(name, 3.25))
+    stores(eng).foreach { case (root, store) =>
+      val entry = store.current(name, idx, Methods.SES).get
+      val gen = new java.io.File(s"$base/$root/${Names.key(name, idx, Methods.SES)}", entry.gen.name)
+      assert(!gen.list().contains("_SUCCESS"), s"$root: no write-job marker")
+      val read = spark.read.parquet(gen.getPath)
+      assert(read.schema == entry.schema, s"$root: schema")
+      assert(read.collect().toSeq == entry.rows.toSeq, s"$root: rows")
+      // a peer's index, filled by that read, agrees with the writer's
+      val peer = stores(new Engine(spark, base)).toMap.apply(root).current(name, idx, Methods.SES).get
+      assert(peer.schema == entry.schema && peer.rows.toSeq == entry.rows.toSeq, s"$root: peer entry")
+    }
+  }
+
+  test("a generation written by a Spark write job still loads, and has the footer a publish writes") {
+    // stores laid down before publishes ran on the driver hold
+    // `df.write.parquet` generations, with a _SUCCESS marker
+    import spark.implicits._
+    val base = tempDir("graft-engine-legacy")
+    val name = "purchase"
+    val idx = new Engine(spark, base).indexName(sfDir)
+    def keyDir(root: String) = s"$base/$root/${Names.key(name, idx, Methods.SES)}"
+    def legacy(root: String, df: DataFrame): Unit = {
+      val gen = s"${keyDir(root)}/g-1-legacy"
+      df.write.parquet(gen)
+      assert(new java.io.File(gen, "_SUCCESS").isFile)
+    }
+    /** The Parquet schema and key-value metadata of a generation's file. */
+    def footer(gen: String) = {
+      val file = new java.io.File(gen).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(new org.apache.hadoop.fs.Path(file.getPath), spark.sparkContext.hadoopConfiguration))
+      try {
+        val meta = reader.getFooter.getFileMetaData
+        (meta.getSchema, meta.getKeyValueMetaData.asScala.toMap)
+      } finally reader.close()
+    }
+    legacy("forecastModels",
+      Seq((Map("core" -> Seq(606.0, 1.0, 0.3)), Map.empty[String, String])).toDF("dparams", "sparams"))
+    legacy("observationStamps", Seq((40L, 1234L)).toDF("n_obs", "max_ts"))
+    legacy("forecastsCache", sentinelPoints(name, 808.0))
+    val eng = new Engine(spark, base)
+    assert(eng.models.load(name, idx, Methods.SES).d("core").toSeq == Seq(606.0, 1.0, 0.3))
+    assert(eng.stamps.matches(name, idx, Methods.SES, 40L, 1234L))
+    val hit = eng.forecast(name, sfDir, Methods.SES, 7, 5).collect()
+    assert(hit.length == 5 && hit.forall(_.getAs[Double]("mean") == 808.0), "branch (a) on the legacy cache")
+    // branch (b) publishes the next generation beside the legacy one
+    val reforecast = eng.forecast(name, sfDir, Methods.SES, 7, 20).collect()
+    assert(reforecast.length == 20 && reforecast.forall(_.getAs[Double]("mean") == 606.0))
+    val again = new Engine(spark, base).cache.loadSliced(name, idx, Methods.SES, 20).collect()
+    assert(again.length == 20 && again.forall(_.getAs[Double]("mean") == 606.0))
+    // a driver-side publish of the same content writes the same footer
+    eng.models.save(name, idx, Methods.SES, graft.models.ModelParams(Map("core" -> Array(606.0, 1.0, 0.3)), Map.empty))
+    eng.stamps.save(name, idx, Methods.SES, 40L, 1234L)
+    stores(eng).foreach { case (root, store) =>
+      val published = s"${keyDir(root)}/${store.current(name, idx, Methods.SES).get.gen.name}"
+      assert(footer(published) == footer(s"${keyDir(root)}/g-1-legacy"), s"$root: footer")
+    }
+  }
+
+  test("a publish deletes abandoned _tmp-/_old- entries older than the fixed age, and only those") {
+    val base = tempDir("graft-engine-reclaim")
+    val eng = new Engine(spark, base)
+    val name = "purchase"
+    val idx = eng.indexName(sfDir)
+    eng.stamps.save(name, idx, Methods.SES, 1L, 1L)
+    val dir = new org.apache.hadoop.fs.Path(s"$base/observationStamps/${Names.key(name, idx, Methods.SES)}")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def plant(entry: String, ageMs: Long): org.apache.hadoop.fs.Path = {
+      val p = new org.apache.hadoop.fs.Path(dir, entry)
+      fs.create(new org.apache.hadoop.fs.Path(p, "part-00000.parquet")).close()
+      if (ageMs > 0) fs.setTimes(p, System.currentTimeMillis() - ageMs, -1)
+      p
+    }
+    val oldTmp = plant("_tmp-crashed", 2 * KeyedStore.AbandonedAfterMs)
+    val oldRetired = plant("_old-crashed", 2 * KeyedStore.AbandonedAfterMs)
+    val freshTmp = plant("_tmp-in-flight", 0)
+    eng.stamps.save(name, idx, Methods.SES, 2L, 2L)
+    assert(!fs.exists(oldTmp) && !fs.exists(oldRetired), "abandoned entries are deleted")
+    assert(fs.exists(freshTmp), "an entry younger than the fixed age stays")
+    assert(eng.stamps.matches(name, idx, Methods.SES, 2L, 2L))
+  }
+
+  test("a train records the stamp of the rows it fitted, with and without the element mirror") {
+    // a corpus of its own, so the mirror is absent until laid out here:
+    // two elements, a null measurement and a tie on ts, on which the
+    // window's event_id order decides
+    import spark.implicits._
+    val corpus = tempDir("graft-stamp-corpus")
+    val epoch0 = java.time.Instant.parse("2024-03-01T00:00:00Z")
+    val name = "metric"
+    val rows = (0 until 60).map { i =>
+      (i.toLong, java.sql.Timestamp.from(epoch0.plusSeconds(i.toLong / 2 * 86400L)),
+        if (i == 17) null else java.lang.Double.valueOf(20.0 + 3 * math.sin(i / 3.0) + i % 7),
+        if (i % 10 == 9) "other" else name)
+    }
+    rows.toDF("event_id", "ts", "value", "event_type")
+      .selectExpr("event_id", "ts", "CAST(NULL AS BIGINT) AS user_id", "event_type", "value", "'{}' AS props")
+      .write.parquet(s"$corpus/events.parquet")
+    val expected = SeriesStore.observations(spark, corpus, Seq(name))
+      .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
+        org.apache.spark.sql.functions.max("ts")).head()
+    val (n, t) = (expected.getLong(0), expected.getLong(1))
+    assert(n == 53L, "the null measurement and the other element are not observations")
+    try Seq(false, true).foreach { mirrored =>
+      if (mirrored) SeriesStore.ensurePartitioned(spark, corpus)
+      val plan = SeriesStore.series(spark, corpus, Seq(name)).queryExecution.executedPlan.toString
+      // only the mirror's scan has partition filters (its element column)
+      assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(plan).nonEmpty == mirrored, s"mirror read: $plan")
+      val eng = new Engine(spark, tempDir("graft-stamp-store"))
+      val idx = eng.indexName(corpus)
+      Seq(Methods.SES, Methods.HYBRID, Methods.PROPHET).foreach { m =>
+        assert(eng.forecast(name, corpus, m, 7, 7).collect().length == 7)
+        assert(eng.stamps.matches(name, idx, m, n, t), s"$m (mirror: $mirrored): recorded stamp")
+      }
+    } finally {
+      val mirror = new java.io.File(SeriesStore.mirrorDir(corpus))
+      if (mirror.exists()) java.nio.file.Files.walk(mirror.getParentFile.toPath)
+        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+    }
   }
 
   test("availableMethods mirrors the reference registry byte-for-byte (R:6-7)") {
