@@ -1,19 +1,19 @@
 package graft.engine
 
-import java.io.{FileNotFoundException, IOException}
-import java.util.UUID
+import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-import graft.core.ForecastPoint
+import graft.core.{ForecastPoint, Generations}
+import graft.core.Generations.Gen
 import graft.models.ModelParams
 
 /** Key sanitization + composition — `gsub("[^[:alnum:] ]", "", name)` and
@@ -35,19 +35,11 @@ object Names {
   * code addresses HDFS/S3 on a real cluster.
   *
   * Layout: each key directory holds immutable generations
-  * `g-<seq>-<uuid>`, each one Parquet table, and the newest generation by
-  * (seq, uuid) is the key's value. [[publish]] takes the rows on the
-  * driver and writes them from there, with Spark's own Parquet file
-  * writer, as one file in a hidden `_tmp-<uuid>` directory: no Spark job
-  * runs, and there is no `_SUCCESS` marker (a generation written by a
-  * Spark write job, with one, reads the same). It makes the directory
-  * visible with one atomic rename to `g-<highest seq + 1>-<uuid>` (the
-  * uuid breaks ties between concurrent writers). It then retires every
-  * generation older than the previous one, renaming it to a hidden name
-  * before deleting it, so a reader never sees a half-written or
-  * half-deleted table. A writer that dies mid-publish leaves its hidden
-  * directory behind; a later publish on the key deletes hidden entries
-  * older than [[KeyedStore.AbandonedAfterMs]].
+  * ([[graft.core.Generations]]), each one Parquet table, and the newest
+  * is the key's value. [[publish]] takes the rows on the driver and
+  * writes them from there, with Spark's own Parquet file writer, as one
+  * file: no Spark job runs, and there is no `_SUCCESS` marker (a
+  * generation written by a Spark write job, with one, reads the same).
   *
   * Every read lists the key directory once, so a publish by another
   * instance or process is seen on the next call, and answers from a
@@ -70,15 +62,9 @@ abstract class KeyedStore(spark: SparkSession, baseDir: String) {
 
   private def fsOf(p: Path): FileSystem = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def listing(dir: Path): Seq[FileStatus] =
-    try fsOf(dir).listStatus(dir).toSeq
-    catch { case _: FileNotFoundException => Nil }
-
-  /** Published generations among `listed`, newest first. */
-  private def generations(listed: Seq[FileStatus]): Seq[Gen] =
-    listed.flatMap(st => Gen.parse(st.getPath.getName)).sorted(Gen.order.reverse)
-
-  private def generations(dir: Path): Seq[Gen] = generations(listing(dir))
+  /** Published generations of the key directory, newest first. */
+  private def generations(dir: Path): Seq[Gen] =
+    Generations.generations(Generations.listing(fsOf(dir), dir))
 
   private def remember(key: String, e: Entry): Unit =
     entries.merge(key, e, (old: Entry, nu: Entry) => if (Gen.order.gteq(old.gen, nu.gen)) old else nu)
@@ -119,49 +105,12 @@ abstract class KeyedStore(spark: SparkSession, baseDir: String) {
   protected def publish(name: String, index: String, method: String, schema: StructType,
       rows: Array[Row]): Unit = {
     val dir = keyDir(name, index, method)
-    val fs = fsOf(dir)
-    val id = UUID.randomUUID().toString
-    val tmp = new Path(dir, s"_tmp-$id")
-    try Bridge.writeParquet(spark, schema, rows.toSeq, tmp)
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    val listed = listing(dir)
-    val gen = Gen(generations(listed).headOption.fold(1L)(_.seq + 1), id)
-    if (!fs.rename(tmp, new Path(dir, gen.name))) {
-      fs.delete(tmp, true)
-      throw new IOException(s"could not publish generation ${gen.name} under $dir")
-    }
+    val gen = Generations.publish(fsOf(dir), dir)(Bridge.writeParquet(spark, schema, rows.toSeq, _))
     remember(Names.key(name, index, method), Entry(gen, Bridge.asNullable(schema), rows))
-    val abandoned = System.currentTimeMillis() - AbandonedAfterMs
-    listed.filter(st => Hidden.matches(st.getPath.getName) && st.getModificationTime < abandoned)
-      .foreach(st => Try(fs.delete(st.getPath, true)))
-    generations(dir).filter(_.seq < gen.seq - 1).foreach { old =>
-      val retired = new Path(dir, s"_old-${UUID.randomUUID()}")
-      // a concurrent writer may have retired it first
-      if (Try(fs.rename(new Path(dir, old.name), retired)).getOrElse(false)) fs.delete(retired, true)
-    }
   }
 }
 
 object KeyedStore {
-  /** Age past which a hidden `_tmp-*` or `_old-*` entry is taken to be
-    * left by a writer that died: far above any publish's duration. */
-  val AbandonedAfterMs: Long = 60L * 60L * 1000L
-
-  private val Hidden = """_(tmp|old)-.+""".r
-
-  /** A published generation: directory `g-<seq>-<uuid>`. */
-  private[graft] final case class Gen(seq: Long, id: String) {
-    def name: String = s"g-$seq-$id"
-  }
-  private object Gen {
-    val order: Ordering[Gen] = Ordering.by(g => (g.seq, g.id))
-    private val Pattern = """g-(\d+)-(.+)""".r
-    def parse(dirName: String): Option[Gen] = dirName match {
-      case Pattern(seq, id) => Some(Gen(seq.toLong, id))
-      case _ => None
-    }
-  }
-
   /** One generation's rows, as the Parquet read reports them, and the
     * DataFrames built from them, keyed by the number of rows they hold. */
   private[graft] final case class Entry(gen: Gen, schema: StructType, rows: Array[Row]) {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * every call. At 100 TB that makes every text query a corpus scan;
   * a lexical search must be a PRUNED POSTINGS READ.
   *
-  * Store layout under `corpusStoreRoot(sfDir)/lex_index` (the IVF
+  * Store layout under `DerivedLayout.corpusRoot(sfDir)/lex_index` (the IVF
   * store's freshness/marker/append discipline, `Similarity.scala`):
   *
   *  - `postings/` — (term, doc_id, tf, dl) PARTITIONED BY `tb` =
@@ -50,7 +50,7 @@ object Lexical {
   val LexBuckets = 64
 
   private[graft] def lexIndexDir(sfDir: String, tag: String = ""): String =
-    Similarity.corpusStoreRoot(sfDir) + "/lex_index" + tag
+    graft.sources.DerivedLayout.corpusRoot(sfDir) + "/lex_index" + tag
 
   /** Driver-side twin of `pmod(xxhash64(term), LexBuckets)` — same
     * XXH64 seed (42) and pmod semantics as the Spark expressions that

@@ -700,20 +700,6 @@ object Similarity {
   private val lshBucketCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Double), Option[(Int, DataFrame)]]()
 
-  /** Injective corpus → store-directory mapping: the sanitized path is
-    * human-readable but LOSSY (`/a/b` and `/a_b` both sanitize to
-    * `_a_b` — ADVICE r14: two corpora colliding on one store directory
-    * would serve one corpus's persisted index for the other), so an
-    * xxhash64 of the RAW path is appended to make the mapping
-    * injective. */
-  private[graft] def corpusStoreRoot(sfDir: String): String = {
-    val u = org.apache.spark.unsafe.types.UTF8String.fromString(sfDir)
-    val h = org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes(), 42L)
-    sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store") + "/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_") + f"_$h%016x"
-  }
-
   /** Crash/concurrency-safe store (re)build (ADVICE r14: an in-place
     * `mode("overwrite")` deletes the old tables while the old _SUCCESS
     * marker still stands, so a reader racing a rebuild could load a
@@ -760,7 +746,7 @@ object Similarity {
     * any later session. `g` is recovered from the stored key arrays. */
   private[graft] def lshIndexDir(sfDir: String, tables: Int, bucketLength: Double,
       tag: String = ""): String =
-    corpusStoreRoot(sfDir) +
+    graft.sources.DerivedLayout.corpusRoot(sfDir) +
       s"/lsh_index_t${tables}_b${bucketLength.toString.replace('.', 'p').replace('-', 'm')}" +
       tag
 
@@ -1386,10 +1372,10 @@ object Similarity {
     * None). The array→VectorUDT bridge is MLlib's own `array_to_vector`
     * (codegen-friendly, no Scala UDF). */
   /** On-disk location of the persisted IVF index for (corpus, nlist
-    * key) — the ingest-time index store (round 14). Root overridable
-    * with SPARK_GRAFT_STORE_DIR, the `sources/` mirror convention. */
+    * key) — the ingest-time index store (round 14), under the corpus's
+    * [[graft.sources.DerivedLayout.corpusRoot]] beside its mirrors. */
   private[graft] def indexDir(sfDir: String, nlist: Int): String =
-    corpusStoreRoot(sfDir) + s"/ivf_index_k${math.max(nlist, 0)}"
+    graft.sources.DerivedLayout.corpusRoot(sfDir) + s"/ivf_index_k${math.max(nlist, 0)}"
 
   /** The index is usable only while the embedding store still EXISTS
     * and the marker is no older than it — a regenerated corpus

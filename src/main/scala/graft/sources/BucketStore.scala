@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Hash-bucketed mirrors of the two FACT tables, co-bucketed on the join
   * key — the storage-layout move that deletes the orders⋈lineitem shuffle
@@ -19,12 +19,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * count is [[Buckets]], a cluster deployment scales it with the data
   * (the plan shape is bucket-count-independent).
   *
-  * Bucketed writes go through the session catalog (`saveAsTable` — plain
-  * `.parquet()` cannot record bucket metadata), registered as EXTERNAL
-  * tables under /tmp so nothing lands in the repo; the in-memory catalog
-  * dies with the session but the files are rewritten idempotently per
-  * (app, corpus) via the memoized build, exactly like
-  * [[SeriesStore.ensurePartitioned]].
+  * Each table's mirror is a [[DerivedLayout]] generation keyed on its
+  * source file's identity. A bucketed write must go through the session
+  * catalog (`saveAsTable` — plain `.parquet()` cannot record bucket
+  * metadata), so the build saves a staging EXTERNAL table into the
+  * generation's hidden directory and drops the staging entry (the files
+  * stay); each session then registers the published generation under a
+  * name of its own with `CREATE TABLE … CLUSTERED BY … LOCATION`.
   */
 object BucketStore {
 
@@ -32,48 +33,35 @@ object BucketStore {
     * thousands of tiny files at test SFs. */
   val Buckets = 8
 
-  private val builds = new java.util.concurrent.ConcurrentHashMap[(String, String), Unit]()
-
-  private def ident(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9_]", "_").replaceAll("^_+", "")
-
-  private def tableName(sfDir: String, table: String): String =
-    s"graft_${ident(sfDir)}_${table}_by_orderkey"
-
-  private def tablePath(sfDir: String, table: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store") + "/" +
-      ident(sfDir) + s"/${table}_bucketed"
+  private val JoinKeys = Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey")
 
   /** Write (or reuse) the co-bucketed orders + lineitem mirrors for one
-    * corpus; memoized per (app, corpus) like the series mirror. */
+    * corpus and register them in the session. */
   def ensureBucketed(spark: SparkSession, sfDir: String): Unit =
-    builds.computeIfAbsent((spark.sparkContext.applicationId, sfDir), _ => {
-      write(spark, sfDir, "orders", "o_orderkey")
-      write(spark, sfDir, "lineitem", "l_orderkey")
-    })
+    JoinKeys.foreach { case (table, _) => registered(spark, sfDir, table) }
 
-  private def write(spark: SparkSession, sfDir: String, table: String, key: String): Unit = {
-    val name = tableName(sfDir, table)
-    // regenerated source (the driver rewrites testdata between rounds)
-    // must force a rebuild — stale bucketed rows would silently skew
-    // every consumer (the shared mirror-freshness rule)
-    val fresh = new java.io.File(tablePath(sfDir, table), "_SUCCESS").isFile &&
-      new java.io.File(tablePath(sfDir, table), "_SUCCESS").lastModified >=
-        new java.io.File(s"$sfDir/$table.parquet").lastModified
-    if (spark.catalog.tableExists(name) && !fresh) spark.sql(s"DROP TABLE $name")
-    if (!spark.catalog.tableExists(name)) {
+  /** The session table over the generation of `table`'s mirror that
+    * serves its source as it is now. */
+  private def registered(spark: SparkSession, sfDir: String, table: String): String = {
+    val key = JoinKeys.toMap.apply(table)
+    val gen = DerivedLayout.ensure(spark, DerivedLayout.dir(sfDir, s"${table}_bucketed"),
+        s"$sfDir/$table.parquet") { out =>
+      val staging = "graft_staging_" + java.util.UUID.randomUUID().toString.replace('-', '_')
       Tables.table(spark, sfDir, table)
         .write.format("parquet")
         .bucketBy(Buckets, key).sortBy(key)
-        .option("path", tablePath(sfDir, table))
-        .mode(SaveMode.Overwrite)
-        .saveAsTable(name)
+        .option("path", out)
+        .saveAsTable(staging)
+      spark.sql(s"DROP TABLE $staging")
     }
+    val name = s"graft_${table}_" + new java.io.File(gen).getName.replaceAll("[^A-Za-z0-9]", "_")
+    if (!spark.catalog.tableExists(name))
+      spark.sql(s"CREATE TABLE $name (${spark.read.parquet(gen).schema.toDDL}) USING parquet " +
+        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS LOCATION '$gen'")
+    name
   }
 
-  /** The bucketed mirror of one fact table (builds both on first use). */
-  def bucketed(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    ensureBucketed(spark, sfDir)
-    spark.table(tableName(sfDir, table))
-  }
+  /** The bucketed mirror of one fact table (builds it on first use). */
+  def bucketed(spark: SparkSession, sfDir: String, table: String): DataFrame =
+    spark.table(registered(spark, sfDir, table))
 }

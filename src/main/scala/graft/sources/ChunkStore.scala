@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Scan-parallelism mirror of the driver's single-file tables — the
@@ -28,10 +30,11 @@ import org.apache.spark.sql.functions.col
   * of 128 MB-1 GB files. Same rows, same schema, same values — layout
   * only, which is why serving reads from it cannot change any declared
   * query's result (the oracle scans the raw table; the 238-query hash
-  * gate pins equality). Mirrors live under the same /tmp store as the
-  * bucketed tables, memoized per (app, corpus), freshness-checked
-  * against the raw file's mtime exactly like [[LayoutStore]] — an
-  * ingest-time cost, not query cost.
+  * gate pins equality). Each mirror is a [[DerivedLayout]] generation
+  * keyed on its raw file's identity, like every mirror in `sources/` —
+  * an ingest-time cost, not query cost. A generation with fewer part
+  * files than the session's chunk count is rebuilt, and a build that
+  * fails (say, an unwritable store directory) serves the raw store.
   *
   * Tables whose raw store is already a DIRECTORY (Spark-written fixture
   * corpora in tests, gate corpora) pass through untouched — they are
@@ -55,20 +58,6 @@ object ChunkStore {
   private val MinRawBytes = 256L * 1024L
   private val TargetFileBytes = 128L * 1024L * 1024L
 
-  private val builds = new java.util.concurrent.ConcurrentHashMap[(String, String, String), Boolean]()
-
-  private def ident(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9_]", "_").replaceAll("^_+", "")
-
-  private def mirrorPath(sfDir: String, name: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store") + "/" +
-      ident(sfDir) + "/chunked/" + name
-
-  private def fresh(raw: java.io.File, mirror: String): Boolean = {
-    val marker = new java.io.File(mirror, "_SUCCESS")
-    marker.isFile && marker.lastModified >= raw.lastModified
-  }
-
   /** Part-file count of an existing mirror — a narrower session may have
     * built it first (the driver's correctness runs use 4 cores; its bench
     * uses 32), and a 4-chunk mirror caps every scan of a 32-core session
@@ -88,12 +77,23 @@ object ChunkStore {
     * per-task work, and the 32/16/8 A/B (OPTIMIZATION_r20.md §1) showed
     * N=8 fastest or tied on EVERY probe query — heavy scans included
     * (sql_part_concentration 1.03/0.87/0.65 s, doc_perplexity
-    * 1.26/0.99/0.69 s, join_skew_report 2.54/1.58/1.10 s warm).
-    * Override: SPARK_GRAFT_CHUNK_PARTS. */
+    * 1.26/0.99/0.69 s, join_skew_report 2.54/1.58/1.10 s warm). */
   private def numChunks(spark: SparkSession, rawBytes: Long): Int =
-    sys.env.get("SPARK_GRAFT_CHUNK_PARTS").map(_.toInt).getOrElse(
-      math.max(math.min(spark.sparkContext.defaultParallelism, 8),
-        math.ceil(rawBytes.toDouble / TargetFileBytes).toInt))
+    math.max(math.min(spark.sparkContext.defaultParallelism, 8),
+      math.ceil(rawBytes.toDouble / TargetFileBytes).toInt)
+
+  /** The generation of mirror `name` that serves `raw` as it is now,
+    * building it from `frame` hash-clustered and sorted on `keys`; None
+    * when the build fails. */
+  private def chunked(spark: SparkSession, sfDir: String, name: String, raw: java.io.File,
+      frame: => DataFrame, keys: Seq[String]): Option[String] = {
+    val n = numChunks(spark, raw.length)
+    try Some(DerivedLayout.ensure(spark, DerivedLayout.dir(sfDir, s"chunked/$name"), raw.getPath,
+        chunkCount(_) >= n) { out =>
+      frame.repartition(n, keys.map(col): _*).sortWithinPartitions(keys.map(col): _*).write.parquet(out)
+    })
+    catch { case NonFatal(_) => None }
+  }
 
   /** Read `name` through the chunked mirror when eligible (building it
     * on first use), else the raw store. Row set and schema are
@@ -101,25 +101,12 @@ object ChunkStore {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val rawPath = s"$sfDir/$name.parquet"
     val raw = new java.io.File(rawPath)
-    layoutKeys.get(name) match {
+    val mirror = layoutKeys.get(name) match {
       case Some(keys) if raw.isFile && raw.length >= MinRawBytes =>
-        val p = mirrorPath(sfDir, name)
-        val built = builds.computeIfAbsent(
-          (spark.sparkContext.applicationId, sfDir, name), _ => {
-            val n = numChunks(spark, raw.length)
-            if (!fresh(raw, p) || chunkCount(p) < n) {
-              try {
-                spark.read.parquet(rawPath)
-                  .repartition(n, keys.map(col): _*)
-                  .sortWithinPartitions(keys.map(col): _*)
-                  .write.mode(SaveMode.Overwrite).parquet(p)
-                true
-              } catch { case _: Throwable => false } // unwritable store dir → serve raw
-            } else true
-          })
-        if (built) spark.read.parquet(p) else spark.read.parquet(rawPath)
-      case _ => spark.read.parquet(rawPath)
+        chunked(spark, sfDir, name, raw, spark.read.parquet(rawPath), keys)
+      case _ => None
     }
+    spark.read.parquet(mirror.getOrElse(rawPath))
   }
 
   /** Chunked mirror of the NORMALIZED events frame (`ts` already the
@@ -134,22 +121,9 @@ object ChunkStore {
   def eventsMirror(spark: SparkSession, sfDir: String,
       normalized: DataFrame): DataFrame = {
     val raw = new java.io.File(s"$sfDir/events.parquet")
-    if (!(raw.isFile && raw.length >= MinRawBytes)) return normalized
-    val p = mirrorPath(sfDir, "events")
-    val built = builds.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, "events"), _ => {
-        val n = numChunks(spark, raw.length)
-        if (!fresh(raw, p) || chunkCount(p) < n) {
-          try {
-            normalized
-              .repartition(n, col("event_id"))
-              .sortWithinPartitions(col("event_id"))
-              .write.mode(SaveMode.Overwrite).parquet(p)
-            true
-          } catch { case _: Throwable => false }
-        } else true
-      })
-    if (built) spark.read.parquet(p) else normalized
+    if (!(raw.isFile && raw.length >= MinRawBytes)) normalized
+    else chunked(spark, sfDir, "events", raw, normalized, Seq("event_id"))
+      .fold(normalized)(spark.read.parquet(_))
   }
 
   /** Pre-build every eligible mirror for one corpus — the ingest-time

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,9 +8,9 @@ import org.apache.spark.sql.types._
   * a deployment actually receives feeds in (the reference's own source
   * is Elasticsearch JSON documents,
   * `TimeSeriesFunctions_GPL_0.5.1.R:23-40`; this is that wire format as
-  * a Spark file source). The mirror is derived from the parquet store
-  * once per (app, corpus) under the standard freshness rule, and the
-  * reader applies an EXPLICIT schema — at 100 TB, schema inference is a
+  * a Spark file source). Each mirror (JSONL, CSV, ORC) is a
+  * [[DerivedLayout]] generation keyed on the parquet events store's
+  * identity, and the reader applies an EXPLICIT schema — at 100 TB, schema inference is a
   * full extra pass over the text before the first real job, so a
   * production reader always ships its schema.
   *
@@ -24,14 +24,15 @@ import org.apache.spark.sql.types._
   */
 object JsonStore {
 
-  private val builds = new java.util.concurrent.ConcurrentHashMap[(String, String), Unit]()
-
-  private def ident(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9_]", "_").replaceAll("^_+", "")
-
-  private def path(sfDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store") + "/" +
-      ident(sfDir) + "/events_jsonl"
+  /** The generation of `layout` that serves the events store as it is
+    * now, writing the events' reader-schema columns with `write`. */
+  private def mirror(spark: SparkSession, sfDir: String, layout: String)(
+      write: DataFrameWriter[Row] => String => Unit): String =
+    DerivedLayout.ensure(spark, DerivedLayout.dir(sfDir, layout), s"$sfDir/events.parquet") {
+      // Tables.events normalizes ts to epoch-nanos LONG for every store
+      // generation, so the text tiers carry integers
+      write(Tables.events(spark, sfDir).select(EventSchema.fieldNames.map(col): _*).write)
+    }
 
   /** The explicit reader schema (ts = epoch-nanos LONG). */
   val EventSchema: StructType = StructType(Seq(
@@ -43,32 +44,12 @@ object JsonStore {
     StructField("props", StringType)))
 
   /** Write (or reuse) the JSONL mirror for one corpus. */
-  def ensureJsonl(spark: SparkSession, sfDir: String): Unit =
-    builds.computeIfAbsent((spark.sparkContext.applicationId, sfDir), _ => {
-      val p = path(sfDir)
-      if (!LayoutStore.mirrorFresh(sfDir, p)) {
-        // Tables.events normalizes ts to epoch-nanos LONG for every
-        // store generation, so the JSON carries integers
-        Tables.events(spark, sfDir)
-          .select(col("event_id"), col("ts"),
-            col("user_id"), col("event_type"), col("value"), col("props"))
-          .write.mode(SaveMode.Overwrite).json(p)
-      }
-    })
+  def ensureJsonl(spark: SparkSession, sfDir: String): Unit = { eventsFromJson(spark, sfDir); () }
 
   /** Events read back from the JSONL mirror with the explicit schema
     * (no inference pass). */
-  def eventsFromJson(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureJsonl(spark, sfDir)
-    spark.read.schema(EventSchema).json(path(sfDir))
-  }
-
-  private def csvPath(sfDir: String): String =
-    // _v2 layout: explicit null sentinel (see [[CsvNullSentinel]]); the
-    // version suffix keeps a pre-sentinel mirror from ever being read
-    // back with the new options
-    sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store") + "/" +
-      ident(sfDir) + "/events_csv_v2"
+  def eventsFromJson(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.schema(EventSchema).json(mirror(spark, sfDir, "events_jsonl")(_.json))
 
   /** CSV null sentinel: Spark's default maps BOTH null and '' to an
     * empty field, so an empty-string `props`/`event_type` would
@@ -79,35 +60,26 @@ object JsonStore {
     * standard). `emptyValue` pins ''-round-tripping explicitly. */
   val CsvNullSentinel = "\\N"
 
-  /** CSV sibling of the JSONL mirror — same freshness rule, same
+  /** CSV sibling of the JSONL mirror — same identity rule, same
     * explicit schema, same exactness contract. The `props` column
     * carries embedded JSON (quotes + commas), so the writer's RFC-4180
     * quoting/escaping is part of what the parity check proves. */
-  def ensureCsv(spark: SparkSession, sfDir: String): Unit =
-    builds.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir + "#csv"), _ => {
-        val p = csvPath(sfDir)
-        if (!LayoutStore.mirrorFresh(sfDir, p)) {
-          Tables.events(spark, sfDir)
-            .select(col("event_id"), col("ts"),
-              col("user_id"), col("event_type"), col("value"), col("props"))
-            .write.mode(SaveMode.Overwrite)
-            .option("header", "true").option("escape", "\"")
-            .option("nullValue", CsvNullSentinel)
-            .option("emptyValue", "\"\"")
-            .csv(p)
-        }
-      })
+  def ensureCsv(spark: SparkSession, sfDir: String): Unit = { eventsFromCsv(spark, sfDir); () }
 
-  /** Events read back from the CSV mirror with the explicit schema. */
-  def eventsFromCsv(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureCsv(spark, sfDir)
+  /** Events read back from the CSV mirror with the explicit schema. The
+    * `_v2` layout carries the explicit null sentinel; the version suffix
+    * keeps a pre-sentinel mirror from ever being read back with the new
+    * options. */
+  def eventsFromCsv(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.schema(EventSchema)
       .option("header", "true").option("escape", "\"")
       .option("nullValue", CsvNullSentinel)
       .option("emptyValue", "")
-      .csv(csvPath(sfDir))
-  }
+      .csv(mirror(spark, sfDir, "events_csv_v2")(
+        _.option("header", "true").option("escape", "\"")
+          .option("nullValue", CsvNullSentinel)
+          .option("emptyValue", "\"\"")
+          .csv))
 
   private def dailyOf(events: DataFrame): DataFrame =
     events
@@ -131,10 +103,6 @@ object JsonStore {
   def dailyFromCsv(spark: SparkSession, sfDir: String): DataFrame =
     dailyOf(eventsFromCsv(spark, sfDir))
 
-  private def orcPath(sfDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store") + "/" +
-      ident(sfDir) + "/events_orc"
-
   /** ORC sibling — the second COLUMNAR format of the source surface
     * (the Hive-ecosystem interchange format Spark supports natively).
     * Unlike the text tiers there is no serialization round-trip to
@@ -144,23 +112,11 @@ object JsonStore {
     * batched reads, predicate pushdown into ORC stripe/row-group
     * statistics, column pruning — so a deployment whose lake speaks
     * ORC gets the same plans this engine ships for parquet. */
-  def ensureOrc(spark: SparkSession, sfDir: String): Unit =
-    builds.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir + "#orc"), _ => {
-        val p = orcPath(sfDir)
-        if (!LayoutStore.mirrorFresh(sfDir, p)) {
-          Tables.events(spark, sfDir)
-            .select(col("event_id"), col("ts"),
-              col("user_id"), col("event_type"), col("value"), col("props"))
-            .write.mode(SaveMode.Overwrite).orc(p)
-        }
-      })
+  def ensureOrc(spark: SparkSession, sfDir: String): Unit = { eventsFromOrc(spark, sfDir); () }
 
   /** Events read back from the ORC mirror with the explicit schema. */
-  def eventsFromOrc(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureOrc(spark, sfDir)
-    spark.read.schema(EventSchema).orc(orcPath(sfDir))
-  }
+  def eventsFromOrc(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.schema(EventSchema).orc(mirror(spark, sfDir, "events_orc")(_.orc))
 
   def dailyFromOrc(spark: SparkSession, sfDir: String): DataFrame =
     dailyOf(eventsFromOrc(spark, sfDir))

@@ -26,71 +26,45 @@ import org.apache.spark.sql.functions._
   * clock ([[Tables.tsDay]] semantics) so the slice predicate is a plain
   * integer equality — the form parquet min/max stats answer directly.
   *
-  * Mirrors land under the same /tmp store as the bucketed tables and
-  * are memoized per (app, corpus), an ingest-time cost like every other
-  * layout in `sources/`.
+  * Both mirrors are [[DerivedLayout]] generations keyed on the events
+  * store's identity, an ingest-time cost like every other layout in
+  * `sources/`.
   */
 object LayoutStore {
 
-  private val builds = new java.util.concurrent.ConcurrentHashMap[(String, String), Unit]()
+  private def source(sfDir: String): String = s"$sfDir/events.parquet"
 
-  private def ident(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9_]", "_").replaceAll("^_+", "")
-
-  private def path(sfDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store") + "/" +
-      ident(sfDir) + "/events_sorted"
-
-  /** A mirror is usable only when its _SUCCESS marker is no older than
-    * the source store — a regenerated corpus (the driver rewrites
-    * testdata between rounds) must rebuild, never silently serve stale
-    * rows (the SeriesStore freshness rule). */
-  private[sources] def mirrorFresh(sfDir: String, mirror: String): Boolean = {
-    val marker = new java.io.File(mirror, "_SUCCESS")
-    marker.isFile &&
-      marker.lastModified >= new java.io.File(s"$sfDir/events.parquet").lastModified
-  }
-
-  /** Events with `ts` normalized to epoch-nanos LONG — the driver
-    * store's native clock; a synthetic TIMESTAMP store is accepted
-    * through the same dual-type rule as `EventAnalytics`. */
-  private def eventsNanos(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-    normalizeTs(ev)
-  }
-
-  private def normalizeTs(ev: DataFrame): DataFrame = {
+  /** `ts` as epoch-nanos LONG — the driver store's native clock, and
+    * what [[Tables.events]] serves; a synthetic TIMESTAMP batch is
+    * accepted through the same dual-type rule as `EventAnalytics` — plus
+    * the stored `ts_day`. */
+  private def withDay(ev: DataFrame): DataFrame = {
     val tsLong = ev.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => col("ts")
       case _ => unix_micros(col("ts")) * lit(1000L)
     }
     ev.withColumn("ts", tsLong)
+      .withColumn("ts_day", expr(s"CAST(ts DIV ${Tables.NanosPerDay} AS INT)"))
   }
 
   /** Write (or reuse) the time-sorted events mirror for one corpus. */
-  def ensureSorted(spark: SparkSession, sfDir: String): Unit =
-    builds.computeIfAbsent((spark.sparkContext.applicationId, sfDir), _ => {
-      val p = path(sfDir)
-      if (!mirrorFresh(sfDir, p)) {
-        eventsNanos(spark, sfDir)
-          .withColumn("ts_day", expr(s"CAST(ts DIV ${Tables.NanosPerDay} AS INT)"))
-          .repartitionByRange(col("ts"))
-          .sortWithinPartitions(col("ts"))
-          .write.mode(SaveMode.Overwrite).parquet(p)
-      }
-    })
+  def ensureSorted(spark: SparkSession, sfDir: String): Unit = { sortedGen(spark, sfDir); () }
+
+  /** The sorted mirror's generation that serves the events store as it
+    * is now. */
+  private def sortedGen(spark: SparkSession, sfDir: String): String =
+    DerivedLayout.ensure(spark, DerivedLayout.dir(sfDir, "events_sorted"), source(sfDir)) { out =>
+      withDay(Tables.events(spark, sfDir))
+        .repartitionByRange(col("ts"))
+        .sortWithinPartitions(col("ts"))
+        .write.parquet(out)
+    }
 
   /** The sorted mirror (builds on first use). `ts` is epoch-nanos LONG
     * like [[Tables.events]]; `ts_day` is the stored integer epoch-day
     * the row-group stats prune on. */
-  def sorted(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureSorted(spark, sfDir)
-    spark.read.parquet(path(sfDir))
-  }
-
-  private def zPath(sfDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store") + "/" +
-      ident(sfDir) + "/events_zorder"
+  def sorted(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(sortedGen(spark, sfDir))
 
   /** Bit-spread a 16-bit value to even bit positions of a 32-bit word
     * (the classic Morton-code magic-mask ladder) — pure codegen'd
@@ -116,28 +90,20 @@ object LayoutStore {
     * whole-stage-codegen'd, no UDF. Day and user take the low 16 bits
     * each (the test corpora span ~30 days × ≤64k users; a deployment
     * widens the masks with the id domain). */
-  def ensureZOrdered(spark: SparkSession, sfDir: String): Unit =
-    zBuilds.computeIfAbsent((spark.sparkContext.applicationId, sfDir), _ => {
-      val p = zPath(sfDir)
-      if (!mirrorFresh(sfDir, p)) {
-        val z = spread16(expr(s"ts DIV ${Tables.NanosPerDay}"))
-          .bitwiseOR(shiftleft(spread16(col("user_id")), 1))
-        eventsNanos(spark, sfDir)
-          .withColumn("ts_day", expr(s"CAST(ts DIV ${Tables.NanosPerDay} AS INT)"))
-          .withColumn("zval", z)
-          .repartitionByRange(col("zval"))
-          .sortWithinPartitions(col("zval"))
-          .write.mode(SaveMode.Overwrite).parquet(p)
-      }
-    })
-
-  private val zBuilds = new java.util.concurrent.ConcurrentHashMap[(String, String), Unit]()
+  def ensureZOrdered(spark: SparkSession, sfDir: String): Unit = { zOrdered(spark, sfDir); () }
 
   /** The z-ordered mirror (builds on first use). */
-  def zOrdered(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureZOrdered(spark, sfDir)
-    spark.read.parquet(zPath(sfDir))
-  }
+  def zOrdered(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(DerivedLayout.ensure(spark, DerivedLayout.dir(sfDir, "events_zorder"),
+        source(sfDir)) { out =>
+      val z = spread16(expr(s"ts DIV ${Tables.NanosPerDay}"))
+        .bitwiseOR(shiftleft(spread16(col("user_id")), 1))
+      withDay(Tables.events(spark, sfDir))
+        .withColumn("zval", z)
+        .repartitionByRange(col("zval"))
+        .sortWithinPartitions(col("zval"))
+        .write.parquet(out)
+    })
 
   /** Incremental ingest: APPEND one batch of events to the mirror
     * without rewriting it. The pruning invariant is per ROW GROUP, not
@@ -151,13 +117,13 @@ object LayoutStore {
     * `newEvents` must carry the raw schema (`ts` epoch-nanos LONG or
     * TIMESTAMP, plus the event columns); `ts_day` is derived here so
     * callers cannot write a mirror whose stats column disagrees with
-    * the clock. */
+    * the clock. The batch lands in the current generation, which keeps
+    * serving while the events store's identity is unchanged. */
   def appendBatch(spark: SparkSession, sfDir: String, newEvents: DataFrame): Unit = {
-    ensureSorted(spark, sfDir)
-    normalizeTs(newEvents)
-      .withColumn("ts_day", expr(s"CAST(ts DIV ${Tables.NanosPerDay} AS INT)"))
+    val gen = sortedGen(spark, sfDir)
+    withDay(newEvents)
       .repartitionByRange(col("ts"))
       .sortWithinPartitions(col("ts"))
-      .write.mode(SaveMode.Append).parquet(path(sfDir))
+      .write.mode(SaveMode.Append).parquet(gen)
   }
 }

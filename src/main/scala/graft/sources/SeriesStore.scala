@@ -89,20 +89,15 @@ object SeriesStore {
         max(col("ts")).as("max_ts"))
 
   /** One [[StampedSeries]] per element, from one read of its window: the
-    * values and the stamp come from the same rows. The positional path
-    * (`dated = false`) reads the element-partitioned mirror when it is
-    * fresh, like [[series]]; the dated path (Prophet's, R:35-38) reads
-    * the events store, like [[datedSeries]]. Never cached. */
+    * values and the stamp come from the same rows. Both the positional
+    * path (`dated = false`) and the dated path (Prophet's, R:35-38) read
+    * the element-partitioned mirror when one serves the events store as
+    * it is now, else the events store. Never cached. */
   def stampedSeries(spark: SparkSession, sfDir: String, elements: Seq[String],
       dated: Boolean): Dataset[StampedSeries] = {
     import spark.implicits._
-    val source =
-      if (dated) observations(spark, sfDir, elements)
-      else {
-        val mirror = mirrorDir(sfDir)
-        if (mirrorFresh(sfDir, mirror)) mirrorWindow(spark, mirror, elements)
-        else observations(spark, sfDir, elements)
-      }
+    val source = DerivedLayout.current(spark, mirrorDir(sfDir), eventsPath(sfDir))
+      .fold(observations(spark, sfDir, elements))(mirrorWindow(spark, _, elements))
     perElement(source).select(col("element"),
       (if (dated) col("dated.d") else typedLit(Array.empty[Int])).as("days"),
       col(if (dated) "dated.value" else "pts.value").as("values"),
@@ -126,9 +121,10 @@ object SeriesStore {
     * values. This is the engine's one genuine shuffle on the fit path
     * (SURVEY.md §4).
     *
-    * When the element-partitioned mirror of this corpus exists (laid
-    * out once via [[ensurePartitioned]] — the administrative step a
-    * 100 TB deployment does at ingest), the fit path reads THAT:
+    * When the element-partitioned mirror of this corpus serves its
+    * events store as it is now (laid out via [[ensurePartitioned]] — the
+    * administrative step a 100 TB deployment does at ingest), the fit
+    * path reads THAT:
     * element filters become `PartitionFilters` (zero bytes read for
     * other elements) and the scan is already corpus-column-pruned.
     * Results are identical either way — the closed-form forecast
@@ -139,50 +135,44 @@ object SeriesStore {
     def build = stampedSeries(spark, sfDir, elements, dated = false)
       .select(col("element"), col("values")).as[Series]
     // the full-store read feeds EVERY fit query — materialize it once
-    // per (app, corpus): one (element, values) row per series, ≤10k
-    // points each, so the persisted table is per-series-bounded, not
-    // corpus-bounded. Element-filtered reads stay uncached (partition-
-    // pruned, already cheap).
+    // per (app, corpus, source identity): one (element, values) row per
+    // series, ≤10k points each, so the persisted table is per-series-
+    // bounded, not corpus-bounded. A regenerated source replaces (and
+    // unpersists) the entry. Element-filtered reads stay uncached
+    // (partition-pruned, already cheap).
     if (elements.nonEmpty) build
-    else seriesCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir),
-      _ => build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    else {
+      val id = DerivedLayout.identity(eventsPath(sfDir))
+      seriesCache.compute((spark.sparkContext.applicationId, sfDir), (_, old) =>
+        if (old != null && old._1 == id) old
+        else {
+          if (old != null) old._2.unpersist()
+          (id, build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        })._2
+    }
   }
 
   private val seriesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Dataset[Series]]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Dataset[Series])]()
 
   /** Release the cached series tables (long-lived multi-corpus sessions). */
   def clearCaches(): Unit = {
-    seriesCache.values.forEach(ds => { ds.unpersist(); () })
+    seriesCache.values.forEach(e => { e._2.unpersist(); () })
     seriesCache.clear()
   }
 
-  /** Location of the element-partitioned mirror for a corpus dir
-    * (override the root with SPARK_GRAFT_STORE_DIR). */
-  def mirrorDir(sfDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_STORE_DIR", "/tmp/graft_store") + "/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_") + "/events_by_element"
+  private def eventsPath(sfDir: String): String = s"$sfDir/events.parquet"
 
-  /** A mirror is usable when its _SUCCESS marker exists and is no older
-    * than the source events store (stale mirrors are rebuilt, never
-    * silently read). */
-  private def mirrorFresh(sfDir: String, mirror: String): Boolean = {
-    val marker = new java.io.File(mirror, "_SUCCESS")
-    marker.isFile && marker.lastModified >= new java.io.File(s"$sfDir/events.parquet").lastModified
-  }
-
-  private val mirrorBuilds = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The layout directory of the element-partitioned mirror of a corpus
+    * ([[DerivedLayout]]: its generations live under it). */
+  def mirrorDir(sfDir: String): String = DerivedLayout.dir(sfDir, "events_by_element")
 
   /** Build (or reuse) the element-partitioned mirror of `sfDir`'s
     * events store — the explicit layout step; [[series]] then picks it
-    * up automatically. Memoized per JVM; other JVMs reuse the on-disk
-    * copy via the freshness check. */
+    * up automatically. Returns the generation directory that serves
+    * the events store as it is now. */
   def ensurePartitioned(spark: SparkSession, sfDir: String): String =
-    mirrorBuilds.computeIfAbsent(sfDir, { _ =>
-      val out = mirrorDir(sfDir)
-      if (!mirrorFresh(sfDir, out)) writePartitioned(spark, sfDir, out)
-      out
-    })
+    DerivedLayout.ensure(spark, mirrorDir(sfDir), eventsPath(sfDir))(writePartitioned(spark, sfDir, _))
 
   /** Write the observation store pre-partitioned by element — the
     * SURVEY.md §4 scale move: with the store laid out this way, the

@@ -489,13 +489,13 @@ object EventIngest {
       "doc_ingest_replay_noop")
     if (!new java.io.File(s"$sfDir/documents.parquet").exists)
       return metrics.map((_, true)) // vacuously ok without a corpus
-    val gc = graft.ops.Similarity.corpusStoreRoot(sfDir) + "/doc_ingest_gate"
+    val gc = graft.sources.DerivedLayout.corpusRoot(sfDir) + "/doc_ingest_gate"
     deleteRecursively(new java.io.File(gc))
     // the gate corpus has its OWN store root — reset it too, plus the
     // session caches pointing at it (corpus-SCOPED: a global clear
     // here wiped the shared corpus's gate/scan caches between the two
     // bench passes and made lex_index_lifecycle_gates recompute twice)
-    deleteRecursively(new java.io.File(graft.ops.Similarity.corpusStoreRoot(gc)))
+    deleteRecursively(new java.io.File(graft.sources.DerivedLayout.corpusRoot(gc)))
     graft.ops.Lexical.clearLexCachesForCorpus(gc)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.filter(pmod(col("doc_id"), lit(7L)) =!= 3L)

@@ -546,8 +546,8 @@ class EngineSpec extends AnyFunSuite with TempDirs {
       if (ageMs > 0) fs.setTimes(p, System.currentTimeMillis() - ageMs, -1)
       p
     }
-    val oldTmp = plant("_tmp-crashed", 2 * KeyedStore.AbandonedAfterMs)
-    val oldRetired = plant("_old-crashed", 2 * KeyedStore.AbandonedAfterMs)
+    val oldTmp = plant("_tmp-crashed", 2 * graft.core.Generations.AbandonedAfterMs)
+    val oldRetired = plant("_old-crashed", 2 * graft.core.Generations.AbandonedAfterMs)
     val freshTmp = plant("_tmp-in-flight", 0)
     eng.stamps.save(name, idx, Methods.SES, 2L, 2L)
     assert(!fs.exists(oldTmp) && !fs.exists(oldRetired), "abandoned entries are deleted")
@@ -578,9 +578,13 @@ class EngineSpec extends AnyFunSuite with TempDirs {
     assert(n == 53L, "the null measurement and the other element are not observations")
     try Seq(false, true).foreach { mirrored =>
       if (mirrored) SeriesStore.ensurePartitioned(spark, corpus)
-      val plan = SeriesStore.series(spark, corpus, Seq(name)).queryExecution.executedPlan.toString
-      // only the mirror's scan has partition filters (its element column)
-      assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(plan).nonEmpty == mirrored, s"mirror read: $plan")
+      // the positional read and PROPHET's dated read: only the mirror's
+      // scan has partition filters (its element column)
+      Seq(SeriesStore.series(spark, corpus, Seq(name)).queryExecution,
+        SeriesStore.datedSeries(spark, corpus, Seq(name)).queryExecution).foreach { qe =>
+        val plan = qe.executedPlan.toString
+        assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(plan).nonEmpty == mirrored, s"mirror read: $plan")
+      }
       val eng = new Engine(spark, tempDir("graft-stamp-store"))
       val idx = eng.indexName(corpus)
       Seq(Methods.SES, Methods.HYBRID, Methods.PROPHET).foreach { m =>
