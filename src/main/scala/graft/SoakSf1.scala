@@ -390,7 +390,7 @@ object SoakSf1 {
       import spark.implicits._
       val work = s"$dir/lshappend100k"
       deleteRecursively(new java.io.File(work))
-      graft.ops.Similarity.clearCaches()
+      graft.core.SessionCache.invalidate(work)
       spark.read.parquet(vecsPath)
         .write.mode("overwrite").parquet(s"$work/embeddings.parquet")
       val t0 = System.nanoTime()
@@ -400,7 +400,7 @@ object SoakSf1 {
         (id, embedding(id), (id % 10).toInt)
       }.toDF("vec_id", "embedding", "label")
         .write.mode("append").parquet(s"$work/embeddings.parquet")
-      graft.ops.Similarity.clearCaches()
+      graft.core.SessionCache.invalidate(work)
       val t1 = System.nanoTime()
       val added = graft.ops.Similarity.lshIndexAppend(spark, work)
       val appendS = (System.nanoTime() - t1) / 1e9
@@ -414,7 +414,7 @@ object SoakSf1 {
         (id, embedding(id), (id % 10).toInt)
       }.toDF("vec_id", "embedding", "label")
         .write.mode("append").parquet(s"$work/embeddings.parquet")
-      graft.ops.Similarity.clearCaches()
+      graft.core.SessionCache.invalidate(work)
       // MECHANICAL fast-path evidence (verdict r18 ask #2): the second
       // append must do literally ZERO store-scale guard scans — counted
       // by StoreLifecycle, not inferred from wall-clock
@@ -631,7 +631,7 @@ object SoakSf1 {
       }.toDF("doc_id", "lang", "source", "text", "n_chars")
         .write.mode("overwrite").parquet(path)
     }
-    graft.ops.Bpe.clearCaches()
+    graft.core.SessionCache.invalidate(bpeDir)
     val t0 = System.nanoTime()
     val merges = graft.ops.Bpe.bpeMergesBatched(spark, bpeDir,
       targetMerges = 1024, maxRounds = 32).collect()
@@ -673,7 +673,7 @@ object SoakSf1 {
       }.toDF("doc_id", "lang", "source", "text", "n_chars")
         .write.mode("overwrite").parquet(path)
     }
-    graft.ops.Bpe.clearCaches()
+    graft.core.SessionCache.invalidate(bpeDir)
     val t0 = System.nanoTime()
     val merges = graft.ops.Bpe.bpeMergesBatched(spark, bpeDir,
       targetMerges = 30720, maxRounds = Bpe30kMaxRounds).collect()
@@ -1375,20 +1375,12 @@ object SoakSf1 {
       // so the ratio measures the real computation's scaling and the
       // min-of-2 removes only steal. The first enforcement pass timed
       // warm runs, which made the gate VACUOUS for any query behind a
-      // ConcurrentHashMap cache — bpe_merges_batched's second run read
+      // session cache — bpe_merges_batched's second run read
       // its cached result in 0.08 s, so a quadratic regression in the
       // trainer could never have tripped the ceiling.
-      def clearAllOpCaches(): Unit = {
-        graft.ops.Dedup.clearCaches(); graft.ops.NearDup.clearCaches()
-        graft.ops.Similarity.clearCaches(); graft.ops.TextAnalysis.clearCaches()
-        graft.ops.QualityModel.clearCaches(); graft.ops.Affinity.clearCaches()
-        graft.ops.Bpe.clearCaches(); graft.ops.ScalePatterns.clearCaches()
-        graft.ops.Multimodal.clearCaches(); graft.ops.SketchStreamGates.clearCaches()
-        graft.ops.Curation.clearCaches(); graft.engine.Conformal.clearCaches()
-      }
       def best2(name: String, d: String): Double = {
         def once(): Double = {
-          clearAllOpCaches()
+          graft.core.SessionCache.clearAll()
           val s = System.nanoTime()
           SparkEntry.queries(name)(spark, d).count()
           (System.nanoTime() - s) / 1e9

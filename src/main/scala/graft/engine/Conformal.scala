@@ -3,6 +3,9 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Distribution-free forecast intervals and hierarchical reconciliation —
   * the two post-hoc layers a forecasting service wraps around the
   * reference's point/parametric families (`TimeSeriesFunctions_GPL_0.5.1.R`
@@ -502,12 +505,9 @@ object Conformal {
     * refit loops), shared by `fc_conformal_fit`, `fc_conformal_ext`
     * and `conformal_coverage_gates` — one computation per (corpus, h,
     * freq) serves all three (the fitBandCache discipline, widened). */
-  private val fitFullCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), DataFrame]()
-
   private[graft] def conformalFitFull(spark: SparkSession, sfDir: String,
-      h: Int = 14, freq: Int = 7): DataFrame = fitFullCache.computeIfAbsent(
-    (spark.sparkContext.applicationId, sfDir, h, freq), _ => {
+      h: Int = 14, freq: Int = 7): DataFrame =
+    SessionCache(spark, Tables.paths(sfDir, "events"), "conformal.fitFull", h, freq) {
       import spark.implicits._
       val f = freq
       val hh = h
@@ -523,7 +523,7 @@ object Conformal {
       }.toDF("element", "method", "step", "l1", "l2", "mid", "u1", "u2",
           "hits80", "hits95", "m")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   private def projectBands(full: DataFrame): DataFrame =
     full.select(col("element"), col("method"), col("step"),
@@ -595,18 +595,6 @@ object Conformal {
     * CalibrationSpec, structure in OpsSpec). Fan-out shape is
     * FitGates': one (element, method) refit loop per task, fits
     * bounded by [[FitSliceLen]]. */
-  /** Session cache for [[conformalFit]]: the result is deterministic
-    * per (corpus, h, freq) and the k-origin REFIT backtest behind it
-    * (≤ 25 full ARIMA/ETS/Theta fits per (element, method)) is the
-    * suite's single most expensive fit surface — the bench's second
-    * pass and any repeat consumer must read the persisted bands, not
-    * re-run ~900 optimizer searches (the fit_quality_gates /
-    * cosine_topk verdict-cache discipline). */
-  def clearCaches(): Unit = {
-    fitFullCache.values.forEach(df => { df.unpersist(); () })
-    fitFullCache.clear()
-  }
-
   /** The ORIGINAL three-method fit-conformal surface (`fc_conformal_fit`,
     * round 11): ARIMA/ETS/THETA bands at the full cheap budget. Now a
     * projection of [[conformalFitFull]] so the ten-method table is

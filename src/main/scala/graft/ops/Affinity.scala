@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Market-basket affinity mining and graph centrality over the order
   * baskets — the recommendation-adjacent pair of operators every retail
   * or co-occurrence pipeline runs after sessionization (engine extension
@@ -53,25 +56,14 @@ object Affinity {
     * (affinity, rules, triples, pagerank, triangles, clustering, BFS,
     * and the plan-gate builders); without the cache each one re-mines
     * the corpus. Same (appId, corpus) keying and persist discipline as
-    * the minhash/signature caches; `clearCaches` releases it. */
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, DataFrame, DataFrame)]()
-
-  /** Release the cached pair tables (see `Dedup.clearCaches`). */
-  def clearCaches(): Unit = {
-    pairsCache.values.forEach { case (p, ic, t) =>
-      p.unpersist(); ic.unpersist(); t.unpersist()
-    }
-    pairsCache.clear()
-  }
-
+    * the minhash/signature caches. */
   private def frequentPairs(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    pairsCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir), { _ =>
+    SessionCache(spark, Tables.paths(sfDir, "lineitem"), "affinity.frequentPairs") {
       val (p, ic, t) = frequentPairsDirect(spark, sfDir)
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       (p.persist(lvl), ic.persist(lvl), t.persist(lvl))
-    })
+    }
 
   private def frequentPairsDirect(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, DataFrame) = {

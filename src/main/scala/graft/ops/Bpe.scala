@@ -6,6 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Distributed byte-pair-encoding merge TRAINING — the step past
   * `token_pmi`'s merge-priority statistic: actually learn the first K
   * merge rules from the corpus (engine extension past the reference
@@ -62,28 +65,12 @@ object Bpe {
     * not caching was the consumer re-training at 2.2 s per bench
     * invocation). The final symbol table is vocabulary-sized and
     * already lineage-cut, so holding it is metadata-scale. */
-  private val stateCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), (Seq[(Long, String, String, Long)], DataFrame)]()
-
-  /** Release the trained-state cache (the resident-service release
-    * contract every other session cache honors — see
-    * `Dedup.clearCaches`). The held symbol tables are localCheckpointed
-    * DataFrames whose blocks live in executor block memory; dropping
-    * the references lets the ContextCleaner reclaim the checkpoint
-    * RDDs once no plan holds them. */
-  def clearCaches(): Unit = {
-    stateCache.values.forEach(v => v._2.unpersist())
-    stateCache.clear()
-    batchedCache.clear()
-  }
-
   /** Training loop shared by the merge table and its consumer: returns
     * the merge rules AND the final per-word symbol table. */
   private def trainState(spark: SparkSession, sfDir: String, steps: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) =
-    stateCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, steps),
-      _ => trainStateUncached(spark, sfDir, steps))
+    SessionCache(spark, Tables.paths(sfDir, "documents"),
+        "bpe.trainState", steps)(trainStateUncached(spark, sfDir, steps))
 
   private def trainStateUncached(spark: SparkSession, sfDir: String, steps: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
@@ -175,15 +162,12 @@ object Bpe {
       targetMerges: Int = 64, maxRounds: Int = 8,
       perRoundCap: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
-    batchedCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, targetMerges, maxRounds, perRoundCap),
-      _ => trainBatchedUncached(spark, sfDir, targetMerges, maxRounds, perRoundCap))
+    SessionCache(spark, Tables.paths(sfDir, "documents"),
+        "bpe.batchedMerges", targetMerges, maxRounds, perRoundCap)(
+      trainBatchedUncached(spark, sfDir, targetMerges, maxRounds, perRoundCap))
       .toDF("round", "step", "pair_a", "pair_b", "n_pairs")
       .orderBy(col("step"))
   }
-
-  private val batchedCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int), Seq[(Long, Long, String, String, Long)]]()
 
   private def trainBatchedUncached(spark: SparkSession, sfDir: String,
       targetMerges: Int, maxRounds: Int, perRoundCap: Int)

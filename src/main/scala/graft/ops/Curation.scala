@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Dataset-assembly operators a training-data pipeline runs AFTER
   * cleaning: deterministic splits, split-leakage (decontamination)
   * checks, repetition screening, and mixture accounting. All of them
@@ -836,26 +839,13 @@ object Curation {
     * rounding. Documents with zero words are excluded (the
     * [[gopherQualityFlags]] contract); a doc with fewer than n words
     * has no n-gram and reports 0 for that tier. */
-  /** Session cache of the tokenized (doc_id, ws, word_chars) frame:
-    * the three gram tiers and the doc spine are FOUR consumers of the
-    * same token arrays — uncached, each re-decodes the corpus text
-    * (the trigramTf lesson; at 100 TB that is 4× the scan). */
-  private val repTokensCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  /** Release the cached token frames (see `Dedup.clearCaches` for why
-    * a long-lived session needs this). */
-  def clearCaches(): Unit = {
-    repTokensCache.values.forEach(df => { df.unpersist(); () })
-    repTokensCache.clear()
-  }
-
   def gopherRepetitionFlags(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir).filter(col("text").isNotNull)
     val lowWords = filter(split(trim(org.apache.spark.sql.functions.lower(col("text"))),
       LineWs), x => x =!= lit(""))
-    val base = repTokensCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir), _ => d
+    // cached: the three gram tiers and the doc spine all read the token
+    // arrays, which uncached would re-decode the corpus text four times
+    val base = SessionCache(spark, Tables.paths(sfDir, "documents"), "curation.repetitionTokens")(d
         .select(col("doc_id"), lowWords.as("ws"),
           length(regexp_replace(col("text"), LineWs, "")).cast("long").as("word_chars"))
         .filter(size(col("ws")) > 0)

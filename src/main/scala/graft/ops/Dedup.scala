@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Deduplication operators over the `documents` table (north-star
   * extension surface). Exact dedup here; MinHash/SimHash/Jaccard variants
   * live in their own files.
@@ -190,25 +193,9 @@ object Dedup {
     * [[dupClusters]] and [[curateCorpus]] need the same labels — compute
     * once per corpus snapshot, persist (a (long, long) pair per doc —
     * metadata-scale even at 100 TB), and let every consumer reuse it. */
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Double), DataFrame]()
-
   def clusterLabels(spark: SparkSession, sfDir: String, threshold: Double = 0.95): DataFrame =
-    labelCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir, threshold),
-      _ => computeClusterLabels(spark, sfDir, threshold)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-
-  /** Release every cached label table — for long-lived sessions that
-    * churn through many corpus snapshots (the cache is keyed by corpus,
-    * so without this a resident service would accumulate one persisted
-    * table per snapshot ever touched). */
-  def clearCaches(): Unit = {
-    labelCache.values.forEach(df => { df.unpersist(); () })
-    labelCache.clear()
-    semanticLabelCache.values.forEach(df => { df.unpersist(); () })
-    semanticLabelCache.clear()
-    semanticIncrementGateCache.clear()
-  }
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "dedup.clusterLabels", threshold)(
+      computeClusterLabels(spark, sfDir, threshold).persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Near-duplicate CLUSTERS: connected components over the blocked-
     * Jaccard candidate pairs (threshold 0.95 word-unigram, the
@@ -464,8 +451,8 @@ object Dedup {
     * coarse-quantizer cell — that path is [[semanticDedupIvf]], gated
     * against this one in OpsSpec. */
   def semanticDedup(spark: SparkSession, sfDir: String, threshold: Double = 0.40): DataFrame =
-    semanticLabelCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, threshold, "exact"), _ => {
+    SessionCache(spark, Tables.paths(sfDir, "embeddings"),
+        "dedup.semanticLabels", threshold, "exact") {
         // loud cardinality guard (Similarity.ExactTierMaxRows): the
         // unblocked pair scan is the verification baseline, not a path
         // anyone should run on a corpus the IVF tier exists for
@@ -485,14 +472,7 @@ object Dedup {
           .select(col("vec_b").as("u"), col("vec_a").as("v")) // vec_a < vec_b ⇒ u > v
         semanticLabelsFromEdges(spark, sfDir, edges)
           .persist(StorageLevel.MEMORY_AND_DISK)
-      })
-
-  /** Session cache for the semantic label tables (one per dedup
-    * variant): the pair scan + star contraction is the expensive part
-    * and the result is four scalar columns per vector — metadata-scale.
-    * Same lifecycle as [[labelCache]]. */
-  private val semanticLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Double, String), DataFrame]()
+      }
 
   /** The 100 TB path for [[semanticDedup]]: block the pair scan by the
     * session-cached KMeans coarse-quantizer cell (the very clustering
@@ -520,8 +500,9 @@ object Dedup {
           .select(col("vec_id"), col("vec_id").as("cluster_id"),
             lit(0L).as("cluster_size"), lit(true).as("keep")).limit(0)
     }
-    semanticLabelCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, threshold, s"ivf$nprobe-$nlist"), _ => {
+    SessionCache(spark, Tables.paths(sfDir, "embeddings"),
+        "dedup.semanticLabels", threshold, s"ivf$nprobe",
+        Similarity.indexDir(sfDir, nlist)) {
         val a = assigned.select(col("cell"), col("vec_id").as("vec_a"), col("v").as("va"))
         val b = assigned.select(col("cell"), col("vec_id").as("vec_b"), col("v").as("vb"))
         val edges = a.join(b, Seq("cell"))
@@ -533,7 +514,7 @@ object Dedup {
           .distinct() // a pair can collide in several probed cells
         semanticLabelsFromEdges(spark, sfDir, edges)
           .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+      }
   }
 
   /** Shared tail of the two semantic-dedup paths: contract the edge
@@ -637,28 +618,22 @@ object Dedup {
       .orderBy(col("vec_id"))
   }
 
-  private val semanticIncrementGateCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Boolean]()
-
   /** Driver-hashed verdict: the IVF-blocked incremental keep-set
     * agrees with the exact cross-split recompute on ≥ 0.9 of the
     * incoming batch (the [[semanticDedupIvf]] agreement contract
     * applied to the increment). Literal-TRUE oracle. */
   def semanticIncrementGate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val key = (spark.sparkContext.applicationId, sfDir)
-    val ok = Option(semanticIncrementGateCache.get(key)).getOrElse {
+    val ok = SessionCache(spark, Tables.paths(sfDir, "embeddings"), "dedup.semanticIncrementGate") {
       val exact = semanticDedupIncrement(spark, sfDir).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
-      val computed = if (exact.isEmpty) true
+      if (exact.isEmpty) true
       else {
         val ivf = semanticDedupIncrementIvf(spark, sfDir).collect()
           .map(r => r.getLong(0) -> r.getString(1)).toMap
         val agree = exact.count { case (id, v) => ivf.get(id).contains(v) }
         agree.toDouble / exact.size >= 0.9
       }
-      semanticIncrementGateCache.put(key, computed)
-      computed
     }
     Seq(("semantic_increment_agreement", ok)).toDF("metric", "ok")
   }

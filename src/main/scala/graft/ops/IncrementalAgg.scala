@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Incrementally-maintained aggregate — the materialized-view
   * maintenance step a production feed runs on every ingest batch
   * instead of re-scanning history (engine extension past the
@@ -37,9 +40,6 @@ import org.apache.spark.sql.functions._
   * merged read in every run.
   */
 object IncrementalAgg {
-
-  private val builds =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
   /** Fold partials back to one batch when more than this many batches
     * accumulate (read-side merge stays O(aggregate) regardless; this
@@ -85,10 +85,10 @@ object IncrementalAgg {
   private def appendBatchPartials(store: String, batch: DataFrame): Unit =
     partial(batch).write.mode(SaveMode.Append).parquet(genPath(store))
 
-  /** Build the maintained store once per (app, corpus): base build over
+  /** Build the maintained store once per (app, corpus as it is now): base build over
     * the first 80% of the calendar, then two maintenance appends. */
   private def ensureMaintained(spark: SparkSession, sfDir: String): String =
-    builds.computeIfAbsent((spark.sparkContext.applicationId, sfDir), { _ =>
+    SessionCache(spark, Tables.paths(sfDir, "events"), "incrementalAgg.store") {
       val dir = graft.core.ProcessTempDir("graft-incr-agg")
       val ev = typedEvents(spark, sfDir)
       val Array(minD, maxD) = ev
@@ -102,7 +102,7 @@ object IncrementalAgg {
       appendBatchPartials(dir, ev.filter(dayNum >= c1 && dayNum < c2))
       appendBatchPartials(dir, ev.filter(dayNum >= c2))
       dir
-    })
+    }
 
   /** Fold an append-heavy partial store back to one partial set — the
     * same merge groupBy written back, preserving the pinned partial

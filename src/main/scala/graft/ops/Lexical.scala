@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Persisted LEXICAL (inverted/postings) index — the text tier's twin
   * of the ANN index store (round-17 verdict ask #1): the reference's
   * one entry point is an indexed, server-side term search
@@ -187,15 +190,16 @@ object Lexical {
   private def writeLexStats(dir: String, nDocs: Long, sumDl: Long): Unit =
     StoreLifecycle.atomicWriteText(dir, "_lex_stats", s"$nDocs\t$sumDl")
 
-  /** Serving base-relation cache per (app, store dir) — the
-    * `servingScanCache` rule: a resident service lists its postings
-    * directories once, not per query (the file-index re-listing was
-    * the measured serving-latency dominator on the vector tier,
-    * round 16). Append invalidates. */
-  private val lexScanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** Serving base relation of one resolved store table — the
+    * `Similarity` serving-scan rule: a resident service lists its
+    * postings directories once, not per query (the file-index re-listing
+    * was the measured serving-latency dominator on the vector tier,
+    * round 16). Every store mutation invalidates the store dir. */
+  private def scan(spark: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    SessionCache.pinned(spark, path, "lex.scan")(spark.read.schema(schema).parquet(path))
 
-  /** Driver-resident (app, terms path, term) → df — per QUERIED term,
+  /** Driver-resident (terms path, term) → df — per QUERIED term,
     * never per bucket (verdict r17 "what's wrong" #2: a whole-bucket
     * (term → df) map is vocabulary/64 — at 100 TB a whitespace-token
     * vocabulary is easily 10⁸ terms, hundreds of MB-to-GB of driver
@@ -204,68 +208,33 @@ object Lexical {
     * true metadata-scale residency: it grows with the query log, not
     * the corpus. df ≤ 0 (an unknown term, or one whose negative
     * deltas fully cancelled) caches as 0 so repeat queries with
-    * unknown terms stay job-free. A crude loud ceiling bounds even a
-    * pathological query log. */
-  // ~4M queried terms ≈ 300 MB ceiling; var so the spec can force the
-  // ceiling without a 4M-term fixture. Access-order LRU (ADVICE r18 /
-  // verdict ask #6): the pre-r19 overflow policy was a global clear(),
-  // cold-starting EVERY store's warm working set on one pathological
-  // distinct-term query log — now only the least-recently-queried terms
-  // age out and a post-overflow repeat query for a recently-warm term
-  // stays job-free. synchronizedMap: accessOrder makes get() a
-  // structural modification, and the soak drives serving from parallel
-  // threads; entrySet().removeIf on the synchronized view locks the
-  // same mutex.
+    * unknown terms stay job-free. A crude loud ceiling bounds each
+    * terms store's map even under a pathological query log. */
+  // The ceiling is per terms store (one `lex.termDf` entry per resolved
+  // terms path), ~4M queried terms ≈ 300 MB each: the driver holds at
+  // most (lexical stores served in the session) × that. Besides each
+  // corpus's own store, a session serves only the gates' stores
+  // (`_gate`, `_gate_ref`, the doc-ingest gate's copy), whose maps hold
+  // the gates' few query terms. var so the spec can force the ceiling
+  // without a 4M-term fixture. Access-order
+  // LRU (ADVICE r18 / verdict ask #6): the pre-r19 overflow policy was a
+  // global clear(), cold-starting the warm working set on one
+  // pathological distinct-term query log — now only the least-recently-
+  // queried terms age out and a post-overflow repeat query for a
+  // recently-warm term stays job-free. synchronizedMap: accessOrder
+  // makes get() a structural modification, and the soak drives serving
+  // from parallel threads.
   private[graft] var TermDfCacheMax = 4L << 20
-  private val termDfCache: java.util.Map[(String, String, String), java.lang.Long] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, String, String), java.lang.Long](1024, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String, String), java.lang.Long]): Boolean =
+  private def termDf(spark: SparkSession, tPath: String): java.util.Map[String, java.lang.Long] =
+    SessionCache.pinned(spark, tPath, "lex.termDf")(java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[String, java.lang.Long](1024, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
           size() > TermDfCacheMax
-      })
-  private[graft] def termDfCacheSize: Int = termDfCache.size
-  private[graft] def termDfCacheHasTerm(term: String): Boolean =
-    termDfCache.synchronized {
-      var found = false
-      val it = termDfCache.keySet.iterator
-      while (!found && it.hasNext) found = it.next()._3 == term
-      found
-    }
-
-  /** Session verdict of the tombstone-pressure check per (app, store
-    * dir) — ADVICE r17: the check inline in [[ensureLexIndex]] made
-    * EVERY serving query after any takedown pay a doclens count + a
-    * semi-join count before its pruned read; cached, steady-state
-    * queries stay a single pruned read and the check re-runs exactly
-    * once per session / after each mutation (deletes invalidate). */
-  private val lexPressureChecked =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Boolean]()
-
-  private def clearLexCaches(dir: String): Unit = {
-    lexScanCache.entrySet.removeIf(_.getKey._2.startsWith(dir + "/"))
-    termDfCache.entrySet.removeIf(_.getKey._2.startsWith(dir + "/"))
-    lexPressureChecked.entrySet.removeIf(_.getKey._2 == dir)
-  }
-
-  /** Corpus-scoped invalidation: the caches of ONE corpus's lexical
-    * store (scan/df/pressure, keyed by store dir) plus its gate
-    * verdict rows (keyed by corpus dir). Harness code touching a
-    * dedicated gate corpus must use THIS, not the global clear —
-    * doc_ingest_gates wiping every corpus's caches made
-    * lex_index_lifecycle_gates recompute on both bench passes
-    * (0.05 s cached → 11.4 s, round-18 bench window). */
-  private[graft] def clearLexCachesForCorpus(sfDir: String): Unit = {
-    clearLexCaches(lexIndexDir(sfDir))
-    lexGateCache.entrySet.removeIf(_.getKey._2 == sfDir)
-  }
-
-  private[graft] def clearAllLexCaches(): Unit = {
-    lexScanCache.clear()
-    termDfCache.clear()
-    lexPressureChecked.clear()
-    lexGateCache.clear()
-  }
+      }))
+  private def termDfMaps: Seq[java.util.Map[_, _]] =
+    SessionCache.held("lex.termDf").collect { case m: java.util.Map[_, _] => m }
+  private[graft] def termDfCacheSize: Int = termDfMaps.map(_.size).sum
+  private[graft] def termDfCacheHasTerm(term: String): Boolean = termDfMaps.exists(_.containsKey(term))
 
   /** Build (or load) the postings store for a corpus — fit-or-load,
     * the `coarseQuantizer` shape: a stale or absent store rebuilds
@@ -281,12 +250,9 @@ object Lexical {
     // common no-takedowns case short-circuits on the absent set.
     // once per session per store (ADVICE r17) — serving paths call
     // ensure per request, and this check is two count jobs; mutations
-    // invalidate via clearLexCaches so the next serve re-checks. NOT
-    // computeIfAbsent: a triggered compaction clears THIS map (the
-    // indexLifecycleGates recursive-update rule); get-then-put
-    // tolerates it, and a racing duplicate check is harmless.
-    val pk = (spark.sparkContext.applicationId, dir)
-    if (lexPressureChecked.get(pk) == null) {
+    // invalidate the store dir so the next serve re-checks (a
+    // compaction this check triggers keeps the entry it is filling).
+    SessionCache.pinned(spark, dir, "lex.pressureChecked") {
       Similarity.tombstones(spark, dir).foreach { ts =>
         val dl = spark.read.parquet(lexTablePath(dir, "doclens"))
         val total = dl.count()
@@ -299,7 +265,7 @@ object Lexical {
           compactLexIndexAt(spark, dir)
         }
       }
-      lexPressureChecked.put(pk, java.lang.Boolean.TRUE)
+      true
     }
     dir
   }
@@ -343,7 +309,7 @@ object Lexical {
           StoreLifecycle.copyDir(s"$dir/tombstones", s"$tmp/tombstones")
         ()
       }
-      clearLexCaches(dir)
+      SessionCache.invalidate(dir)
     } finally tok.unpersist()
   }
 
@@ -369,7 +335,7 @@ object Lexical {
     // renews, stale or not. The vector stores cannot make this claim
     // (no content addressing) and keep the conservative rule.
     if (added == 0L) Similarity.renewMarker(dir)
-    if (added == 0L && !markerWasFresh) clearLexCaches(dir)
+    if (added == 0L && !markerWasFresh) SessionCache.invalidate(dir)
     added
   }
 
@@ -401,9 +367,7 @@ object Lexical {
     val (nDocs, sumDl) = readLexStats(dir).getOrElse((0L, 0L))
     if (nDocs == 0L || query.isEmpty) return emptyResult()
     val buckets = query.map(termBucket).distinct
-    val postings0 = lexScanCache.computeIfAbsent(
-        (spark.sparkContext.applicationId, lexTablePath(dir, "postings")),
-        kk => spark.read.schema(postingsSchema).parquet(kk._2))
+    val postings0 = scan(spark, lexTablePath(dir, "postings"), postingsSchema)
       .where(col("tb").isin(buckets.map(x => x: Any): _*))
       .filter(col("term").isin(query: _*))
     // taken-down documents stay physical until compaction but must not
@@ -442,7 +406,7 @@ object Lexical {
       terms: Seq[String], postings: DataFrame): Map[String, Long] =
     if (new java.io.File(lexTablePath(dir, "terms"), "_SUCCESS").isFile) {
       val tPath = lexTablePath(dir, "terms")
-      val app = spark.sparkContext.applicationId
+      val dfs = termDf(spark, tPath)
       // ONE-PASS snapshot (get, never containsKey-then-get): with the
       // access-order LRU a term can be evicted between a probe and the
       // read — by concurrent puts, or by this very query's own puts once
@@ -452,19 +416,18 @@ object Lexical {
       // the query; the cache is only a best-effort warm set.
       val distinctTerms = terms.distinct
       val snap = distinctTerms.flatMap(t =>
-        Option(termDfCache.get((app, tPath, t))).map(t -> _.longValue)).toMap
+        Option(dfs.get(t)).map(t -> _.longValue)).toMap
       val missing = distinctTerms.filterNot(snap.contains)
       val got: Map[String, Long] = if (missing.nonEmpty) {
         val mb = missing.map(termBucket).distinct
-        val fetched = lexScanCache.computeIfAbsent((app, tPath),
-            kk => spark.read.schema(termsSchema).parquet(kk._2))
+        val fetched = scan(spark, tPath, termsSchema)
           .where(col("tb").isin(mb.map(x => x: Any): _*))
           .filter(col("term").isin(missing: _*))
           .groupBy(col("term")).agg(sum(col("df")).as("df"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         // absent terms cache as 0 (negative caching): repeat queries
         // with out-of-vocabulary terms must stay job-free too
-        missing.foreach(t => termDfCache.put((app, tPath, t),
+        missing.foreach(t => dfs.put(t,
           java.lang.Long.valueOf(fetched.getOrElse(t, 0L))))
         fetched
       } else Map.empty
@@ -526,9 +489,7 @@ object Lexical {
     val allTerms = queries.flatten.distinct
     if (allTerms.isEmpty) return emptyResult()
     val buckets = allTerms.map(termBucket).distinct
-    val postings0 = lexScanCache.computeIfAbsent(
-        (spark.sparkContext.applicationId, lexTablePath(dir, "postings")),
-        kk => spark.read.schema(postingsSchema).parquet(kk._2))
+    val postings0 = scan(spark, lexTablePath(dir, "postings"), postingsSchema)
       .where(col("tb").isin(buckets.map(x => x: Any): _*))
       .filter(col("term").isin(allTerms: _*))
     val postings = Similarity.tombstones(spark, dir) match {
@@ -601,9 +562,7 @@ object Lexical {
     if (nDocs == 0L) return emptyResult()
     val distinctWords = words.distinct
     val buckets = distinctWords.map(termBucket).distinct
-    val p0 = lexScanCache.computeIfAbsent(
-        (spark.sparkContext.applicationId, lexTablePath(dir, "postings")),
-        kk => spark.read.schema(postingsSchema).parquet(kk._2))
+    val p0 = scan(spark, lexTablePath(dir, "postings"), postingsSchema)
       .where(col("tb").isin(buckets.map(x => x: Any): _*))
       .filter(col("term").isin(distinctWords: _*))
     val p = Similarity.tombstones(spark, dir) match {
@@ -705,9 +664,6 @@ object Lexical {
 
   // ---- lifecycle gates (driver-hashed verdict rows) ----
 
-  private val lexGateCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(String, Boolean)]]()
-
   /** Driver-hashed verdict query for the lexical store lifecycle — the
     * `ann_index_lifecycle_gates` pattern. The mutating legs run against
     * a DEDICATED `_gate` store built over a doc subset (never the
@@ -729,13 +685,9 @@ object Lexical {
     *    rewritten corpus instead of serving stale postings). */
   def lexLifecycleGates(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val key = (spark.sparkContext.applicationId, sfDir)
-    val rows = Option(lexGateCache.get(key)).getOrElse {
-      val computed = computeLexGates(spark, sfDir)
-      lexGateCache.put(key, computed)
-      computed
-    }
-    rows.toDF("metric", "ok").orderBy(col("metric"))
+    SessionCache(spark, Tables.paths(sfDir, "documents"),
+        "lex.lifecycleGates")(computeLexGates(spark, sfDir))
+      .toDF("metric", "ok").orderBy(col("metric"))
   }
 
   private def computeLexGates(spark: SparkSession, sfDir: String): Seq[(String, Boolean)] = {
@@ -772,7 +724,7 @@ object Lexical {
     // dedicated gate store: build over a subset, append the rest
     val gdir = lexIndexDir(sfDir, "_gate")
     Similarity.deleteRecursively(gdir)
-    clearLexCaches(gdir)
+    SessionCache.invalidate(gdir)
     buildLexIndex(spark, sfDir, gdir, Some(pmod(col("doc_id"), lit(7L)) =!= 3L))
     val heldOut = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(pmod(col("doc_id"), lit(7L)) === 3L).count()
@@ -796,7 +748,7 @@ object Lexical {
         val afterDel = searchTextFrom(spark, gdir, q, 100).collect().toSeq
         val rdir = lexIndexDir(sfDir, "_gate_ref")
         Similarity.deleteRecursively(rdir)
-        clearLexCaches(rdir)
+        SessionCache.invalidate(rdir)
         buildLexIndex(spark, sfDir, rdir, Some(col("doc_id") =!= victim))
         val rebuiltWithout = searchTextFrom(spark, rdir, q, 100).collect().toSeq
         (!afterDel.exists(_.getLong(0) == victim), afterDel == rebuiltWithout)
@@ -830,7 +782,7 @@ object Lexical {
         spark.createDataFrame(
             java.util.Arrays.asList(tampered: _*), schema)
           .write.mode("overwrite").parquet(dlPath)
-        clearLexCaches(gdir)
+        SessionCache.invalidate(gdir)
         // a REAL rewrite replaces corpus files, breaking the manifest
         // fast path; this tamper is store-side (the corpus is
         // read-only), so break coverage explicitly to exercise the
@@ -933,7 +885,7 @@ object Lexical {
         readLexStats(dir).foreach { case (n, s) =>
           writeLexStats(dir, n + nAdded, s + stats.getLong(1)) }
         Similarity.renewMarker(dir)
-        clearLexCaches(dir)
+        SessionCache.invalidate(dir)
       }
       StoreLifecycle.writeManifest(dir, corpusPath, manifestSnap)
       nAdded
@@ -1001,7 +953,7 @@ object Lexical {
           .select(col("term"), col("df"), col("tb"))
           .write.mode("append").partitionBy("tb")
           .parquet(lexTablePath(dir, "terms"))
-      clearLexCaches(dir)
+      SessionCache.invalidate(dir)
     }
     added
     }
@@ -1051,7 +1003,7 @@ object Lexical {
     // retention: keep exactly the superseded generation, drop older
     StoreLifecycle.retainGenerations(dir,
       Seq("postings", "terms", "doclens"), Set(cur, next))
-    clearLexCaches(dir)
+    SessionCache.invalidate(dir)
     }
   }
 }

@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Multimodal-column plumbing (north-star extension): media payloads are
   * opaque BINARY columns with typed metadata, and per-batch feature
   * extraction runs as a batched partition transform — the same schema /
@@ -131,24 +134,13 @@ object Multimodal {
     * pins this. Empty payloads hash to 0 (identical empty media IS
     * identical). Audio rows are excluded (dHash is a visual
     * fingerprint). */
-  /** Session cache of the perceptual pair table, keyed (app, corpus,
-    * radius): `media_near_dup` and `media_dup_clusters` both consume
-    * it, and the grid/signature expressions are interpreted per-cell
-    * lambdas worth computing once per corpus (the established
-    * signature-cache lifecycle — see `Dedup.clearCaches`). */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
-  /** Release the cached pair tables (resident-service contract). */
-  def clearCaches(): Unit = {
-    pairCache.values.forEach(df => { df.unpersist(); () })
-    pairCache.clear()
-  }
-
+  /** Session-cached per (corpus, radius): `media_near_dup` and
+    * `media_dup_clusters` both consume the pair table, and the
+    * grid/signature expressions are interpreted per-cell lambdas worth
+    * computing once per corpus. */
   def mediaNearDup(spark: SparkSession, sfDir: String, maxHamming: Int = 7): DataFrame =
-    pairCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, maxHamming),
-      _ => mediaNearDupDirect(spark, sfDir, maxHamming)
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "media.nearDupPairs", maxHamming)(
+      mediaNearDupDirect(spark, sfDir, maxHamming)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Driver-gate registration over [[Dedup.seededDocs]]: the mirrored
@@ -158,16 +150,15 @@ object Multimodal {
     * the raw pair table (`mediaDupClusters`' input) is a different
     * corpus. */
   def mediaNearDupSeeded(spark: SparkSession, sfDir: String, maxHamming: Int = 7): DataFrame =
-    pairCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir + "#seeded", maxHamming),
-      _ => mediaNearDupOver(Dedup.seededDocs(spark, sfDir), maxHamming)
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "media.nearDupPairsSeeded", maxHamming)(
+      mediaNearDupOver(Dedup.seededDocs(spark, sfDir), maxHamming)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The uncached pair computation — also the entry point for planted
     * throwaway fixtures (SketchStreamGates), which must NOT enter the
-    * session pairCache: a resident service churning corpus snapshots
+    * session cache: a resident service churning corpus snapshots
     * would otherwise accumulate one persisted frame per fixture dir
-    * until a global clearCaches. */
+    * until a `SessionCache.clearAll`. */
   private[ops] def mediaNearDupDirect(spark: SparkSession, sfDir: String, maxHamming: Int = 7): DataFrame =
     mediaNearDupOver(graft.sources.ChunkStore.table(spark, sfDir, "documents"), maxHamming)
 

@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Near-duplicate detection over the `documents` table — the LLM-data-
   * pipeline dedup suite (north-star extensions; not in the reference).
   *
@@ -97,36 +100,10 @@ object NearDup {
     * length-prune too. */
   val PairFloor = 0.8
 
-  private val floorPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
   private def cachedFloorPairs(spark: SparkSession, sfDir: String, ngram: Int): DataFrame =
-    floorPairCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir, ngram),
-      _ => blockedJaccardDirect(spark, sfDir, PairFloor, ngram)
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "neardup.floorPairs", ngram)(
+      blockedJaccardDirect(spark, sfDir, PairFloor, ngram)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Largest-label-block cardinality for the exact-tier guard, cached
-    * per (app, corpus) — see the call site in [[embeddingNearDup]]. */
-  private val maxBlockCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
-  /** Release the cached pair tables (see `Dedup.clearCaches` for why a
-    * long-lived session wants this). */
-  def clearCaches(): Unit = {
-    maxBlockCache.clear()
-    floorPairCache.values.forEach(df => { df.unpersist(); () })
-    floorPairCache.clear()
-    simhashSigCache.values.forEach(df => { df.unpersist(); () })
-    simhashSigCache.clear()
-    minhashSigCache.values.forEach(df => { df.unpersist(); () })
-    minhashSigCache.clear()
-    minhashBucketCache.values.forEach(df => { df.unpersist(); () })
-    minhashBucketCache.clear()
-    trigramTfCache.values.forEach(df => { df.unpersist(); () })
-    trigramTfCache.clear()
-    spanCache.values.forEach(df => { df.unpersist(); () })
-    spanCache.clear()
-  }
 
   private def blockedJaccardDirect(spark: SparkSession, sfDir: String, threshold: Double,
       ngram: Int): DataFrame = {
@@ -304,11 +281,8 @@ object NearDup {
     * of the candidate self-join on every invocation (plus the recall
     * gate) — computed once, persisted (4 small columns per (doc,
     * band)). */
-  private val minhashBucketCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
   private def minhashBuckets(spark: SparkSession, sfDir: String, ngram: Int): DataFrame =
-    minhashBucketCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir, ngram), { _ =>
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "neardup.minhashBuckets", ngram) {
       val rowsPerBand = MinhashHashes / MinhashBands
       val sigs = minhashSigs(spark, sfDir, ngram)
       val bandRows = (0 until MinhashBands).map { b =>
@@ -331,10 +305,7 @@ object NearDup {
         .select(col("band"), col("doc_id"),
           pmod(xxhash64(lit("salt"), col("band"), col("doc_id")), col("nsplits")).as("salt"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  private val minhashSigCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
+    }
 
   /** The (doc_id, m0..m31) MinHash signature table — computed once per
     * (app, corpus, ngram) and persisted (~260 bytes/doc): one
@@ -342,7 +313,7 @@ object NearDup {
     * plus both sides of the estimate join), so without the cache the
     * shingle scan + 32-way min aggregate runs three times per call. */
   private def minhashSigs(spark: SparkSession, sfDir: String, ngram: Int): DataFrame =
-    minhashSigCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir, ngram), { _ =>
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "neardup.minhashSigs", ngram) {
       val t = shingles(spark, sfDir, ngram)
         // toks already hold xxhash64(token) — same h values as before the
         // shingle layer pre-hashed, one hash pass saved
@@ -350,7 +321,7 @@ object NearDup {
       val sigCols = (0 until MinhashHashes).map(i => min(xxhash64(lit(i), col("h"))).as(s"m$i"))
       t.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** 64-bit SimHash per document from xxhash64 token hashes: for each bit
     * position, sum ±1 over the token set; the sign becomes the signature
@@ -364,9 +335,6 @@ object NearDup {
         shiftrightunsigned(col("simhash"), 48).as("band_hi16"))
       .orderBy(col("doc_id"))
 
-  private val simhashSigCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   /** The (doc_id, simhash) signature table shared by [[simhash]] and
     * [[simhashHammingPairs]] — computed once per (app, corpus) and
     * persisted (16 bytes/doc), like the floor-pair and CC-label caches:
@@ -374,8 +342,8 @@ object NearDup {
     * aggregate, and both consumers (and both sides of the pair
     * self-join) want the identical table. */
   private def simhashSigs(spark: SparkSession, sfDir: String): DataFrame =
-    simhashSigCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir),
-      _ => simhashSigsDirect(spark, sfDir)
+    SessionCache(spark, Tables.paths(sfDir, "documents"),
+        "neardup.simhashSigs")(simhashSigsDirect(spark, sfDir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def simhashSigsDirect(spark: SparkSession, sfDir: String): DataFrame = {
@@ -510,14 +478,10 @@ object NearDup {
     * `substring_dup_coverage`, `split_substring_leakage`) and the sf1
     * soak all start from the same positional-gram join — one build per
     * corpus serves all (the signature-cache lifecycle). */
-  private val spanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), DataFrame]()
-
   def substringSpans(spark: SparkSession, sfDir: String, k: Int = 16,
       dfCap: Int = SpanDfCap): DataFrame =
-    spanCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, k, dfCap),
-      _ => substringSpansDirect(spark, sfDir, k, dfCap)
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "neardup.substringSpans", k, dfCap)(
+      substringSpansDirect(spark, sfDir, k, dfCap)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def substringSpansDirect(spark: SparkSession, sfDir: String, k: Int,
@@ -622,14 +586,12 @@ object NearDup {
     // produce a pair), so the guard counts only rows that can actually
     // generate work — a corpus dominated by unlabeled vectors must not
     // be refused for its null block (ADVICE r13)
-    val maxBlock = maxBlockCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir),
-      _ => java.lang.Long.valueOf(e
+    val maxBlock = SessionCache(spark, Tables.paths(sfDir, "embeddings"), "neardup.maxLabelBlock")(e
         .filter(col("label").isNotNull && col("v").isNotNull)
         .groupBy(col("label")).count()
         .agg(org.apache.spark.sql.functions.max(col("count"))).collect()
         .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-        .getOrElse(0L))).longValue()
+        .getOrElse(0L))
     Similarity.requireExactTier(maxBlock, "embeddingNearDup (largest label block)")
     val a = e.select(col("label"), col("vec_id").as("vec_a"), col("v").as("va"))
     val b = e.select(col("label"), col("vec_id").as("vec_b"), col("v").as("vb"))
@@ -785,9 +747,6 @@ object NearDup {
     * measured bulk of the exact weighted tier's cost. The frame is
     * vocabulary×doc-sized (ids + 8-char grams + two ints), far smaller
     * than the exploded token stream it collapses. */
-  private val trigramTfCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   /** Round-15: the frame builds with the fused [[graft.functions
     * .TrigramTf]] codegen kernel — tokenize, trigram, and per-doc tf
     * count in one pass per row, explode-only after — deleting the
@@ -797,7 +756,7 @@ object NearDup {
     * lineage row-for-row; the tfidf_cosine_pairs oracle hash is
     * unchanged. */
   private def trigramTf(spark: SparkSession, sfDir: String): DataFrame =
-    trigramTfCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir), _ => {
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "neardup.trigramTf") {
       val base = graft.sources.ChunkStore.table(spark, sfDir, "documents")
         .select(col("doc_id"), graft.functions.ScaleFunctions.trigram_tf(
           lower(trim(coalesce(col("text"), lit(""))))).as("k"))
@@ -829,7 +788,7 @@ object NearDup {
       // bit-exact wgt doubles) are unchanged.
       augmentTfStats(base)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Attach per-gram document frequency and the corpus document count to
     * a (doc_id, dl, g, tf) frame — shared by the session cache above and

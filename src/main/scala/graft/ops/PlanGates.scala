@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.SessionCache
+
 /** Driver-checked PLAN-SHAPE tripwire — the `ann_recall_gates` /
   * `fit_quality_gates` pattern applied to the physical plans
   * themselves: the scale posture this engine claims (filters pushed to
@@ -269,11 +271,8 @@ object PlanGates {
     * change within a session — so the plan builds run once per
     * (app, corpus), the same session-cache discipline as the signature
     * and label tables. */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   def planGates(spark: SparkSession, sfDir: String): DataFrame =
-    cache.computeIfAbsent((spark.sparkContext.applicationId, sfDir), _ => {
+    SessionCache(spark, Seq(sfDir), "planGates") {
       import spark.implicits._
       val verdicts = checks.map { case (check, query, pred) =>
         val build = customPlans.getOrElse(query, graft.SparkEntry.queries(query))
@@ -281,5 +280,5 @@ object PlanGates {
         (check, pred(plan))
       }
       verdicts.toDF("check_name", "ok").orderBy("check_name")
-    })
+    }
 }

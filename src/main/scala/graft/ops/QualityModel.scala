@@ -4,6 +4,9 @@ import org.apache.spark.ml.classification.LogisticRegressionModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Model-based document quality filtering — the classifier tier of a
   * training-data pipeline (the fastText-style screen of CCNet/GPT-3
   * style curation): distil the rule-based [[TextAnalysis.qualityScore]]
@@ -53,18 +56,12 @@ object QualityModel {
       docs.withColumn("text", coalesce(col("text"), lit("")))))
   }
 
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Option[LogisticRegressionModel]]()
-
-  /** Release cached models (twin of the other session caches). */
-  def clearCaches(): Unit = modelCache.clear()
-
   /** Fit (or fetch) the distilled classifier for one corpus: weak label
     * = rule-screen verdict (quality ≥ 0.5), features = hashed bag of
     * words over the TRAIN hash-split only. None when the corpus has no
     * training rows or only one label class (LR needs both). */
   private def fitted(spark: SparkSession, sfDir: String): Option[LogisticRegressionModel] =
-    modelCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir), _ => {
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "quality.model") {
       val labelled = TextAnalysis.qualityScore(spark, sfDir)
         .select(col("doc_id"), (col("quality") >= 0.5).cast("double").as("label"))
       val train = featurize(
@@ -76,7 +73,7 @@ object QualityModel {
         .setMaxIter(50).setRegParam(0.01)
         .setFeaturesCol("features").setLabelCol("label")
         .fit(train))
-    })
+    }
 
   /** Apply the corpus-fitted classifier to a STREAM of documents
     * (doc_id, text, …) — the model-serving half of ingest-time

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.ScaleFunctions
 import graft.sources.Tables
 
+import graft.core.SessionCache
+
 /** Shuffle-economy join patterns — the three moves a 1000-executor
   * plan makes that a single-node engine never needs (engine extension
   * past the reference's read-only store,
@@ -108,30 +110,14 @@ object ScalePatterns {
     * side. Exact joins after each probe erase the blooms' false
     * positives — the result is the plain 3-table join's, hash-matched.
     */
-  /** Session cache of the cascade's qualifying-orders build side: it
-    * seeds the second bloom (two dimension-scale actions) and then
-    * replays as the join's build side, so it must be persisted — and
-    * persisted tables must answer to the release contract
-    * (`clearCaches`), not live unaccounted in the CacheManager for the
-    * session's lifetime. */
-  private val qualOrdersCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  /** Release the cached cascade build sides (see `Dedup.clearCaches`
-    * for the resident-service contract). */
-  def clearCaches(): Unit = {
-    qualOrdersCache.values.forEach(_.unpersist())
-    qualOrdersCache.clear()
-  }
-
   def bloomCascadeRevenue(spark: SparkSession, sfDir: String): DataFrame = {
     val dim = t(spark, sfDir, "customer")
       .filter(col("c_mktsegment") === lit("BUILDING"))
       .select(col("c_custkey"))
     val custBloom = dim.stat.bloomFilter("c_custkey", math.max(dim.count(), 1L), 0.03)
-    val qualOrders = qualOrdersCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir),
-      _ => t(spark, sfDir, "orders")
+    val qualOrders = SessionCache(spark, Tables.paths(sfDir, "orders", "customer"),
+        "scale.bloomQualifyingOrders")(
+      t(spark, sfDir, "orders")
         .filter(ScaleFunctions.bloom_might_contain(custBloom, col("o_custkey")))
         .join(dim, col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"), col("o_orderpriority"))

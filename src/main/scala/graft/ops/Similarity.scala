@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (north-star extension: similarity search at 100 TB).
   *
@@ -65,15 +68,14 @@ object Similarity {
     *
     * `queryPred` restricts the QUERY side only (the neighbor pool stays
     * the full corpus) — the recall-gate query uses it to measure on a
-    * deterministic sample without paying the full n² scan. */
-  /** Session cache of the no-predicate exact top-k — the SAME all-pairs
+    * deterministic sample without paying the full n² scan.
+    *
+    * The no-predicate result is session-cached — the SAME all-pairs
     * result feeds `cosine_topk`, `label_knn_accuracy`, and any other
-    * full-corpus consumer; without it each one repays the broadcast
-    * BNLJ (measured 4.0 s apiece at sf0.1). Predicate-filtered calls
-    * (the recall-gate 1/5 sample, hybrid_search's single query row)
-    * bypass it — a Column predicate isn't a usable cache key. */
-  private val exactTopKCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
+    * full-corpus consumer; without it each one repays the broadcast BNLJ
+    * (measured 4.0 s apiece at sf0.1). Predicate-filtered calls (the
+    * recall-gate 1/5 sample, hybrid_search's single query row) bypass
+    * it — a Column predicate isn't a usable cache key. */
 
   /** Hard ceiling for the exact O(n²) tiers (`cosine_topk`,
     * `hard_negatives`, `Dedup.semanticDedup`, `NearDup
@@ -100,22 +102,35 @@ object Similarity {
   val MaxAppendedFrac: Double = 0.5
   val MaxDeletedFrac: Double = 0.25
 
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
+  /** Base relation of the serving path's pruned cell scan, pinned to
+    * the RESOLVED cells path of the default index: caches the parquet
+    * file index so a single-query search does not re-list ~nlist
+    * partition directories per request (the dominant measured serving
+    * cost). Keying on the resolved generation path makes compaction
+    * flips naturally miss; append (same path, new files), delete and
+    * rebuild invalidate the index dir. */
+  private def servingScan(spark: SparkSession, sfDir: String): DataFrame = {
+    val cells = cellsPath(indexDir(sfDir, 0))
+    SessionCache.pinned(spark, cells, "sim.servingScan")(spark.read.parquet(cells))
+  }
 
-  /** Base relation of the serving path's pruned cell scan, keyed by
-    * (app, RESOLVED cells path): caches the parquet file index so a
-    * single-query search does not re-list ~nlist partition directories
-    * per request (the dominant measured serving cost). Keying on the
-    * resolved generation path makes compaction flips naturally miss;
-    * append (same path, new files) and delete/compact clear it
-    * explicitly. */
-  private val servingScanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** The default index's live count and centroids as the serving path
+    * reads them: pinned to the index generation like [[servingScan]],
+    * so a request takes no identity stat. The entry holds no frame: the
+    * one serving path that needs the assignment table (a predicate
+    * without stats) reads it through [[coarseQuantizer]]. With no store
+    * yet the corpus entry fits one (or finds the corpus empty). */
+  private def servingQuantizer(spark: SparkSession,
+      sfDir: String): Option[(Long, Array[Array[Double]])] = {
+    val dir = indexDir(sfDir, 0)
+    def fetch = coarseQuantizer(spark, sfDir, 0).map(q => (q.n, q.centroids))
+    if (!new java.io.File(dir, "_SUCCESS").isFile) fetch
+    else SessionCache.pinned(spark, cellsPath(dir), "sim.servingQuantizer")(fetch)
+  }
 
-  private[ops] def corpusCount(spark: SparkSession, sfDir: String): Long =
-    countCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir),
-      _ => java.lang.Long.valueOf(emb(spark, sfDir).count())).longValue()
+  private[graft] def corpusCount(spark: SparkSession, sfDir: String): Long =
+    SessionCache(spark, Tables.paths(sfDir, "embeddings"),
+        "sim.corpusCount")(emb(spark, sfDir).count())
 
   private[ops] def requireExactTier(n: Long, op: String): Unit =
     require(n <= ExactTierMaxRows,
@@ -127,9 +142,9 @@ object Similarity {
   def cosineTopK(spark: SparkSession, sfDir: String, k: Int = 5,
       queryPred: Option[org.apache.spark.sql.Column] = None): DataFrame =
     if (queryPred.isEmpty)
-      exactTopKCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir, k),
-        _ => cosineTopKDirect(spark, sfDir, k, None)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      SessionCache(spark, Tables.paths(sfDir, "embeddings"),
+          "sim.exactTopK", k)(cosineTopKDirect(spark, sfDir, k, None)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     else cosineTopKDirect(spark, sfDir, k, queryPred)
 
   /** Hard-negative mining for contrastive training — per anchor, the
@@ -149,21 +164,19 @@ object Similarity {
     * semi-hard neighbors are by construction NEAR neighbors, exactly
     * what the IVF probe surfaces. Band comparisons use the UNROUNDED
     * cosine (one IEEE expression shared with the oracle), so membership
-    * cannot flip between engines. */
-  /** Session cache for the no-predicate exact band mining — the same
-    * all-pairs broadcast scan as [[exactTopKCache]]'s (measured 4.0 s
-    * per pass at sf0.1): the driver replays it every round and Bench
-    * times it twice. Predicate-sampled calls (the soak's hardness
-    * gate) bypass it, same rule as [[cosineTopK]]. */
-  private val hardNegCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Double, Double), DataFrame]()
-
+    * cannot flip between engines.
+    *
+    * The no-predicate band mining is session-cached — the same
+    * all-pairs broadcast scan as [[cosineTopK]]'s (measured 4.0 s per
+    * pass at sf0.1): the driver replays it every round and Bench times
+    * it twice. Predicate-sampled calls (the soak's hardness gate)
+    * bypass it, same rule as [[cosineTopK]]. */
   def hardNegatives(spark: SparkSession, sfDir: String, k: Int = 5,
       lo: Double = 0.15, hi: Double = 0.40,
       queryPred: Option[org.apache.spark.sql.Column] = None): DataFrame =
     if (queryPred.isEmpty)
-      hardNegCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir, k, lo, hi),
-        _ => hardNegativesDirect(spark, sfDir, k, lo, hi, None)
+      SessionCache(spark, Tables.paths(sfDir, "embeddings"), "sim.hardNegatives", k, lo, hi)(
+        hardNegativesDirect(spark, sfDir, k, lo, hi, None)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     else hardNegativesDirect(spark, sfDir, k, lo, hi, queryPred)
 
@@ -577,13 +590,10 @@ object Similarity {
     * the bench times every query twice). */
   val IvfQualityFloor = 0.95
 
-  private val ivfQualityCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), Array[(String, Double, Boolean)]]()
-
   def retrievalQualityIvf(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
     import spark.implicits._
-    val rows = ivfQualityCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, k), _ => {
+    val rows = SessionCache(spark, Tables.paths(sfDir, "embeddings"),
+        "sim.ivfQuality", k, indexDir(sfDir, 0)) {
         // metric SUMS (query-weighted) plus the pool's query count; the
         // ratio divides BOTH pools by the EXACT tier's query count — a
         // query the index returns nothing for must score 0, not vanish
@@ -605,7 +615,7 @@ object Similarity {
           gate("ivf_ndcg_ratio", en, vn),
           gate("ivf_mrr_ratio", em, vm),
           gate("ivf_p_at_k_ratio", ep, vp))
-      })
+      }
     rows.toSeq.toDF("metric", "floor", "ok").orderBy(col("metric"))
   }
 
@@ -690,16 +700,6 @@ object Similarity {
     * ≥ 0.9 at sf0.01 AND sf0.1 by `ann_recall_gates`, and at the 20k-
     * vector synthetic soak by `SoakSf1`. Reported similarities are
     * exact (rerank). */
-  /** Session cache of the salted LSH index, keyed by (app, corpus,
-    * tables, bucketLength): the projection scan + occupancy window +
-    * salt assignment is deterministic per corpus and is read by BOTH
-    * sides of the candidate join on every invocation (plus the sampled
-    * recall gate) — one build per corpus serves all, same lifecycle as
-    * the minhash signature cache. Value carries the adaptive g so the
-    * query side enumerates the right probe set. None = empty corpus. */
-  private val lshBucketCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Double), Option[(Int, DataFrame)]]()
-
   /** Crash/concurrency-safe store (re)build (ADVICE r14: an in-place
     * `mode("overwrite")` deletes the old tables while the old _SUCCESS
     * marker still stands, so a reader racing a rebuild could load a
@@ -759,19 +759,31 @@ object Similarity {
   private[graft] def lshBucketsPath(dir: String): String =
     StoreLifecycle.genDir(dir, "_buckets_gen", "buckets")
 
+  /** The salted LSH index of a corpus, session-cached per (corpus,
+    * store): the projection scan + occupancy window + salt assignment is
+    * deterministic per corpus and is read by BOTH sides of the candidate
+    * join on every invocation (plus the sampled recall gate) — one build
+    * per corpus serves all, same lifecycle as the minhash signature
+    * cache. Value carries the adaptive g so the query side enumerates
+    * the right probe set. None = empty corpus.
+    *
+    * A store is served only while fresh and in the current layout (the
+    * `vhashes` content-address sidecar the append guards read); any
+    * other store is stale and rebuilt. Takedowns live in the default IVF
+    * generation's registry, so a rebuild carries nothing. */
   private def lshBuckets(spark: SparkSession, sfDir: String, tables: Int,
-      bucketLength: Double): Option[(Int, DataFrame)] =
-    lshBucketCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, tables, bucketLength), { _ =>
-        val dir = lshIndexDir(sfDir, tables, bucketLength)
-        if (indexFresh(sfDir, dir)) {
-          val loaded = spark.read.parquet(lshBucketsPath(dir))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          loaded.limit(1).select(size(col("bks"))).collect().headOption.map { r =>
-            (r.getInt(0), loaded)
-          } // an empty store is never persisted, so headOption always hits
-        } else lshBucketsBuild(spark, sfDir, tables, bucketLength, dir)
-      })
+      bucketLength: Double): Option[(Int, DataFrame)] = {
+    val dir = lshIndexDir(sfDir, tables, bucketLength)
+    SessionCache(spark, Tables.paths(sfDir, "embeddings"), "sim.lshBuckets", dir) {
+      if (indexFresh(sfDir, dir) && new java.io.File(s"$dir/vhashes", "_SUCCESS").isFile) {
+        val loaded = spark.read.parquet(lshBucketsPath(dir))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        loaded.limit(1).select(size(col("bks"))).collect().headOption.map { r =>
+          (r.getInt(0), loaded)
+        } // an empty store is never persisted, so headOption always hits
+      } else lshBucketsBuild(spark, sfDir, tables, bucketLength, dir)
+    }
+  }
 
   /** Unit-normalized corpus view the LSH hasher consumes. */
   private def lshInput(spark: SparkSession, sfDir: String): DataFrame =
@@ -846,6 +858,7 @@ object Similarity {
             e.select(col("vec_id"), xxhash64(col("v")).as("vh"))
               .write.mode("overwrite").parquet(s"$tmp/vhashes")
           }
+          SessionCache.invalidate(dir)
           (g, bucketTable)
         }
   }
@@ -871,16 +884,18 @@ object Similarity {
     *
     * Same guards as the IVF twin: ghost check (every bucketed id must
     * still exist in the corpus, takedown-tombstoned ids exempt), no-op
-    * append over a rewritten store leaves the marker stale, and the
-    * session caches clear whenever the corpus actually changed.
-    * Returns the number of vectors bucketed. */
+    * append over a rewritten store leaves the marker stale. A store
+    * without the current layout (no `vhashes` sidecar) refuses the
+    * append: [[ensureLshIndex]] rebuilds it. The corpus change behind an
+    * append renews every session entry derived from the embeddings by
+    * itself ([[SessionCache]] keys on the identity of the tables read). Returns the
+    * number of vectors bucketed. */
   def lshIndexAppend(spark: SparkSession, sfDir: String, tables: Int = 8,
       bucketLength: Double = 2.0): Long = {
     val dir = lshIndexDir(sfDir, tables, bucketLength)
     StoreLifecycle.withWriterLease(dir, "lsh-append") {
-    val marker = new java.io.File(dir, "_SUCCESS")
-    require(marker.isFile,
-      s"no persisted LSH index at $dir — build one (ensureIvfIndex) before appending")
+    require(new java.io.File(dir, "_SUCCESS").isFile && new java.io.File(s"$dir/vhashes", "_SUCCESS").isFile,
+      s"no current-layout LSH index at $dir — build one (ensureLshIndex) before appending")
     val markerWasFresh = indexFresh(sfDir, dir)
     val stored = spark.read.parquet(lshBucketsPath(dir))
     val g = stored.limit(1).select(size(col("bks"))).collect()
@@ -911,8 +926,8 @@ object Similarity {
     // appended the new ids, and RENEWED the marker over buckets hashed
     // from the old vectors. The vhashes sidecar (written at build)
     // pins each indexed vector's content; any mismatch refuses the
-    // append. Pre-r17 stores (no sidecar) keep the id-only guard.
-    if (!lshGuardsFast && new java.io.File(s"$dir/vhashes", "_SUCCESS").isFile) {
+    // append.
+    if (!lshGuardsFast) {
       // the serving rows only: a taken-down vector later rewritten or
       // removed upstream is the expected takedown-replace sequence,
       // not a corpus rewrite (the ghost check's exemption, which this
@@ -932,9 +947,8 @@ object Similarity {
     // fast path engaged — re-shipped-id guard (round 19, the ivfIndexAppend
     // rule): files landed since the certified manifest may re-ship an
     // already-bucketed id with changed content; compare the increment ∩
-    // serving overlap against the vhashes sidecar (pre-r17 stores without
-    // the sidecar keep the id-only guard, as on the slow path).
-    if (lshGuardsFast && new java.io.File(s"$dir/vhashes", "_SUCCESS").isFile) {
+    // serving overlap against the vhashes sidecar.
+    if (lshGuardsFast) {
       val incrPaths = StoreLifecycle.manifestIncrementPathsOf(dir, lshCorpusPath, lshManifestSnap)
       if (incrPaths.nonEmpty) {
         val vh0 = spark.read.parquet(s"$dir/vhashes")
@@ -951,25 +965,6 @@ object Similarity {
           n => s"$n re-shipped vectors changed content in files landed at " +
             s"$sfDir — the buckets were hashed from the old vectors; " +
             "rebuild the LSH index")
-      }
-    } else if (lshGuardsFast) {
-      // pre-r17 store (no vhashes sidecar) on the fast path: the slow
-      // path at least id-guards, but here a certified manifest skips
-      // EVERY guard — if the landed increment re-ships a serving id
-      // there is no content address to arbitrate with. Refuse loudness
-      // over silence (ADVICE r19): fall back to the slow-path id guard
-      // and warn that the store predates content addressing.
-      val incrPaths = StoreLifecycle.manifestIncrementPathsOf(dir, lshCorpusPath, lshManifestSnap)
-      if (incrPaths.nonEmpty) {
-        val overlap = embFrom(spark.read.option("basePath", lshCorpusPath)
-            .parquet(incrPaths: _*))
-          .select(col("vec_id")).distinct()
-          .join(servingIdx, Seq("vec_id")).count()
-        if (overlap > 0L)
-          System.err.println(s"[graft] WARNING: $overlap landed vector ids at " +
-            s"$sfDir overlap the serving LSH index at $dir, which predates " +
-            "content addressing (no vhashes sidecar) — a changed re-ship " +
-            "cannot be detected; rebuild the index to gain the guard")
       }
     }
     val e = lshInput(spark, sfDir)
@@ -1000,9 +995,8 @@ object Similarity {
           // duplicate (vec_id, vh) rows, and duplicates join-match
           // identically in the guard. The reverse order left appended
           // vectors permanently unguarded.
-          if (new java.io.File(s"$dir/vhashes", "_SUCCESS").isFile)
-            fresh.select(col("vec_id"), xxhash64(col("v")).as("vh"))
-              .write.mode("append").parquet(s"$dir/vhashes")
+          fresh.select(col("vec_id"), xxhash64(col("v")).as("vh"))
+            .write.mode("append").parquet(s"$dir/vhashes")
           // salt split against LIVE occupancy: existing NON-TOMBSTONED
           // rows + new per bucket (round 17, ADVICE r16: counting dead
           // rows inflated nsplits — a mostly-tombstoned bucket split
@@ -1031,27 +1025,11 @@ object Similarity {
         newRows.unpersist()
         nAdded
     }
-    // marker + invalidation rules, verbatim from ivfIndexAppend: renew
-    // only when coverage extended or already fresh; clear the session
-    // caches whenever the CORPUS changed (not merely when rows were
-    // added — a fully-tombstoned batch still moved the store)
+    // marker rule, verbatim from ivfIndexAppend: renew only when
+    // coverage extended or already fresh
     if (added > 0 || markerWasFresh) renewMarker(dir)
-    if (added > 0 || !markerWasFresh) clearCaches()
     StoreLifecycle.writeManifest(dir, lshCorpusPath, lshManifestSnap)
     added
-    }
-  }
-
-  private def clearLshCaches(sfDir: String, tables: Int, bucketLength: Double): Unit = {
-    lshBucketCache.entrySet.removeIf { e =>
-      val hit = e.getKey._2 == sfDir && e.getKey._3 == tables && e.getKey._4 == bucketLength
-      if (hit) e.getValue.foreach(_._2.unpersist())
-      hit
-    }
-    lshCandCache.entrySet.removeIf { e =>
-      val hit = e.getKey._2 == sfDir && e.getKey._3 == tables && e.getKey._4 == bucketLength
-      if (hit) e.getValue.unpersist()
-      hit
     }
   }
 
@@ -1109,21 +1087,17 @@ object Similarity {
     // they are dead weight every guard pass reads. Not generation-
     // pointed (the sidecar is consulted only by the append verb, never
     // a serving read): write-aside + rename; a crash between the
-    // delete and the rename leaves no sidecar, which downgrades the
-    // store to the pre-sidecar id-only guard — degraded, never wrong.
-    if (new java.io.File(s"$dir/vhashes", "_SUCCESS").isFile) {
-      tombstones(spark, tombstoneDir.getOrElse(indexDir(sfDir, 0))).foreach { ts =>
-        val folded = spark.read.parquet(s"$dir/vhashes")
-          .join(broadcast(ts), Seq("vec_id"), "left_anti")
-        folded.write.mode("overwrite").parquet(s"$dir/vhashes.next")
-        deleteRecursively(s"$dir/vhashes")
-        Files.move(Paths.get(dir, "vhashes.next"), Paths.get(dir, "vhashes"),
-          StandardCopyOption.ATOMIC_MOVE)
-      }
+    // delete and the rename leaves no sidecar, so the store reads as
+    // an old layout and the next ensure rebuilds it — slow, never wrong.
+    tombstones(spark, tombstoneDir.getOrElse(indexDir(sfDir, 0))).foreach { ts =>
+      val folded = spark.read.parquet(s"$dir/vhashes")
+        .join(broadcast(ts), Seq("vec_id"), "left_anti")
+      folded.write.mode("overwrite").parquet(s"$dir/vhashes.next")
+      deleteRecursively(s"$dir/vhashes")
+      Files.move(Paths.get(dir, "vhashes.next"), Paths.get(dir, "vhashes"),
+        StandardCopyOption.ATOMIC_MOVE)
     }
-    // a compaction of the SHARED store invalidates its session caches;
-    // a gate-owned copy (dirOverride) is read by no cached plan
-    if (dirOverride.isEmpty) clearLshCaches(sfDir, tables, bucketLength)
+    SessionCache.invalidate(dir)
     }
   }
 
@@ -1193,21 +1167,18 @@ object Similarity {
        |    i -> transform(bks, (b, j) ->
        |      b + IF(j = CAST(i AS INT), element_at(bdirs, j + 1), CAST(0 AS BIGINT)))))""".stripMargin)
 
-  /** Session cache of the LSH candidate pair set, keyed by (app,
-    * corpus, tables, bucketLength) — the [[ivfCandCache]] lifecycle
-    * applied to the banded tier: the probe-join + salt filter +
-    * distinct over tables·(g+1) probe rows per vector is the dominant
+  /** The LSH candidate pair set, session-cached per (corpus, store) —
+    * the [[ivfCandidates]] lifecycle applied to the banded tier: the
+    * probe-join + salt filter + distinct over tables·(g+1) probe rows
+    * per vector is the dominant
     * per-invocation cost (measured 33.6 s WARM at the 20k-vector sf1
     * soak with only the buckets cached — the deduped pair table itself
     * is ~16 bytes/pair and serves lshTopK and the recall gates alike,
     * a queryPred being a filter on the query id column). */
-  private val lshCandCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Double), DataFrame]()
-
   private def lshCandidates(spark: SparkSession, sfDir: String, tables: Int,
       bucketLength: Double, g: Int, bucketed: DataFrame): DataFrame =
-    lshCandCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, tables, bucketLength), { _ =>
+    SessionCache(spark, Tables.paths(sfDir, "embeddings"),
+        "sim.lshCandidates", lshIndexDir(sfDir, tables, bucketLength)) {
         val probes = bucketed
           .select(col("vec_id"), col("tbl"), explode(probeKeysExpr(g)).as("pbks"))
           .withColumn("pkh", xxhash64(col("pbks").cast("string")))
@@ -1222,7 +1193,7 @@ object Similarity {
           .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("other_id"))
           .distinct()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      }
 
   /** `tombstoneDir` points at the index generation whose takedown
     * registry applies — callers leave the default (the default IVF
@@ -1281,89 +1252,6 @@ object Similarity {
   private final case class CoarseQuantizer(
       n: Long, centroids: Array[Array[Double]], assigned: DataFrame)
 
-  /** Session-scoped cache of the fitted coarse quantizer, keyed by
-    * (application, corpus dir, requested nlist): [[ivfTopK]] (auto ~√n
-    * cells) and [[residualQuantizeStats]] (its own nlist) each fit
-    * KMeans over the same corpus — cache the fit, its count() guard,
-    * and the assignment table so one fit per corpus per key serves
-    * every invocation (the bench times each query twice; without this
-    * the corpus is clustered four times per run). */
-  private val quantizerCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), Option[CoarseQuantizer]]()
-
-  /** Release the cached quantizers (see `Dedup.clearCaches` for why a
-    * long-lived session needs the twin). */
-  def clearCaches(): Unit = {
-    // the guard's corpus counts too: a resident service that rewrites a
-    // store and invalidates its caches must re-count, or the exact-tier
-    // guard decides on the OLD cardinality (review finding, round 13)
-    countCache.clear()
-    servingScanCache.clear()
-    quantizerCache.values.forEach(q => { q.foreach(_.assigned.unpersist()); () })
-    quantizerCache.clear()
-    pqCodeCache.values.forEach(c => { c.foreach(_.unpersist()); () })
-    pqCodeCache.clear()
-    exactSampleCache.values.forEach(df => { df.unpersist(); () })
-    exactSampleCache.clear()
-    exactTopKCache.values.forEach(df => { df.unpersist(); () })
-    exactTopKCache.clear()
-    hardNegCache.values.forEach(df => { df.unpersist(); () })
-    hardNegCache.clear()
-    ivfCandCache.values.forEach(df => { df.unpersist(); () })
-    ivfCandCache.clear()
-    lshBucketCache.values.forEach(b => { b.foreach(_._2.unpersist()); () })
-    lshBucketCache.clear()
-    lshCandCache.values.forEach(df => { df.unpersist(); () })
-    lshCandCache.clear()
-    recallVerdictCache.clear()
-    ivfQualityCache.clear()
-    lifecycleVerdictCache.clear()
-    servingBatchGateCache.clear()
-    graft.ops.Lexical.clearAllLexCaches()
-  }
-
-  /** Selective invalidation for an INDEX-generation mutation (delete /
-    * compact): the corpus itself did not change, so the exact tiers,
-    * LSH stores, and recall references for OTHER indexes stay valid —
-    * only the quantizer, candidate, and PQ entries of this (corpus,
-    * nlist) key are stale. A full [[clearCaches]] here would force
-    * every subsequent consumer to repay its reference scans (the exact
-    * top-k alone is ~4 s/corpus at sf0.1) for a mutation that never
-    * touched their inputs. */
-  private def clearIndexCaches(sfDir: String, nlist: Int): Unit = {
-    val k = math.max(nlist, 0)
-    // serving base relations of every generation of this index (the
-    // key carries the resolved path — prefix-match the store dir,
-    // BOUNDED at the directory separator: "ivf_index_k1" is a string
-    // prefix of "ivf_index_k16", and an unbounded match evicted the
-    // k16 serving scans on a k1 mutation (ADVICE r16 — pure
-    // over-invalidation, but exactly the re-listing cost this cache
-    // exists to avoid)
-    servingScanCache.entrySet.removeIf(_.getKey._2.startsWith(indexDir(sfDir, k) + "/"))
-    quantizerCache.entrySet.removeIf { e =>
-      val hit = e.getKey._2 == sfDir && e.getKey._3 == k
-      if (hit) e.getValue.foreach(_.assigned.unpersist())
-      hit
-    }
-    pqCodeCache.entrySet.removeIf { e =>
-      val hit = e.getKey._2 == sfDir && e.getKey._3 == k
-      if (hit) e.getValue.foreach(_.unpersist())
-      hit
-    }
-    ivfCandCache.entrySet.removeIf { e =>
-      val hit = e.getKey._2 == sfDir && e.getKey._3 == k
-      if (hit) e.getValue.unpersist()
-      hit
-    }
-    // the recall / quality verdicts measure the DEFAULT index
-    if (k == 0) {
-      recallVerdictCache.entrySet.removeIf(_.getKey._2 == sfDir)
-      ivfQualityCache.entrySet.removeIf(_.getKey._2 == sfDir)
-      servingBatchGateCache.entrySet.removeIf(_.getKey._2 == sfDir)
-    }
-    lifecycleVerdictCache.entrySet.removeIf(_.getKey._2 == sfDir)
-  }
-
   /** Fit (or fetch) the seeded coarse quantizer. `nlist ≤ 0` auto-tunes
     * to ~√n (standard IVF sizing: per-cell list length ≈ √n balances
     * coarse-search and rerank costs), clamped to [4, 4096]; the count()
@@ -1407,22 +1295,15 @@ object Similarity {
     * the mirror rule ([[indexFresh]]); [[ensureIvfIndex]] is the
     * explicit ingest-time entry (Bench runs it with the other layout
     * steps). Empty corpora are never persisted (None each session). */
-  private def coarseQuantizer(spark: SparkSession, sfDir: String, nlist: Int): Option[CoarseQuantizer] =
-    quantizerCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir, math.max(nlist, 0)), _ => {
-      val dir = indexDir(sfDir, nlist)
-      val stored = if (indexFresh(sfDir, dir))
-        Some(spark.read.parquet(cellsPath(dir))) else None
+  private def coarseQuantizer(spark: SparkSession, sfDir: String, nlist: Int): Option[CoarseQuantizer] = {
+    val dir = indexDir(sfDir, nlist)
+    // session-cached per (corpus, index): ivfTopK (auto ~√n cells) and
+    // residualQuantizeStats (its own nlist) each fit KMeans over the
+    // same corpus — one fit per corpus per key serves every invocation
+    SessionCache(spark, Tables.paths(sfDir, "embeddings"), "sim.quantizer", dir) {
+      val stored = if (!indexFresh(sfDir, dir)) None
+        else Some(spark.read.parquet(cellsPath(dir))).filter(ivfLayoutCurrent)
       stored match {
-        // layout-version guard: a pre-r16 store has no label column, a
-        // pre-r17 one no lang column (the filter attributes the
-        // serving path scans) — indexFresh alone cannot see layout
-        // changes, so refit, CARRYING any tombstones the old
-        // generation held (the whole-dir swap would otherwise drop
-        // takedowns — the unsafe polarity)
-        case Some(p) if !p.columns.contains("label") || !p.columns.contains("lang") =>
-          val carry = tombstones(spark, dir)
-            .map(_.collect().map(_.getLong(0)).toSeq).getOrElse(Seq.empty)
-          fitQuantizer(spark, sfDir, nlist, carry)
         case Some(physicalAll) =>
           val cents = spark.read.parquet(s"$dir/centroids").collect()
             .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
@@ -1440,18 +1321,26 @@ object Similarity {
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           Some(CoarseQuantizer(assigned.count(), cents, assigned))
         case None =>
-          // STALENESS refit (marker older than the corpus — e.g. files
-          // landed without an index append): same carry rule as the
-          // layout and drift rebuilds (round 18; this branch passed
-          // Seq.empty, so a refit after a takedown re-indexed and
-          // SERVED the still-in-corpus deleted vectors — the unsafe
-          // polarity). An absent store has no registry; collect is a
-          // no-op there.
+          // STALE refit — the marker is older than the corpus (files
+          // landed without an index append) or the store predates the
+          // current layout: refit, CARRYING the takedowns the old
+          // generation held (round 18; a refit that passed Seq.empty
+          // re-indexed and SERVED the still-in-corpus deleted vectors —
+          // the unsafe polarity). An absent store has no registry;
+          // collect is a no-op there.
           val carry = tombstones(spark, dir)
             .map(_.collect().map(_.getLong(0)).toSeq).getOrElse(Seq.empty)
           fitQuantizer(spark, sfDir, nlist, carry)
       }
-    })
+    }
+  }
+
+  /** Whether an inverted-list table has the current store layout: the
+    * `label` (r16) and `lang` (r17) filter attributes the serving path
+    * scans. A store without them is stale like one older than its
+    * corpus, and refits. */
+  private def ivfLayoutCurrent(cells: DataFrame): Boolean =
+    cells.columns.contains("label") && cells.columns.contains("lang")
 
   /** Fit the quantizer from the corpus and publish the store in one
     * atomic swap. `carryTombstones` is the DRIFT-REBUILD path (ADVICE
@@ -1580,6 +1469,9 @@ object Similarity {
           liveRows.unpersist()
           ()
         }
+        // a new store generation: every session entry read from the old
+        // one drops (the entry this fit is filling stays)
+        SessionCache.invalidate(dir)
         if (carryTombstones.isEmpty)
           Some(CoarseQuantizer(n, model.clusterCenters.map(_.toArray), assigned))
         else {
@@ -1610,8 +1502,8 @@ object Similarity {
     *    the majority of the data never influenced the fit, regardless
     *    of how the occupancy happens to look.
     *
-    * A rebuild invalidates the marker, clears the session caches, and
-    * refits through the normal (atomic-swap) build path — which also
+    * A rebuild invalidates the marker and the index's session entries,
+    * and refits through the normal (atomic-swap) build path — which also
     * resets the appended counter. Idempotent when healthy. */
   def ensureIvfIndex(spark: SparkSession, sfDir: String,
       maxBalanceRatio: Double = MaxBalanceRatio,
@@ -1637,9 +1529,9 @@ object Similarity {
           // only an explicit store wipe may drop deletions)
           val deleted = tombstones(spark, dir)
             .map(_.collect().map(_.getLong(0)).toSeq).getOrElse(Seq.empty)
-          clearCaches()
-          quantizerCache.put((spark.sparkContext.applicationId, sfDir, 0),
-            fitQuantizer(spark, sfDir, 0, deleted))
+          // the fit publishes a new generation and invalidates the
+          // index's entries; the next access loads it from the store
+          fitQuantizer(spark, sfDir, 0, deleted).foreach(_.assigned.unpersist())
         } else {
           // tombstone pressure: deleted rows stay physical until a
           // compaction folds them out — past the ceiling the probe
@@ -1734,11 +1626,10 @@ object Similarity {
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).map(_._2)
     val cells0 = spark.read.parquet(cellsPath(dir))
-    // layout guard: appending label-less rows into a labeled store (or
-    // vice versa) would leave a mixed-schema parquet directory
-    require(cells0.columns.contains("label") && cells0.columns.contains("lang"),
-      s"pre-r17 inverted-list layout at $dir (missing filter-attribute " +
-        "columns) — rebuild (ensureIvfIndex) before appending")
+    // an old-layout store is stale: appending would leave a mixed-schema
+    // parquet directory, and ensureIvfIndex refits it instead
+    require(ivfLayoutCurrent(cells0),
+      s"old inverted-list layout at $dir — rebuild (ensureIvfIndex) before appending")
     val indexedIds = cells0.select(col("vec_id"))
     val ts = tombstones(spark, dir)
     // the ghost guard exempts tombstoned ids: a DELETED vector leaving
@@ -1849,16 +1740,12 @@ object Similarity {
     // index was already fresh): a no-op append over a rewritten store
     // must leave the marker stale so the reader refits (ADVICE r14)
     if (added > 0 || markerWasFresh) renewMarker(dir)
-    // the store grew: every per-corpus session cache (counts, exact
-    // samples, candidates, signatures) is stale by definition. A
-    // no-op append over a FRESH store changed nothing — invalidating
-    // would force every consumer to repay its reference scans for free
-    // (round 15). But added == 0 over a stale marker means the CORPUS
-    // moved (a fully-tombstoned batch, or a same-id rewrite) — the
-    // cached counts and reference frames no longer describe it, so
-    // invalidate on corpus change, not only on index growth (ADVICE
-    // r16).
-    if (added > 0 || !markerWasFresh) clearCaches()
+    // the embeddings change behind an append renews the entries derived
+    // from them by itself (they key on its identity); the lists grew in
+    // place under the same cells path, so the entries pinned to this
+    // index generation (serving scan, serving quantizer) drop here. A
+    // no-op append changed nothing and drops nothing (round 15).
+    if (added > 0) SessionCache.invalidate(dir)
     // certify the corpus state this call verified (slow path) or
     // proved still-covered-plus-growth (fast path) — the next append's
     // fast-path evidence
@@ -2105,7 +1992,7 @@ object Similarity {
     * resurrect a takedown; ADVICE r16) — while never-seen or
     * already-deleted ids don't count. Only this (corpus, nlist) key's
     * session caches clear — the corpus itself did not change
-    * ([[clearIndexCaches]]). */
+    * (`SessionCache.invalidate` of the index dir). */
   def ivfIndexDelete(spark: SparkSession, sfDir: String, ids: Seq[Long],
       nlist: Int = 0): Long = {
     import spark.implicits._
@@ -2163,7 +2050,7 @@ object Similarity {
         hit.unpersist()
         ()
       }
-      clearIndexCaches(sfDir, nlist)
+      SessionCache.invalidate(indexDir(sfDir, nlist))
     }
     added
     }
@@ -2265,7 +2152,7 @@ object Similarity {
     // retention: keep exactly the superseded generation; drop anything
     // older (unreachable by any reader within one compaction of now)
     StoreLifecycle.retainGenerations(dir, Seq("cells"), Set(curSfx, nextSfx))
-    clearIndexCaches(sfDir, nlist)
+    SessionCache.invalidate(indexDir(sfDir, nlist))
     }
   }
 
@@ -2299,18 +2186,9 @@ object Similarity {
     * session-cache. */
   def indexLifecycleGates(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // NOT computeIfAbsent: the compute path runs delete/compact, whose
-    // clearIndexCaches mutates THIS map — a recursive update inside
-    // computeIfAbsent violates its contract (ConcurrentHashMap may
-    // throw or corrupt the bin). get-then-put tolerates the recursion;
-    // a racing duplicate compute is deterministic and harmless.
-    val key = (spark.sparkContext.applicationId, sfDir)
-    val rows = Option(lifecycleVerdictCache.get(key)).getOrElse {
-      val computed = computeLifecycleGates(spark, sfDir)
-      lifecycleVerdictCache.put(key, computed)
-      computed
-    }
-    rows.toDF("metric", "ok").orderBy(col("metric"))
+    SessionCache(spark, Tables.paths(sfDir, "embeddings", "documents"),
+        "sim.lifecycleGates")(computeLifecycleGates(spark, sfDir))
+      .toDF("metric", "ok").orderBy(col("metric"))
   }
 
   private val LifecycleNlist = 64
@@ -2368,6 +2246,8 @@ object Similarity {
     deleteRecursively(lshGateDir)
     spark.read.parquet(lshBucketsPath(lshIndexDir(sfDir, 8, 2.0)))
       .write.mode("overwrite").parquet(s"$lshGateDir/buckets")
+    spark.read.parquet(s"${lshIndexDir(sfDir, 8, 2.0)}/vhashes")
+      .write.mode("overwrite").parquet(s"$lshGateDir/vhashes")
     new java.io.File(lshGateDir, "_SUCCESS").createNewFile()
     val rowHash = xxhash64(col("tbl"), col("bks"), col("bdirs"), col("kh"),
       col("vec_id"), col("nsplits"), col("salt")).cast("decimal(38,0)")
@@ -2444,7 +2324,7 @@ object Similarity {
             .filter(f => f.isDirectory &&
               Option(f.listFiles()).getOrElse(Array.empty).isEmpty)
             .foreach(_.delete())
-          clearIndexCaches(sfDir, LifecycleNlist)
+          SessionCache.invalidate(dir)
         }
       }
     }
@@ -2653,9 +2533,6 @@ object Similarity {
     * shared subplan of the IVF tier — one build per corpus serves all
     * consumers (~16 bytes/pair), the same lifecycle as the signature
     * and quantizer caches. */
-  private val ivfCandCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), DataFrame]()
-
   /** Probe-schedule auto-tune: `nprobe ≤ 0` resolves to
     * max(12, ⌈2.5·√nlist⌉). A FIXED nprobe while the auto quantizer
     * grows nlist as √n shrinks probe coverage as n^(-1/2) — measured as
@@ -2694,27 +2571,23 @@ object Similarity {
       nprobe0: Int, queryPred: Option[org.apache.spark.sql.Column]): DataFrame = {
     val fitted = coarseQuantizer(spark, sfDir, nlist).get.centroids.length
     val nprobe = if (nprobe0 > 0) nprobe0 else autoNprobe(fitted)
-    val key = (spark.sparkContext.applicationId, sfDir, math.max(nlist, 0), nprobe)
     queryPred match {
       case None => ivfCandidates(spark, sfDir, nlist, nprobe)
       case Some(p) =>
-        // single get, not containsKey-then-get: a concurrent
-        // clearCaches() between the two calls would NPE (ADVICE r13)
-        Option(ivfCandCache.get(key)) match {
-          case Some(cached) => cached.filter(p)
-          case None => ivfCandidatesPlan(spark, sfDir, nlist, nprobe, Some(p))
-        }
+        SessionCache.peek[DataFrame](spark, Tables.paths(sfDir, "embeddings"),
+            "sim.ivfCandidates", indexDir(sfDir, nlist), nprobe)
+          .fold(ivfCandidatesPlan(spark, sfDir, nlist, nprobe, Some(p)))(_.filter(p))
     }
   }
 
-  /** The session-cached FULL pair table — see [[ivfCandCache]]. */
+  /** The session-cached FULL pair table (see the caching note above). */
   private def ivfCandidates(spark: SparkSession, sfDir: String, nlist: Int,
       nprobe0: Int): DataFrame = {
     val fitted = coarseQuantizer(spark, sfDir, nlist).get.centroids.length
     val nprobe = if (nprobe0 > 0) nprobe0 else autoNprobe(fitted)
-    ivfCandCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, math.max(nlist, 0), nprobe),
-      _ => ivfCandidatesPlan(spark, sfDir, nlist, nprobe, None)
+    SessionCache(spark, Tables.paths(sfDir, "embeddings"),
+        "sim.ivfCandidates", indexDir(sfDir, nlist), nprobe)(
+      ivfCandidatesPlan(spark, sfDir, nlist, nprobe, None)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
@@ -3082,11 +2955,11 @@ object Similarity {
       if (keepVectors) Seq.empty[(Long, Long, Double, Seq[Double])]
         .toDF("rank", "vec_id", "sim", "v")
       else Seq.empty[(Long, Long, Double)].toDF("rank", "vec_id", "sim")
-    val q = coarseQuantizer(spark, sfDir, 0) match {
-      case Some(cq) => cq
+    val (n, centroids) = servingQuantizer(spark, sfDir) match {
+      case Some(nc) => nc
       case None => return emptyResult()
     }
-    val nlist = q.centroids.length
+    val nlist = centroids.length
     val base = math.min(nlist, if (nprobe > 0) nprobe else autoNprobe(nlist))
     // label-only predicates serve from METADATA (round-16 verdict ask
     // #4: the probe widening previously ran a semi-join count job per
@@ -3103,20 +2976,20 @@ object Similarity {
       case (None, _) => base
       case (Some(_), Some(poolN)) =>
         if (poolN == 0L) return emptyResult()
-        val sel = poolN.toDouble / q.n
+        val sel = poolN.toDouble / n
         math.min(nlist.toDouble, math.ceil(base / sel)).toInt
       case (Some(p), None) =>
         // fallback (non-label predicate, or a statless pre-r16 store):
         // the live-index count job — corpus-side counts overstate the
         // servable pool on an index carrying tombstones (round 15)
         val ids = emb(spark, sfDir).filter(p).select(col("vec_id"))
-        val poolN = q.assigned.select(col("vec_id"))
-          .join(ids, Seq("vec_id"), "left_semi").count()
+        val poolN = coarseQuantizer(spark, sfDir, 0).map(_.assigned.select(col("vec_id"))
+          .join(ids, Seq("vec_id"), "left_semi").count()).getOrElse(0L)
         if (poolN == 0L) return emptyResult()
-        val sel = poolN.toDouble / q.n
+        val sel = poolN.toDouble / n
         math.min(nlist.toDouble, math.ceil(base / sel)).toInt
     }
-    val probeCells = probeCellsFor(query, q.centroids, np)
+    val probeCells = probeCellsFor(query, centroids, np)
     // the probed-cell read: `cell` is the PARTITION column of the
     // persisted store, so the isin prunes directories at planning time;
     // a pool predicate then applies WITHIN the pruned scan (pruning +
@@ -3126,9 +2999,7 @@ object Similarity {
     // measured serving latency (round-16 soak: p50 698 → 160 ms at
     // the 100k store), and a resident service lists its index once.
     // Append/delete/compact clear this cache with the others.
-    val scanned = servingScanCache.computeIfAbsent(
-        (spark.sparkContext.applicationId, cellsPath(indexDir(sfDir, 0))),
-        k => spark.read.parquet(k._2))
+    val scanned = servingScan(spark, sfDir)
       .where(col("cell").isin(probeCells.map(x => x: Any): _*))
     // tombstoned rows are physical until compaction — deleted vectors
     // must not serve (the same anti-join the batch load path applies)
@@ -3189,11 +3060,11 @@ object Similarity {
     def emptyResult() = Seq.empty[(Long, Long, Long, Double)]
       .toDF("query_id", "rank", "vec_id", "sim")
     if (queries.isEmpty) return emptyResult()
-    val q = coarseQuantizer(spark, sfDir, 0) match {
-      case Some(cq) => cq
+    val (n, centroids) = servingQuantizer(spark, sfDir) match {
+      case Some(nc) => nc
       case None => return emptyResult()
     }
-    val nlist = q.centroids.length
+    val nlist = centroids.length
     val base = math.min(nlist, if (nprobe > 0) nprobe else autoNprobe(nlist))
     val statsPool = poolPred.flatMap(p =>
       statsPoolCount(spark, indexDir(sfDir, 0), p))
@@ -3201,25 +3072,23 @@ object Similarity {
       case (None, _) => base
       case (Some(_), Some(poolN)) =>
         if (poolN == 0L) return emptyResult()
-        val sel = poolN.toDouble / q.n
+        val sel = poolN.toDouble / n
         math.min(nlist.toDouble, math.ceil(base / sel)).toInt
       case (Some(p), None) =>
         val ids = emb(spark, sfDir).filter(p).select(col("vec_id"))
-        val poolN = q.assigned.select(col("vec_id"))
-          .join(ids, Seq("vec_id"), "left_semi").count()
+        val poolN = coarseQuantizer(spark, sfDir, 0).map(_.assigned.select(col("vec_id"))
+          .join(ids, Seq("vec_id"), "left_semi").count()).getOrElse(0L)
         if (poolN == 0L) return emptyResult()
-        val sel = poolN.toDouble / q.n
+        val sel = poolN.toDouble / n
         math.min(nlist.toDouble, math.ceil(base / sel)).toInt
     }
     // per-query probe sets, driver-side (|queries| × nlist argmin —
     // metadata-scale next to the scan they prune)
     val probePairs = queries.iterator.zipWithIndex.flatMap {
-      case (qv, qi) => probeCellsFor(qv, q.centroids, np).map(c => (qi.toLong, c))
+      case (qv, qi) => probeCellsFor(qv, centroids, np).map(c => (qi.toLong, c))
     }.toIndexedSeq
     val unionCells = probePairs.map(_._2).distinct
-    val scanned = servingScanCache.computeIfAbsent(
-        (spark.sparkContext.applicationId, cellsPath(indexDir(sfDir, 0))),
-        kk => spark.read.parquet(kk._2))
+    val scanned = servingScan(spark, sfDir)
       .where(col("cell").isin(unionCells.map(x => x: Any): _*))
     val prunedScan = tombstones(spark, indexDir(sfDir, 0)) match {
       case Some(ts) => scanned.join(broadcast(ts), Seq("vec_id"), "left_anti")
@@ -3252,20 +3121,17 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  private val servingBatchGateCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Boolean]()
-
   /** Driver-hashed verdict: the batched serving path returns EXACTLY
     * what the per-query loop returns — same rows, same ranks, same
     * display-rounded sims — for a deterministic query sample (the
     * first 5 corpus vectors). Literal-TRUE oracle. */
   def servingBatchGate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val key = (spark.sparkContext.applicationId, sfDir)
-    val ok = Option(servingBatchGateCache.get(key)).getOrElse {
+    val ok = SessionCache(spark, Tables.paths(sfDir, "embeddings", "documents"),
+        "sim.servingBatchGate", indexDir(sfDir, 0)) {
       val qs = emb(spark, sfDir).orderBy(col("vec_id")).limit(5)
         .select(col("v")).collect().map(_.getSeq[Double](0).toArray).toSeq
-      val computed = if (qs.isEmpty) true
+      if (qs.isEmpty) true
       else {
         val batch = searchVectors(spark, sfDir, qs).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -3276,8 +3142,6 @@ object Similarity {
         }
         batch == looped
       }
-      servingBatchGateCache.put(key, computed)
-      computed
     }
     Seq(("batch_equals_looped_serving", ok)).toDF("metric", "ok")
   }
@@ -3530,9 +3394,6 @@ object Similarity {
     * store — and the decode is a cheap per-row `zip_with` at scan time;
     * materializing it once per session here is the scan-side decode,
     * amortized across the bench's repeated invocations. */
-  private val pqCodeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), Option[DataFrame]]()
-
   /** Round-15 (verdict ask #3): the codes PERSIST in the index store —
     * `<indexDir>/pq/codes` holds (vec_id, cell, int8-valued qcode,
     * scale), cell-partitioned like the inverted lists, under its own
@@ -3548,8 +3409,8 @@ object Similarity {
     * assignment on next use. A quantizer REBUILD swaps the whole
     * parent directory, taking the now-invalid codes with it. */
   private def pqDecoded(spark: SparkSession, sfDir: String, nlist: Int): Option[DataFrame] =
-    pqCodeCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir, math.max(nlist, 0)),
-      _ => coarseQuantizer(spark, sfDir, nlist).map { q =>
+    SessionCache(spark, Tables.paths(sfDir, "embeddings"), "sim.pqDecoded", indexDir(sfDir, nlist))(
+      coarseQuantizer(spark, sfDir, nlist).map { q =>
         val centDf = spark.createDataFrame(
           q.centroids.zipWithIndex.toIndexedSeq.map { case (c, i) => (i, c) }).toDF("cell", "centroid")
         val pqDir = indexDir(sfDir, nlist) + "/pq"
@@ -3664,7 +3525,7 @@ object Similarity {
     *    neighbor POOL stays the full corpus), floor 0.9 = the CI gate
     *    (full-measurement values 0.997/0.95 at sf0.01, 0.935 at sf0.1
     *    for LSH). The exact reference is computed once per (app,
-    *    corpus) and session-cached ([[exactSampleCache]]) — it is a
+    *    corpus) and session-cached — it is a
     *    fixed reference table, and re-deriving the O(n²/5) scan on
     *    every invocation was the single most expensive part of the
     *    gate (measured 2.87 s at sf0.1).
@@ -3684,34 +3545,17 @@ object Similarity {
     *    its job.
     *
     * Empty inputs are vacuously ok (recall over zero reference rows). */
-  /** Session cache of the recall gate's exact sampled top-k reference
-    * (see [[recallGates]]): the reference is deterministic per corpus,
-    * so computing the O(n²/5) exact scan once per session is pure
-    * saving — the operators UNDER test stay live on every call. */
-  private val exactSampleCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  /** Session cache of the collected recall verdicts, keyed by (app,
-    * corpus): the gate's component-recall member runs a connected-
-    * components pass over the ~1M-candidate minhash graph at sf0.1 —
-    * deterministic per corpus, so one computation serves every
+  /** The collected recall verdicts are session-cached per (corpus,
+    * default index): the gate's component-recall member runs a
+    * connected-components pass over the ~1M-candidate minhash graph at
+    * sf0.1 — deterministic per corpus, so one computation serves every
     * invocation (measured 8.9 s/pass uncached under the bench's double
     * timing). The cached value is four (metric, floor, ok) rows. */
-  private val recallVerdictCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(String, Double, Boolean)]]()
-
-  /** Session cache of the index-lifecycle verdict rows (see
-    * [[indexLifecycleGates]]) — the gate mutates and re-reads its own
-    * dedicated index generation, which is deterministic per corpus but
-    * not free; one run serves every invocation. */
-  private val lifecycleVerdictCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(String, Boolean)]]()
-
   def recallGates(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    recallVerdictCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir),
-      _ => computeRecallGates(spark, sfDir).collect()
+    SessionCache(spark, Tables.paths(sfDir, "embeddings", "documents"),
+        "sim.recallGates", indexDir(sfDir, 0))(
+      computeRecallGates(spark, sfDir).collect()
         .map(r => (r.getString(0), r.getDouble(1), r.getBoolean(2))).toSeq)
       .toDF("metric", "floor", "ok")
       .orderBy(col("metric"))
@@ -3733,9 +3577,12 @@ object Similarity {
           .join(broadcast(t.select(col("vec_id").as("other_id"))),
             Seq("other_id"), "left_anti")
     }
-    val exact = servable(exactSampleCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir),
-      _ => cosineTopK(spark, sfDir, 5, Some(pred))
+    // the exact sampled reference is deterministic per corpus, so the
+    // O(n²/5) scan runs once per session; the operators UNDER test stay
+    // live on every call
+    val exact = servable(SessionCache(spark, Tables.paths(sfDir, "embeddings"),
+        "sim.exactRecallSample")(
+      cosineTopK(spark, sfDir, 5, Some(pred))
         .select(col("vec_id"), col("other_id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
     val lsh = lshTopK(spark, sfDir, queryPred = Some(pred))

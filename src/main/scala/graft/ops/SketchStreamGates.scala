@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+
 /** Driver-surface regression tripwires for the remaining rows-only
   * operators — the `fit_quality_gates` / `ann_recall_gates` pattern
   * applied to the sketch / streaming / spectral / model-based surface:
@@ -63,15 +65,9 @@ object SketchStreamGates {
     * (the bench times every query twice — measured 17.9 s/pass at
     * sf0.1 uncached). The cached value is the collected verdict
     * booleans, not a persisted plan. */
-  private val verdictCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(String, Boolean)]]()
-
-  def clearCaches(): Unit = verdictCache.clear()
-
   def gates(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    verdictCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir), _ => computeGates(spark, sfDir))
+    SessionCache(spark, Seq(sfDir), "sketchStream.gates")(computeGates(spark, sfDir))
       .toDF("metric", "ok")
       .orderBy(col("metric"))
   }

@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Text-analysis operators over the `documents` table (north-star
   * extension surface — BASELINE.json; not in the reference). All pure
   * built-in expressions: codegen'd, no UDFs, fully pushdown-friendly.
@@ -126,7 +129,7 @@ object TextAnalysis {
     * integer counts — bit-identical in any engine, no rounding
     * needed for the oracle hash.
     *
-    * The counts table is session-cached (the `floorPairCache` pattern):
+    * The counts table is session-cached (the NearDup floor-pair pattern):
     * the head and the grand total are two consumers of the same
     * aggregation, and without the cache Spark plans two full tokenize
     * scans of the corpus (measured: AQE does NOT reuse the exchange —
@@ -151,12 +154,8 @@ object TextAnalysis {
 
   /** Session cache for the per-token corpus counts ([[vocabCoverage]]'s
     * shared subplan — head selection and grand total both read it). */
-  private val vocabCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   private def cachedVocabCounts(spark: SparkSession, sfDir: String): DataFrame =
-    vocabCountCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir),
-      _ => docs(spark, sfDir)
+    SessionCache(spark, Tables.paths(sfDir, "documents"), "text.vocabCounts")(docs(spark, sfDir)
         .select(explode(regexp_extract_all(col("text"),
           lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("n"))
@@ -513,28 +512,11 @@ object TextAnalysis {
     * planted-substring behavior is pinned in OpsSpec. */
   def winnowOverlap(spark: SparkSession, sfDir: String, k: Int = 8, sketchSize: Int = 4,
       maxDf: Int = 64, minShared: Int = 2): DataFrame =
-    overlapCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, k, sketchSize, maxDf, minShared),
-      _ => winnowOverlapDirect(spark, sfDir, k, sketchSize, maxDf, minShared)
+    // cached: this query and `Curation.splitSubstringLeakage` share the pair table
+    SessionCache(spark, Tables.paths(sfDir, "documents"),
+        "text.winnowOverlap", k, sketchSize, maxDf, minShared)(
+      winnowOverlapDirect(spark, sfDir, k, sketchSize, maxDf, minShared)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Session cache for the overlap pair table — two registered queries
-    * consume it ([[winnowOverlap]] itself and the cross-split
-    * decontamination view `Curation.splitSubstringLeakage`); the pair
-    * build is the expensive part and the result is (id, id, long,
-    * double) rows — metadata-scale. Same pattern as
-    * `NearDup.floorPairCache`. */
-  private val overlapCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int, Int, Int), DataFrame]()
-
-  /** Release the cached overlap tables (twin of the other session
-    * caches — see `Dedup.clearCaches`). */
-  def clearCaches(): Unit = {
-    overlapCache.values.forEach(df => { df.unpersist(); () })
-    overlapCache.clear()
-    vocabCountCache.values.forEach(df => { df.unpersist(); () })
-    vocabCountCache.clear()
-  }
 
   private def winnowOverlapDirect(spark: SparkSession, sfDir: String, k: Int, sketchSize: Int,
       maxDf: Int, minShared: Int): DataFrame = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+
 /** One named time series, materialized in an executor task. Values are in
   * evaluation-time order; calendar dates are discarded (positional `ts`
   * semantics, TimeSeriesFunctions_GPL_0.5.1.R:32) — ordering comes solely
@@ -135,30 +137,14 @@ object SeriesStore {
     def build = stampedSeries(spark, sfDir, elements, dated = false)
       .select(col("element"), col("values")).as[Series]
     // the full-store read feeds EVERY fit query — materialize it once
-    // per (app, corpus, source identity): one (element, values) row per
+    // per (app, events store as it is now): one (element, values) row per
     // series, ≤10k points each, so the persisted table is per-series-
-    // bounded, not corpus-bounded. A regenerated source replaces (and
+    // bounded, not corpus-bounded. A regenerated events store refills (and
     // unpersists) the entry. Element-filtered reads stay uncached
     // (partition-pruned, already cheap).
     if (elements.nonEmpty) build
-    else {
-      val id = DerivedLayout.identity(eventsPath(sfDir))
-      seriesCache.compute((spark.sparkContext.applicationId, sfDir), (_, old) =>
-        if (old != null && old._1 == id) old
-        else {
-          if (old != null) old._2.unpersist()
-          (id, build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        })._2
-    }
-  }
-
-  private val seriesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Dataset[Series])]()
-
-  /** Release the cached series tables (long-lived multi-corpus sessions). */
-  def clearCaches(): Unit = {
-    seriesCache.values.forEach(e => { e._2.unpersist(); () })
-    seriesCache.clear()
+    else SessionCache(spark, Tables.paths(sfDir, "events"), "series.fullStore")(
+      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   private def eventsPath(sfDir: String): String = s"$sfDir/events.parquet"

@@ -24,6 +24,10 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
+  /** Store path of each named table of a corpus: the sources a
+    * [[graft.core.SessionCache]] entry derived from those tables names. */
+  def paths(sfDir: String, names: String*): Seq[String] = names.map(n => s"$sfDir/$n.parquet")
+
   val NanosPerDay: Long = 86400L * 1000000000L
 
   /** events with `ts` as epoch-nanos LONG (exact; see scaladoc above).

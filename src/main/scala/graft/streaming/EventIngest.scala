@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionCache
+import graft.sources.Tables
+
 /** Structured-Streaming ingest of the observation store (engine
   * extension — SURVEY.md §2.2-H; the reference is batch pull-only and a
   * stale model must be deleted by hand). A stream of raw events becomes
@@ -456,9 +459,6 @@ object EventIngest {
     gained.get()
   }
 
-  private val docIngestGateCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(String, Boolean)]]()
-
   /** Driver-hashed verdict rows for the streaming document ingest —
     * the `lex_index_lifecycle_gates` pattern on [[docIngestAvailableNow]]:
     * a DEDICATED gate corpus (a doc subset copied under the store
@@ -474,13 +474,9 @@ object EventIngest {
     *    corpus — the per-file stamps and the doclens anti-join hold. */
   def docIngestGates(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val key = (spark.sparkContext.applicationId, sfDir)
-    val rows = Option(docIngestGateCache.get(key)).getOrElse {
-      val computed = computeDocIngestGates(spark, sfDir)
-      docIngestGateCache.put(key, computed)
-      computed
-    }
-    rows.toDF("metric", "ok").orderBy(col("metric"))
+    SessionCache(spark, Tables.paths(sfDir, "documents"),
+        "ingest.docIngestGates")(computeDocIngestGates(spark, sfDir))
+      .toDF("metric", "ok").orderBy(col("metric"))
   }
 
   private def computeDocIngestGates(spark: SparkSession,
@@ -491,12 +487,9 @@ object EventIngest {
       return metrics.map((_, true)) // vacuously ok without a corpus
     val gc = graft.sources.DerivedLayout.corpusRoot(sfDir) + "/doc_ingest_gate"
     deleteRecursively(new java.io.File(gc))
-    // the gate corpus has its OWN store root — reset it too, plus the
-    // session caches pointing at it (corpus-SCOPED: a global clear
-    // here wiped the shared corpus's gate/scan caches between the two
-    // bench passes and made lex_index_lifecycle_gates recompute twice)
+    // the gate corpus has its OWN store root — reset it too (the
+    // rebuild below invalidates the session entries of its store)
     deleteRecursively(new java.io.File(graft.sources.DerivedLayout.corpusRoot(gc)))
-    graft.ops.Lexical.clearLexCachesForCorpus(gc)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.filter(pmod(col("doc_id"), lit(7L)) =!= 3L)
       .write.mode("overwrite").parquet(s"$gc/documents.parquet")
@@ -814,21 +807,13 @@ object EventIngest {
     * smoothed shares, both from events strictly before the span-midpoint
     * pivot. Returns (pivot day, per-element reference) — metadata-scale
     * (|elements|×19 doubles) by construction. */
-  /** Session cache of the frozen drift reference — the r10 gate rule
-    * ("deterministic per corpus ⇒ session-cache the COLLECTED rows"):
-    * the reference is a pure function of the corpus, every monitor
-    * replay re-derived it with four driver actions (~0.5 s of the
-    * stream_drift lifecycle). Keyed on the corpus file's (mtime, length)
-    * so a regenerated store self-invalidates. */
-  private val driftRefCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Long), (java.sql.Date, Map[String, DriftRef])]()
-
-  def driftReference(spark: SparkSession, sfDir: String): (java.sql.Date, Map[String, DriftRef]) = {
-    val f = new java.io.File(s"$sfDir/events.parquet")
-    driftRefCache.computeIfAbsent(
-      (spark.sparkContext.applicationId, sfDir, f.lastModified, f.length),
-      _ => computeDriftReference(spark, sfDir))
-  }
+  /** Session-cached (the r10 gate rule: "deterministic per corpus ⇒
+    * session-cache the COLLECTED rows"): the reference is a pure
+    * function of the corpus, and every monitor replay re-derived it
+    * with four driver actions (~0.5 s of the stream_drift lifecycle). */
+  def driftReference(spark: SparkSession, sfDir: String): (java.sql.Date, Map[String, DriftRef]) =
+    SessionCache(spark, Tables.paths(sfDir, "events"),
+        "ingest.driftReference")(computeDriftReference(spark, sfDir))
 
   private def computeDriftReference(spark: SparkSession, sfDir: String): (java.sql.Date, Map[String, DriftRef]) = {
     val ev = graft.sources.Tables.events(spark, sfDir)

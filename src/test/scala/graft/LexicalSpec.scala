@@ -77,7 +77,7 @@ class LexicalSpec extends AnyFunSuite with TempDirs {
     val appended = Lexical.searchText(spark, dir, Seq("beta", "gamma"), 10)
       .collect().toSeq
     // rebuild from scratch into a fresh store and compare row-for-row
-    Lexical.clearAllLexCaches()
+    graft.core.SessionCache.clearAll()
     rmTree(Lexical.lexIndexDir(dir))
     graft.ops.Lexical.ensureLexIndex(spark, dir)
     val rebuilt = Lexical.searchText(spark, dir, Seq("beta", "gamma"), 10)
@@ -157,7 +157,7 @@ class LexicalSpec extends AnyFunSuite with TempDirs {
     // OTHER terms share their buckets.
     val wide = corpus((1L to 40L).map(i =>
       i -> ((1 to 50).map(j => s"w${i}x$j").mkString(" ") + " anchor")))
-    Lexical.clearAllLexCaches()
+    graft.core.SessionCache.clearAll()
     val before = Lexical.termDfCacheSize
     val r = Lexical.searchText(spark, wide, Seq("anchor", "w1x1", "oov1"), 5).collect()
     assert(r.nonEmpty)
@@ -365,7 +365,7 @@ class LexicalSpec extends AnyFunSuite with TempDirs {
     // invariant rather than ever reporting a served-stale state
     java.nio.file.Files.write(
       java.nio.file.Paths.get(sdir, "_lex_layout"), "1".getBytes("UTF-8"))
-    Lexical.clearAllLexCaches()
+    graft.core.SessionCache.clearAll()
     val healed = Lexical.lexIndexHealth(spark, dir).collect()
       .map(r => r.getString(0) -> r.getBoolean(2)).toMap
     assert(healed("lex_layout_current"), "health must heal a stale layout via ensure")

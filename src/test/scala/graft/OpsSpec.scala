@@ -168,7 +168,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     assert(marker.isFile, "index persisted at first fit")
     val builtAt = marker.lastModified
     // new cache generation → the LOAD path; results must be identical
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val loaded = topk()
     assert(loaded == fitted, "loaded index must reproduce the fitted ranking")
     assert(marker.lastModified == builtAt, "second session loaded, not refit")
@@ -176,7 +176,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     // ranking, proving the old index was not silently served)
     Thread.sleep(1100) // dir mtime granularity
     writeCorpus(777L)
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val refit = topk()
     assert(marker.lastModified > builtAt, "stale index must rebuild")
     assert(refit != fitted, "rebuilt index reflects the new corpus")
@@ -314,7 +314,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     val builtAt = pqMarker.lastModified
     // fresh cache generation: the LOAD path must reproduce the ranking
     // without re-encoding (marker untouched)
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     assert(pq() == fitted, "loaded pq codes must reproduce the fitted ranking")
     assert(pqMarker.lastModified == builtAt, "second session loaded, not re-encoded")
     // a grown store invalidates the codes by the mirror rule: the
@@ -537,14 +537,14 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     // append-vs-rebuild bit-identity at this geometry (g identical on
     // both sides of the growth, every bucket under the salt cap): a
     // from-scratch rebuild over the grown corpus serves the same top-k
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val del = new scala.reflect.io.Directory(new java.io.File(idxDir))
     del.deleteRecursively()
     val rebuilt = topk()
     assert(appended == rebuilt, "append-vs-rebuild top-k identical")
     // ghost guard: a shrunk corpus refuses the append loudly
     rows(0 until 100, 0L).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val ex = intercept[IllegalArgumentException](Similarity.lshIndexAppend(spark, dir))
     assert(ex.getMessage.contains("rewritten or shrank"))
   }
@@ -561,7 +561,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     Similarity.lshTopK(spark, dir, k = 3).collect() // build store + sidecar
     val idxDir = Similarity.lshIndexDir(dir, 8, 2.0)
     mixed(340, baseShift).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     assert(Similarity.lshIndexAppend(spark, dir) == 40L)
     // ADVICE r17 (medium): the sidecar rows must be MATERIALIZED before
     // the buckets write — a lazily re-evaluated anti-join would see the
@@ -572,7 +572,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     // refusable at all
     mixed(340, i => if (i == 320) 555L else baseShift(i))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val ex = intercept[IllegalArgumentException](Similarity.lshIndexAppend(spark, dir))
     assert(ex.getMessage.contains("changed content"), ex.getMessage)
     // ADVICE r17 (low): takedown-replace — tombstoning the rewritten
@@ -580,7 +580,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     // (previously it refused FOREVER, vhashes surviving compaction)
     Similarity.ivfTopK(spark, dir, k = 3).collect() // registry's index generation
     Similarity.ivfIndexDelete(spark, dir, Seq(320L))
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     assert(Similarity.lshIndexAppend(spark, dir) == 0L,
       "takedown-replace must not refuse the append")
     // compaction folds the tombstoned id out of the sidecar too
@@ -625,7 +625,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     val e = intercept[IllegalArgumentException](Similarity.ivfIndexAppend(spark, dir))
     assert(e.getMessage.contains("re-shipped"), e.getMessage)
     // the refusal happened before any write: the store is unchanged
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val cellsAfter = spark.read.parquet(cellsDir)
       .select("vec_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(cellsAfter == cellsBefore, "refused append must leave the store untouched")
@@ -647,7 +647,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     // fast path engages, increment guard must refuse via the sidecar
     rows(9 until 10, 777L).union(rows(310 until 311, 2L))
       .write.mode("append").parquet(s"$dir/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val e = intercept[IllegalArgumentException](Similarity.lshIndexAppend(spark, dir))
     assert(e.getMessage.contains("re-shipped"), e.getMessage)
   }
@@ -1032,7 +1032,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     rows(0 until 300, 0L).write.mode("overwrite").parquet(s"$dirA/embeddings.parquet")
     Similarity.ivfTopK(spark, dirA, k = 3).collect()
     rows(0 until 200, 0L).write.mode("overwrite").parquet(s"$dirA/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val ex = intercept[IllegalArgumentException] {
       Similarity.ivfIndexAppend(spark, dirA)
     }
@@ -1049,7 +1049,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     val builtAt = marker.lastModified
     Thread.sleep(1100) // mtime granularity
     rows(0 until 300, 555L).write.mode("overwrite").parquet(s"$dirB/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val exB = intercept[IllegalArgumentException] {
       Similarity.ivfIndexAppend(spark, dirB)
     }
@@ -1067,7 +1067,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     rows(0 until 300, 0L).write.mode("overwrite").parquet(s"$dirC/embeddings.parquet")
     Similarity.ivfTopK(spark, dirC, k = 3).collect()
     rows(0 until 360, 555L).write.mode("overwrite").parquet(s"$dirC/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val exC = intercept[IllegalArgumentException] {
       Similarity.ivfIndexAppend(spark, dirC)
     }
@@ -1089,7 +1089,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     assert(Similarity.ivfIndexAppend(spark, dirD) == 20L, "fast-path growth appends")
     // rewrite: old corpus files replaced — coverage broken, refusal
     rows(0 until 400, 555L).write.mode("overwrite").parquet(s"$dirD/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val exD = intercept[IllegalArgumentException] {
       Similarity.ivfIndexAppend(spark, dirD)
     }
@@ -1114,7 +1114,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     Similarity.ivfIndexDelete(spark, dir, Seq(5L))
     Thread.sleep(1100) // mtime granularity: make the corpus visibly newer
     rows(300 until 340, 99L).write.mode("append").parquet(s"$dir/embeddings.parquet")
-    Similarity.clearCaches()
+    graft.core.SessionCache.clearAll()
     val topk = Similarity.ivfTopK(spark, dir, k = 3).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     assert(topk.nonEmpty && !topk.exists(p => p._1 == 5L || p._2 == 5L),
@@ -1133,7 +1133,7 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     (10L to 12L).map(i => (i, "en", "s", s"alpha beta w$i", 3L))
       .toDF("doc_id", "lang", "source", "text", "n_chars")
       .coalesce(1).write.mode("append").parquet(s"$ldir/documents.parquet")
-    graft.ops.Lexical.clearAllLexCaches()
+    graft.core.SessionCache.clearAll()
     val served = graft.ops.Lexical.searchText(spark, ldir, Seq("alpha"), 20)
       .collect().map(_.getLong(0)).toSet
     assert(!served.contains(4L), "lexical rebuild must not resurrect the takedown")
@@ -1732,18 +1732,9 @@ class OpsSpec extends AnyFunSuite with TempDirs {
       Similarity.ivfTopK(spark, sfDir).collect().toSeq,
       graft.ops.Bpe.bpeMerges(spark, sfDir).collect().toSeq,
       graft.ops.ScalePatterns.bloomCascadeRevenue(spark, sfDir).collect().toSeq)
-    graft.ops.Dedup.clearCaches()
-    graft.ops.NearDup.clearCaches()
-    graft.ops.Similarity.clearCaches()
-    graft.ops.TextAnalysis.clearCaches()
-    graft.ops.QualityModel.clearCaches()
-    graft.ops.Affinity.clearCaches()
-    graft.ops.Bpe.clearCaches()
-    graft.ops.ScalePatterns.clearCaches()
-    graft.ops.Multimodal.clearCaches()
-    graft.ops.SketchStreamGates.clearCaches()
-    graft.ops.Curation.clearCaches()
-    graft.engine.Conformal.clearCaches()
+    graft.core.SessionCache.clearAll()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "clearAll must release every persisted frame the session caches held")
     val after = (
       graft.ops.Dedup.dupClusters(spark, sfDir).collect().toSeq,
       graft.ops.Dedup.semanticDedup(spark, sfDir).collect().toSeq,
