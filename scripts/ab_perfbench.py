@@ -55,6 +55,11 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def spread(q):
+    """IQR over median; NaN for a metric whose median is 0 (e.g. spill bytes)."""
+    return (q[2] - q[0]) / q[1] if q[1] else float("nan")
+
+
 def metric(run, name):
     m = run.get("result", {}).get("metrics", {}).get(name)
     return None if m is None else m["value"]
@@ -93,8 +98,8 @@ def main():
         wins = sum(1 for b, c in pairs if (c < b if better == "lower" else c > b))
         bq, cq = quartiles(base), quartiles(change)
         rel = (cq[1] - bq[1]) / bq[1] if bq[1] else float("nan")
-        print(f"{name:34s} base {bq[0]:10.4g} {bq[1]:10.4g} {bq[2]:10.4g} (IQR/med {(bq[2] - bq[0]) / bq[1]:.3f})"
-              f" | change {cq[0]:10.4g} {cq[1]:10.4g} {cq[2]:10.4g} (IQR/med {(cq[2] - cq[0]) / cq[1]:.3f})"
+        print(f"{name:34s} base {bq[0]:10.4g} {bq[1]:10.4g} {bq[2]:10.4g} (IQR/med {spread(bq):.3f})"
+              f" | change {cq[0]:10.4g} {cq[1]:10.4g} {cq[2]:10.4g} (IQR/med {spread(cq):.3f})"
               f" | median {rel:+.1%} | change better {wins}/{len(pairs)} ({better} is better)")
 
     print(f"workload {args.workload}, seeds {args.seeds}, {args.seconds} s, trace {args.trace}")

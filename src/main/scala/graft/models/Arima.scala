@@ -20,10 +20,8 @@ import graft.core.{Forecasts, Methods, Stats}
   * stationary AR and invertible MA polynomials by construction, so the
   * forecast recursion and ψ-weight variance always converge.
   *
-  * Fit of ONE candidate is a single-task O(grid · NM-iters · n) loop; the
-  * engine also exposes the candidate grid as a Dataset fan-out
-  * (Forecaster.fitArimaGrid) so a 1000-executor cluster searches all
-  * candidates of all series concurrently.
+  * Fit of ONE candidate is a single-task O(grid · NM-iters · n) loop;
+  * the engine fits each series in one task (Forecaster.fitSeries).
   */
 object Arima {
 

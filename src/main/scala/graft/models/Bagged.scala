@@ -10,11 +10,9 @@ import graft.core.{Forecasts, Methods, Stats}
   * the replicate MIN/MAX, duplicated into both contract levels
   * (R:216-217).
   *
-  * The replicate set is the engine's showcase fan-out: `replicates()`
-  * emits (rep, series) pairs so the Spark layer spreads the N ETS fits
-  * across executors (SURVEY.md §7 step 6); `BaggedFamily.fit` is the
-  * single-task path used by the generic Engine wrapper. Both share the
-  * same seeded generator, so results are identical either way.
+  * `BaggedFamily.fit` runs the whole ensemble in one task, the one fit
+  * both the Engine wrapper and the batch path use; replicates come from
+  * a generator seeded by the series content, so refits repeat exactly.
   *
   * Cost control: the ETS model CLASS is selected once on the original
   * series; replicates re-optimize only that class's parameters. (R refits

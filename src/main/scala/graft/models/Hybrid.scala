@@ -16,9 +16,8 @@ import graft.core.{Forecasts, Methods}
   * (`horizonAverage = TRUE`, R:328).
   *
   * The reference forks exactly 2 OS processes for this (R:331-332 — its
-  * entire parallelism story); here each CV (component, fold) refit is an
-  * independent unit: the single-task path runs them in a loop, and the
-  * Spark layer can fan them out as a Dataset (SURVEY.md §3.2). CV refits
+  * entire parallelism story); here each series' CV (component, fold)
+  * refits run in a loop inside that series' task. CV refits
   * reuse the full fit's selected structure (ETS class / ARIMA order /
   * NN architecture) and re-optimize parameters only — the structure
   * search is done once, not once per fold.
@@ -101,11 +100,10 @@ object Hybrid {
     * cvHorizon steps, and errors pool across all (fold, horizon) cells
     * (`horizonAverage = TRUE`). With `windowSize = n − 2·cvHorizon` this
     * yields exactly cvHorizon + 1 folds regardless of series length. */
-  /** The shared fold plan: effective horizon h and the rolling origins
+  /** The fold plan: effective horizon h and the rolling origins
     * (`windowSize = n − 2·h`, one origin per observation, h + 1 folds).
-    * Empty origins ⇒ series too short for CV ⇒ callers fall back to
-    * equal weights. Used by both the local [[cvWeights]] and the
-    * distributed per-(series, component, fold) fan-out in Forecaster. */
+    * Empty origins ⇒ series too short for CV ⇒ [[cvWeights]] falls back
+    * to equal weights. */
   def cvPlan(n: Int, m: Int, cvHorizon: Int): (Int, Range) = {
     val h = math.max(1, math.min(cvHorizon, n / 4))
     val windowSize = n - 2 * h

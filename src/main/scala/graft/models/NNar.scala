@@ -273,82 +273,6 @@ object NNar {
       java.lang.Double.doubleToRawLongBits(m(6)))
   }
 
-  /** Architecture selection, separated so the Spark layer can fan the
-    * restarts out (Forecaster.forecastNNGrid). */
-  final case class Arch(p: Int, seasonalLag: Int, nHidden: Int)
-
-  def architecture(y: Array[Double], frequency: Int): Arch = {
-    val n = y.length
-    val mu = Stats.mean(y)
-    val sd = math.max(1e-8, Stats.stddevSamp(y))
-    val z = y.map(v => (v - mu) / sd)
-    val p = selectP(z, math.min(10, math.max(1, n / 4)))
-    val seasonalLag = if (frequency > 1 && n > 3 * frequency) frequency else 0
-    val bigP = if (seasonalLag > 0) 1 else 0
-    Arch(p, seasonalLag, math.max(1, math.round((p + bigP + 1) / 2.0).toInt))
-  }
-
-  private def lagMatrix(z: Array[Double], p: Int, seasonalLag: Int): (Array[Array[Double]], Array[Double]) = {
-    val n = z.length
-    val bigP = if (seasonalLag > 0) 1 else 0
-    val nIn = p + bigP
-    val maxLag = math.max(p, seasonalLag)
-    val rows = n - maxLag
-    val xs = new Array[Array[Double]](rows)
-    val ys = new Array[Double](rows)
-    var t = maxLag
-    while (t < n) {
-      val x = new Array[Double](nIn)
-      var i = 0
-      while (i < p) { x(i) = z(t - 1 - i); i += 1 }
-      if (bigP > 0) x(p) = z(t - seasonalLag)
-      xs(t - maxLag) = x
-      ys(t - maxLag) = z(t)
-      t += 1
-    }
-    (xs, ys)
-  }
-
-  /** Train ONE restart in isolation (per-restart seed derived from the
-    * series seed — restarts are order-independent so they parallelize). */
-  def trainOne(y: Array[Double], frequency: Int, p: Int, seasonalLag: Int, nHidden: Int,
-      restart: Int): Array[Double] = {
-    val mu = Stats.mean(y)
-    val sd = math.max(1e-8, Stats.stddevSamp(y))
-    val z = y.map(v => (v - mu) / sd)
-    val (xs, ys) = lagMatrix(z, p, seasonalLag)
-    val bigP = if (seasonalLag > 0) 1 else 0
-    val rng = new java.util.Random(Optim.seedOf(y) ^ (restart.toLong * 0x9e3779b97f4a7c15L))
-    train(xs, ys, p + bigP, nHidden, rng, AdamSteps).w
-  }
-
-  /** Reassemble the averaged ensemble from independently-trained weight
-    * vectors and compute the residual sd. */
-  def assemble(y: Array[Double], frequency: Int, p: Int, seasonalLag: Int, nHidden: Int,
-      nets: Array[Array[Double]]): NNModel = {
-    val n = y.length
-    val mu = Stats.mean(y)
-    val sd = math.max(1e-8, Stats.stddevSamp(y))
-    val z = y.map(v => (v - mu) / sd)
-    val (xs, _) = lagMatrix(z, p, seasonalLag)
-    val bigP = if (seasonalLag > 0) 1 else 0
-    val nIn = p + bigP
-    val maxLag = math.max(p, seasonalLag)
-    var sse = 0.0
-    var t = maxLag
-    while (t < n) {
-      var s = 0.0
-      var k = 0
-      while (k < nets.length) { s += new Net(nIn, nHidden, nets(k)).predict(xs(t - maxLag)); k += 1 }
-      val e = (z(t) - s / nets.length) * sd
-      sse += e * e
-      t += 1
-    }
-    val residSd = math.sqrt(sse / math.max(1, n - maxLag))
-    NNModel(p, seasonalLag, nHidden, mu, sd, residSd, nets,
-      Array.tabulate(maxLag)(i => z(n - 1 - i)), Optim.seedOf(y))
-  }
-
   object NNFamily extends ModelFamily {
     val method: String = Methods.NN
     def fit(y: Array[Double], frequency: Int): SeriesModel = {

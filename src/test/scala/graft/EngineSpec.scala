@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Methods
-import graft.engine.{Engine, Forecaster, KeyedStore, Names}
+import graft.engine.{Engine, Families, Forecaster, KeyedStore, Names}
 import graft.sources.SeriesStore
 
 /** The generic wrapper skeleton (R:104-124): 3-branch cache logic, warm
@@ -220,6 +220,58 @@ class EngineSpec extends AnyFunSuite with TempDirs {
       assert(rows.nonEmpty)
       assert(rows == out.orderBy("element", "step").collect().toSeq, s"$m: rows not in (element, step) order")
     }
+  }
+
+  /** A forecast row with its doubles as raw bits, for bit-exact equality. */
+  private def exact(r: Row): (String, String, Int, Seq[Long]) =
+    (r.getAs[String]("element"), r.getAs[String]("method"), r.getAs[Int]("step"),
+      Seq("lower1", "lower2", "mean", "upper1", "upper2")
+        .map(c => java.lang.Double.doubleToRawLongBits(r.getAs[Double](c))))
+
+  test("forecastStore equals Engine.forecast bit for bit for every method and element") {
+    // one fit path: a batch over the store returns what one request per
+    // element returns (branch (c), h = 14), bit for bit
+    val eng = new Engine(spark, tempDir("graft-engine-batch"))
+    val elements = SeriesStore.series(spark, sfDir).collect().map(_.element).toSeq.sorted
+    assert(elements.size >= 2)
+    val differing = Families.all.keys.toSeq.sorted.flatMap { m =>
+      val batch = Forecaster.forecastStore(spark, sfDir, m, 7, 14).collect().map(exact).toSeq
+      val single = elements.flatMap(e => eng.forecast(e, sfDir, m, 7, 14).collect().map(exact).sortBy(_._3))
+      if (batch == single) None
+      else Some(s"$m (${batch.size} vs ${single.size} rows, first difference " +
+        s"${batch.zipAll(single, null, null).find(p => p._1 != p._2)})")
+    }
+    assert(differing.isEmpty, s"batch and serving rows differ for: ${differing.mkString("; ")}")
+  }
+
+  test("forecastStore never drops a short series: every family forecasts a 6-point series") {
+    import spark.implicits._
+    val corpus = tempDir("graft-short-corpus")
+    val epoch0 = java.time.Instant.parse("2024-03-01T00:00:00Z")
+    val rows = (0 until 60).map(i => ("long", i, 20.0 + 3 * math.sin(i / 3.0) + i % 7)) ++
+      (0 until 6).map(i => ("short", i, 5.0 + i % 3))
+    rows.zipWithIndex.map { case ((element, day, v), id) =>
+      (id.toLong, java.sql.Timestamp.from(epoch0.plusSeconds(day * 86400L)), v, element)
+    }.toDF("event_id", "ts", "value", "event_type")
+      .selectExpr("event_id", "ts", "CAST(NULL AS BIGINT) AS user_id", "event_type", "value", "'{}' AS props")
+      .write.parquet(s"$corpus/events.parquet")
+    val short = Families.all.keys.toSeq.sorted.flatMap { m =>
+      val counts = Forecaster.forecastStore(spark, corpus, m, 7, 14).collect()
+        .groupBy(_.getAs[String]("element")).map { case (e, rs) => e -> rs.length }
+      if (counts == Map("long" -> 14, "short" -> 14)) None else Some(s"$m: $counts")
+    }
+    assert(short.isEmpty, s"rows per element: ${short.mkString("; ")}")
+  }
+
+  test("a first request beyond the cache length publishes one cache generation") {
+    val base = tempDir("graft-engine-one-publish")
+    val eng = new Engine(spark, base)
+    val name = "purchase"
+    val idx = eng.indexName(sfDir)
+    assert(eng.forecast(name, sfDir, Methods.SES, 7, 21).collect().length == 21)
+    val entries = new java.io.File(s"$base/forecastsCache/${Names.key(name, idx, Methods.SES)}").list().toSeq
+    assert(entries.count(_.startsWith("g-")) == 1, s"cache generations: ${entries.mkString(",")}")
+    assert(new Engine(spark, base).cache.isValid(name, idx, Methods.SES, 21))
   }
 
   test("concurrent hits during repeated re-saves each see one complete generation") {

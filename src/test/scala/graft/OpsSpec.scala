@@ -3081,21 +3081,6 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     assert(bi <= uni, s"bigram pairs ($bi) should not exceed unigram pairs ($uni)")
   }
 
-  test("hybrid grid fan-out matches the single-task fit (weights and points)") {
-    import spark.implicits._
-    val ser = graft.sources.SeriesStore.series(spark, sfDir, Seq("purchase"))
-    val grid = graft.engine.Forecaster
-      .forecastHybrid(spark, ser, frequency = 7, horizon = 8, cvHorizon = 8)
-      .collect().sortBy(_.step)
-    val y = ser.collect().head.values
-    val single = graft.models.Hybrid.HybridFamily.fitCv(y, 7, cvHorizon = 8).forecast(8)
-    assert(grid.length == 8)
-    grid.zipWithIndex.foreach { case (p, j) =>
-      assert(math.abs(p.mean - single.mean(j)) < 1e-9,
-        s"grid vs single-task point at step ${j + 1}: ${p.mean} vs ${single.mean(j)}")
-    }
-  }
-
   test("session windows: event exactly one gap later MERGES (inclusive window end)") {
     // pins the oracle's break predicate (diff > gap splits; diff == gap
     // merges): u1: 0us and 1000us merge, and 1000us + gap lands exactly
